@@ -953,49 +953,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_pivot_report(spark, "/root/testdata/sf0.001")
 
 
-# Round 1 showed the driver checks at most the first 50 registry
-# entries, so (a) the registry is kept at exactly 50 queries (redundant
-# shapes merged into tagged suites) and (b) iteration order leads with
-# the entries that most need fresh driver evidence: previously
-# unchecked, new, or changed this round.
-_PRIORITY = [
-    # round-5 promotions / reshapes first: new rows, merged suites,
-    # and the queries whose plans changed this round
-    "sketch_suite",       # NEW: §2.4 sketches + exact anchors + contract bools
-    "monitor_suite",      # histogram_drift + top_ngrams merged (funds the slot)
-    "corpus_filters",     # + quality_z/model_keep + bloom_* columns
-    "expand_json",        # regexp scalar fast path (perf, r4 directive)
-    # round-4 promotions still leading the evidence queue
-    "embedding_dedup_suite",
-    "snapshot_diff",
-    "text_neardup_suite",     # ngram_jaccard + minhash_lsh merged
-    "incremental_dedup",
-    "flag_join_suite",    # semi_anti_join + exists_flag_join merged
-    "conditional_agg",    # conditional_counts + pivot_wide merged
-    "unit_conversion",    # + is_valid col (absorbed validation_split)
-    "url_filters",
-    "passage_dedup",
-    "sequence_pack",
-    "sampling_suite",
-    "fuzzy_join",
-    "substring_dedup",    # round-4 stretch: exact-substring dedup
-    "dedup_fingerprints", # dedup_exact + dedup_simhash merged
-    "ann_suite",          # + hamming branch (cosine -> score)
-    "time_windows",       # + session branch (event_type -> grp)
-    "notes_suite",        # json_note_pack + notes_membership merged
-    "pricing_summary",
-    "corpus_chunking",
-    "dedup_clusters",
-    "text_quality",
-]
-
-
-def _ordered(merged: dict) -> dict:
-    out = {k: merged[k] for k in _PRIORITY if k in merged}
-    out.update({k: v for k, v in merged.items() if k not in out})
-    return out
-
-
 # Prepared-plan cache: a returned DataFrame is an immutable LAZY plan,
 # so rebuilding it per invocation only re-pays driver-side py4j
 # expression construction + analysis (measured ~1s for the big suite
@@ -1065,7 +1022,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out.update(windows.QUERIES)
     out.update(extended.QUERIES)
     out.update(pipeline_ops.QUERIES)
-    return {k: _plan_cached(k, v) for k, v in _ordered(out).items()}
+    return {k: _plan_cached(k, v) for k, v in out.items()}
 
 
 def oracle_sql() -> dict[str, str]:
@@ -1081,4 +1038,4 @@ def oracle_sql() -> dict[str, str]:
     out.update(windows.ORACLES)
     out.update(extended.ORACLES)
     out.update(pipeline_ops.ORACLES)
-    return _ordered(out)
+    return out

@@ -4,22 +4,21 @@ The reference keeps an ``ingredient_submitted_status`` Postgres table
 with ``unique_transaction_id UNIQUE`` and writes via
 ``INSERT ... ON CONFLICT DO UPDATE`` (jde_helper.py:1006-1012,
 dag_bakery_system_to_jde.py:383-423). The Spark-native equivalent is
-Delta ``MERGE INTO``; this environment has no Delta, so the same
-MERGE semantics are implemented over plain parquet behind a
-COMPARE-AND-SWAPPED LogStore pointer flip — a second concurrent
-dispatcher loses LOUDLY (``PointerConflict``) instead of silently
-clobbering the first one's rows, the engine-side equivalent of the
-reference's ``UNIQUE`` constraint. Above ``versioned_threshold_rows``
-the ledger hands off to ``sources/versioned.py``'s transaction-log
-table (file-level partial-rewrite MERGE, time travel, optimistic
-multi-writer detection). Swap to Delta in prod:
+Delta ``MERGE INTO``; this environment has no Delta, so the ledger is
+a keyed upsert over ``sources/versioned.py``'s transaction-log table
+(file-level partial-rewrite MERGE, optimistic multi-writer detection):
+a concurrent dispatcher whose MERGE overlaps another's loses LOUDLY
+(``PointerConflict``) instead of silently clobbering its rows — the
+engine-side equivalent of the reference's ``UNIQUE`` constraint. Swap
+to Delta in prod:
 
     DeltaTable.forPath(spark, path).alias("l").merge(
         updates.alias("u"), "l.key = u.key"
     ).whenMatchedUpdateAll().whenNotMatchedInsertAll().execute()
 
-Scale: the MERGE join is keyed on the idempotency key (uniform hash);
-the updates side is one micro-batch — broadcast against the ledger.
+Scale: each MERGE rewrites only the ledger files whose footer
+key-range intersects the batch, and ``pending_only`` probes only those
+files — O(batch) per tick on a key-clustered ledger.
 """
 
 from __future__ import annotations
@@ -29,168 +28,134 @@ from pyspark.sql import functions as F
 
 
 class IdempotencyLedger:
-    """Parquet-backed keyed upsert ledger with MERGE semantics.
+    """Keyed upsert ledger with MERGE semantics over one
+    :class:`~jde_to_datalake_spark.sources.versioned.VersionedTable`
+    at ``<path>/_versioned``.
 
-    The rewrite publish is a POINTER FLIP through the LogStore seam
-    (``store`` injects an object-store impl; default POSIX under
-    ``<path>/_log``; ``payload_store`` injects the payload plane —
-    data-dir listing, retention mtimes, reaping, footer reads — the
-    same way, so the whole ledger lives on a bucket end-to-end): each
-    merge writes the new ledger parquet under a
-    fresh unique dir — no rename on the data plane — then atomically
-    publishes a pointer record at it, so readers see the old ledger or
-    the new one, never a mix.
+    ``store`` injects the record plane (default POSIX under
+    ``<path>/_log``) and ``payload_store`` the payload plane; the
+    table's commit log is derived from the first
+    (``LogStore.for_child``) and its data files from the second
+    (``PayloadStore.data_file_store``), so the whole ledger lives in
+    one storage domain — on a bucket end-to-end when both are S3.
 
-    Concurrency: the flip is COMPARE-AND-SWAPPED on the pointer
-    version this merge READ the ledger at, so a second concurrent
-    dispatcher cannot silently clobber the first one's rows — the
-    failure mode the reference's Postgres ``UNIQUE`` constraint +
-    ``ON CONFLICT`` made impossible (dag_bakery_system_to_jde.py:38-59,
-    jde_helper.py:1006-1012). The loser raises
+    Concurrency rides the table's optimistic concurrency: key-disjoint
+    concurrent merges may both commit; a merge that overlaps an
+    intervening commit raises
     :class:`~jde_to_datalake_spark.sources.log_store.PointerConflict`
-    LOUDLY by default (``conflict_retries=0``): its updates are NOT in
-    the ledger and it must re-drive the batch (its payload dir is an
-    unreferenced orphan ``clean_stale`` reclaims). Passing
-    ``conflict_retries=N`` opts into automatic re-derivation — the
-    merge re-reads the NEW current ledger and re-applies its updates
-    on top, which is exactly the serialized ON-CONFLICT-DO-UPDATE
-    outcome (keyed upsert re-resolved against the fresher base), so a
-    retry loses neither writer's rows.
+    by default (``conflict_retries=0``) — its updates are NOT in the
+    ledger and it must re-drive the batch. ``conflict_retries=N``
+    re-runs the merge against the fresher snapshot, the serialized
+    ON-CONFLICT-DO-UPDATE outcome, so a retry loses neither writer's
+    rows.
 
-    Scale: the pointer backend rewrites the WHOLE ledger parquet per
-    merge — O(ledger) a batch, fine at the reference's cadence
-    (hundreds of transactions a day) but wrong once the ledger's
-    cardinality outgrows a micro-batch by orders of magnitude. Above
-    ``versioned_threshold_rows`` the ledger hands itself off to the
-    engine's own :class:`~jde_to_datalake_spark.sources.versioned.
-    VersionedTable` (the keyed PARTIAL-rewrite MERGE: only files whose
-    footer key-range intersects the batch are rewritten — O(batch)
-    per merge on a key-clustered table), published as one CAS'd
-    handoff record so the switch itself can never lose a concurrent
-    writer's rows. Post-handoff, conflicts surface through the
-    versioned table's optimistic-concurrency machinery and are
-    re-raised as ``PointerConflict`` for one uniform caller contract;
-    ``conflict_retries`` maps onto its snapshot-re-derivation retry.
+    Ledgers written before the versioned table was the only backend
+    keep their rows in a pointer-flipped parquet dir named by the
+    ``_log`` record; such a ledger refuses every call until
+    :meth:`migrate_to_versioned` converts it. The root ``_log`` is
+    checked once per instance, on first use.
     """
 
-    #: where the versioned backend lives under the ledger root —
-    #: underscore-prefixed so no data-dir sweep ever touches it
+    #: where the table lives under the ledger root — underscore-
+    #: prefixed so no data-dir sweep ever touches it
     VERSIONED_DIR = "_versioned"
 
     #: pending_only collects at most this many distinct batch keys to
-    #: drive the versioned backend's file-pruned probe; a larger batch
-    #: falls back to the full-ledger anti-join (the probe's point is
-    #: micro-batch ≪ ledger, so past this size the full scan wins)
+    #: drive the file-pruned probe; a larger batch falls back to the
+    #: full-ledger anti-join (the probe's point is micro-batch ≪
+    #: ledger, so past this size the full scan wins)
     PROBE_MAX_KEYS = 10_000
+
+    #: the root ``_log`` record that marks a converted pointer ledger
+    _HANDOFF = {"backend": "versioned", "table_dir": VERSIONED_DIR}
 
     def __init__(
         self,
         path: str,
         key: str = "unique_transaction_id",
         store=None,
-        versioned_threshold_rows: "int | None" = None,
-        versioned_store=None,
         payload_store=None,
     ):
         from jde_to_datalake_spark.sources.log_store import (
             DataDirPointer,
             PosixLogStore,
         )
+        from jde_to_datalake_spark.sources.versioned import VersionedTable
 
         self.path = path
         self.key = key
-        self.versioned_threshold_rows = versioned_threshold_rows
-        self._versioned_store = versioned_store
         self._ptr = DataDirPointer(
             path, store or PosixLogStore(path), payloads=payload_store
         )
-
-    # -- backend routing ---------------------------------------------------
-    def _vt(self):
-        from jde_to_datalake_spark.sources.versioned import VersionedTable
-
-        store = self._versioned_store
-        if store is None:
-            # derive the backend's commit log in the SAME storage
-            # domain as the ledger's own pointer store — defaulting to
-            # local disk when the pointer lives in an object store
-            # would split the ledger across domains (another host's
-            # dispatcher would see the handoff record but an empty
-            # table)
-            store = self._ptr.store.for_child(self.VERSIONED_DIR)
-        # the table's data files live in the same storage domain as
-        # the ledger's payload plane: path_of resolves through the
-        # injected PayloadStore (an s3a:// URI on a bucket deployment)
-        # and the table's driver-side data-file operations — staged
-        # adoption, footer reads, vacuum — go through the matching
-        # DataFileStore, so BOTH planes of the backend live on the
-        # bucket, not just its commit log
-        return VersionedTable(
+        self._vt = VersionedTable(
             self._ptr.path_of(self.VERSIONED_DIR),
-            log_store=store,
+            log_store=self._ptr.store.for_child(self.VERSIONED_DIR),
             data_store=self._ptr.payloads.data_file_store(
                 self.VERSIONED_DIR
             ),
         )
+        self._layout_checked = False
 
-    @staticmethod
-    def _is_handoff(rec: "dict | None") -> bool:
-        return rec is not None and rec.get("backend") == "versioned"
-
-    def backend(self) -> str:
-        """'pointer' (parquet-swap) or 'versioned' (post-handoff)."""
-        _, rec = self._ptr.latest()
-        return "versioned" if self._is_handoff(rec) else "pointer"
+    def _table(self):
+        """The table, after the one-time legacy-layout check: a
+        silently-empty ledger would re-dispatch every transaction an
+        old ledger had marked done."""
+        if not self._layout_checked:
+            _, rec = self._ptr.latest()
+            if rec is None:
+                self._ptr.require_migrated("idempotency ledger")
+            elif "data_dir" in rec:
+                raise RuntimeError(
+                    f"{self.path}: unconverted pointer-backed "
+                    "idempotency ledger (its _log points at "
+                    f"{rec['data_dir']}). Refusing to treat existing "
+                    "data as empty — run migrate_to_versioned(spark) "
+                    "once to convert it."
+                )
+            self._layout_checked = True
+        return self._vt
 
     def exists(self) -> bool:
-        self._ptr.require_migrated("idempotency ledger")
-        _, rec = self._ptr.latest()
-        return rec is not None
+        return self._table().latest_version() is not None
 
     def load(self, spark: SparkSession) -> DataFrame | None:
-        self._ptr.require_migrated("idempotency ledger")
-        _, rec = self._ptr.latest()
-        if rec is None:
+        vt = self._table()
+        v = vt.latest_version()
+        if v is None:
             return None
-        if self._is_handoff(rec):
-            # merge_schema: ledger merges evolve the schema (e.g.
-            # mark_done introducing status_text) and untouched files
-            # keep their written schema until rewritten
-            return self._vt().read(spark, merge_schema=True)
-        return spark.read.parquet(self._ptr.path_of(rec["data_dir"]))
+        # merge_schema: ledger merges evolve the schema (e.g. mark_done
+        # introducing status_text) and untouched files keep their
+        # written schema until rewritten
+        return vt.read(spark, version=v, merge_schema=True)
 
     def pending_only(self, spark: SparkSession, batch: DataFrame) -> DataFrame:
         """J6: drop rows already marked done (MUST precede side effects).
 
-        On the post-handoff versioned backend the done-probe is
-        FILE-PRUNED: the batch's distinct keys (bounded by
-        ``PROBE_MAX_KEYS`` — a micro-batch, not a table) drive
-        ``read_where_in``, which plans over only the ledger files
+        The done-probe is FILE-PRUNED: the batch's distinct keys
+        (bounded by ``PROBE_MAX_KEYS`` — a micro-batch, not a table)
+        drive ``read_where_in``, which plans over only the ledger files
         whose footer key-range can contain them — O(batch-intersecting
-        files) per probe on a key-clustered ledger instead of
-        O(ledger) scan. Batches past the bound fall back to the full
-        read + anti-join (at that size the full scan is the cheaper
-        plan anyway)."""
-        self._ptr.require_migrated("idempotency ledger")
-        _, rec = self._ptr.latest()
-        if rec is None:
+        files) per probe on a key-clustered ledger instead of O(ledger)
+        scan. Batches past the bound fall back to the full read +
+        anti-join (at that size the full scan is the cheaper plan
+        anyway)."""
+        vt = self._table()
+        v = vt.latest_version()
+        if v is None:
             return batch
-        if self._is_handoff(rec):
-            keys = [
-                r[0]
-                for r in batch.select(self.key)
-                .distinct()
-                .limit(self.PROBE_MAX_KEYS + 1)
-                .collect()
-            ]
-            if len(keys) <= self.PROBE_MAX_KEYS:
-                ledger = self._vt().read_where_in(
-                    spark, self.key, keys, merge_schema=True
-                )
-            else:
-                ledger = self._vt().read(spark, merge_schema=True)
+        keys = [
+            r[0]
+            for r in batch.select(self.key)
+            .distinct()
+            .limit(self.PROBE_MAX_KEYS + 1)
+            .collect()
+        ]
+        if len(keys) <= self.PROBE_MAX_KEYS:
+            ledger = vt.read_where_in(
+                spark, self.key, keys, version=v, merge_schema=True
+            )
         else:
-            ledger = spark.read.parquet(self._ptr.path_of(rec["data_dir"]))
+            ledger = vt.read(spark, version=v, merge_schema=True)
         done = ledger.filter(F.col("status") == "done").select(self.key)
         return batch.join(done, self.key, "left_anti")
 
@@ -209,20 +174,14 @@ class IdempotencyLedger:
         deterministic under any partitioning, unlike dropDuplicates'
         keep-whichever-arrives-first).
 
-        The publish is CAS-anchored on the ledger version this merge
-        read (class docstring): a concurrent merge makes the loser
-        raise ``PointerConflict`` (default) or, with
-        ``conflict_retries=N``, re-read and re-apply on the fresher
-        base up to N times — correct because a keyed upsert re-derived
-        against the new current ledger is the serialized outcome. On
-        the versioned backend the same contract rides the table's own
-        optimistic concurrency (snapshot-pinned publish + merge
-        retries), surfaced as ``PointerConflict``.
+        A merge that loses an overlapping race raises
+        ``PointerConflict`` (default) or, with ``conflict_retries=N``,
+        re-runs against the fresher snapshot up to N times (class
+        docstring).
         """
         from pyspark.sql import Window
 
         from jde_to_datalake_spark.functions.scalars import stable_row_hash
-        from jde_to_datalake_spark.sources.log_store import PointerConflict
 
         order = [stable_row_hash(updates).asc()]
         if "updated_at" in updates.columns:
@@ -233,127 +192,46 @@ class IdempotencyLedger:
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        self._ptr.require_migrated("idempotency ledger")
-        for attempt in range(conflict_retries + 1):
-            base, rec = self._ptr.latest()
-            if self._is_handoff(rec):
-                self._vt_merge(spark, updates, conflict_retries)
-                return
-            current = (
-                None
-                if rec is None
-                else spark.read.parquet(self._ptr.path_of(rec["data_dir"]))
-            )
-            if current is None:
-                merged = updates
-            else:
-                merged = updates.unionByName(
-                    current.join(
-                        updates.select(self.key), self.key, "left_anti"
-                    ),
-                    allowMissingColumns=True,
-                )
-            try:
-                # the threshold check reads the CURRENT payload's
-                # parquet footers (metadata-only, no Spark action,
-                # served by the payload store on any deployment) — so
-                # the handoff fires on the first merge AFTER the
-                # ledger has reached the threshold, costing zero extra
-                # passes over the data on every merge before it. A
-                # transient payload-store fault (throttle past its
-                # bounded retries) only DEFERS the handoff to the next
-                # merge — the threshold is an optimization trigger,
-                # never a correctness gate, and the flip right after
-                # would surface a genuinely broken store loudly.
-                if rec is None or self.versioned_threshold_rows is None:
-                    rows = -1
-                else:
-                    try:
-                        rows = self._ptr.payload_row_count(rec["data_dir"])
-                    except Exception:  # noqa: BLE001 — defer, see above
-                        rows = -1
-                if (
-                    self.versioned_threshold_rows is not None
-                    and rows >= self.versioned_threshold_rows
-                ):
-                    self._handoff(spark, merged, base)
-                else:
-                    self._ptr.flip(
-                        lambda p: merged.write.mode("overwrite").parquet(p),
-                        expected=base,
-                    )
-                return
-            except PointerConflict:
-                if attempt == conflict_retries:
-                    raise
+        self._upsert(self._table(), spark, updates, conflict_retries)
 
-    def _vt_merge(self, spark, updates: DataFrame, conflict_retries: int):
-        """Post-handoff merge: the versioned table's file-level keyed
-        MERGE (O(batch) rewrite), with its optimistic-conflict loss
-        surfaced under the ledger's uniform ``PointerConflict``."""
+    def _upsert(self, vt, spark, rows: DataFrame, retries: int) -> None:
+        """The table's keyed MERGE, its lost optimistic race surfaced
+        as the ledger's uniform ``PointerConflict``."""
         from jde_to_datalake_spark.sources.log_store import PointerConflict
         from jde_to_datalake_spark.sources.versioned import (
             ConcurrentCommitError,
         )
 
         try:
-            self._vt().merge(
-                spark, updates, key=self.key, retries=conflict_retries
-            )
+            vt.merge(spark, rows, key=self.key, retries=retries)
         except ConcurrentCommitError as e:
             raise PointerConflict(
-                f"{self.path}: versioned-ledger merge lost its "
-                "optimistic race and exhausted conflict_retries — "
-                "the updates are NOT in the ledger; re-drive the batch"
+                f"{self.path}: ledger merge lost its optimistic race "
+                "and exhausted its retries — the updates are NOT in "
+                "the ledger; re-drive the batch"
             ) from e
-
-    def _handoff(self, spark, merged: DataFrame, base: "int | None") -> None:
-        """One-time pointer→versioned migration, safe under concurrent
-        writers: the full merged state is UPSERTED into the versioned
-        table first (a second concurrent migrator's upsert serializes
-        after ours in the table's own log, so both writers' rows
-        land), then ONE CAS'd handoff record makes the table current.
-        A lost handoff CAS against another VERSIONED record is a
-        success (our upsert already landed in the shared table); a
-        lost CAS against an intervening POINTER flip re-derives
-        through the caller's retry loop (our table rows are a stale
-        superset-safe snapshot the next migration upsert refreshes —
-        ledger keys are never deleted, so re-upserting the fresher
-        merged state leaves the table exactly equal to it)."""
-        from jde_to_datalake_spark.sources.log_store import PointerConflict
-        from jde_to_datalake_spark.sources.versioned import (
-            ConcurrentCommitError,
-        )
-
-        vt = self._vt()
-        try:
-            vt.merge(spark, merged, key=self.key, retries=5)
-        except ConcurrentCommitError as e:
-            raise PointerConflict(
-                f"{self.path}: ledger handoff upsert exhausted its "
-                "retries under contention"
-            ) from e
-        # the handoff record goes through the same audited CAS publish
-        # as every flip; ANY versioned record at the contested version
-        # counts as ours — a concurrent migrator's upsert serialized
-        # with ours in the shared table, so both writers' rows are in
-        handoff = {"backend": "versioned", "table_dir": self.VERSIONED_DIR}
-        self._ptr.publish_record(handoff, base, is_ours=self._is_handoff)
 
     def migrate_to_versioned(self, spark: SparkSession) -> None:
-        """Operator-initiated handoff (the threshold path, minus the
-        threshold): upsert the current ledger into the versioned
-        backend and CAS-publish the handoff record. No-op when
-        already versioned; raises ``PointerConflict`` on a lost race
-        (re-invoke)."""
-        self._ptr.require_migrated("idempotency ledger")
+        """Convert a pointer-backed ledger: upsert the pointer's current
+        payload into the table, then CAS-publish the handoff marker on
+        the root ``_log``. The upsert goes FIRST: a concurrent
+        migrator's upsert serializes with ours in the table's own log,
+        so any versioned marker at the contested version counts as
+        ours. No-op on a ledger with no pointer or one already
+        converted. A pointer flip landing before the marker raises
+        ``PointerConflict``; invoking again re-upserts the fresher
+        payload (keyed, so no duplicates) and converges."""
         base, rec = self._ptr.latest()
-        if self._is_handoff(rec):
+        if rec is None or "data_dir" not in rec:
             return
-        current = self.load(spark)
-        if current is None:
-            raise ValueError(f"{self.path}: nothing to migrate (empty)")
-        self._handoff(spark, current, base)
+        current = spark.read.parquet(self._ptr.path_of(rec["data_dir"]))
+        # straight to the table: every other call refuses this layout
+        self._upsert(self._vt, spark, current, retries=5)
+        self._ptr.publish_record(
+            self._HANDOFF,
+            base,
+            is_ours=lambda landed: landed.get("backend") == "versioned",
+        )
 
     def mark_done(
         self,
@@ -372,8 +250,7 @@ class IdempotencyLedger:
         self.merge(spark, updates, conflict_retries=conflict_retries)
 
     def clean_stale(self, retention_seconds: float = 3600.0) -> list:
-        """Reclaim unreferenced data dirs — ledgers superseded by later
-        merges (left for lazy readers) and orphans of crashed or
-        CAS-losing merges — older than the retention window; the
-        current ledger is never touched."""
+        """Reclaim a converted ledger's ``data-*`` dirs — the pointer
+        payloads the handoff marker superseded, and orphans of writers
+        that died mid-flip — older than the retention window."""
         return self._ptr.clean_stale(retention_seconds)

@@ -54,9 +54,9 @@ semantics (hard links, rename atomicity, directory listing).
 
 :class:`PointerSlot` (write-once single record: the ingest app
 nonce, the training-shard manifest) and :class:`DataDirPointer`
-(compare-and-swapped mutable pointer: the watermark and
-idempotency-ledger data dirs; the schema registry appends to a
-record log directly) are the sibling primitives for the engine's
+(compare-and-swapped mutable pointer: the watermark's data dirs
+and the idempotency ledger's conversion marker; the schema
+registry appends to a record log directly) are the sibling primitives for the engine's
 OTHER atomic-publish points. Each of those used to hand-roll its
 own POSIX ``os.link`` / ``os.rename``; routing them through the
 seam means the whole engine's exactly-once publishes — not just
@@ -76,8 +76,8 @@ clean append.
 
 :class:`PayloadStore` (round 12) is the PAYLOAD-plane sibling of
 this record-plane seam: the pointer's directory-shaped payloads —
-listing with mtimes for retention, prefix reaping, legacy detection,
-parquet-footer reads — behind the same two implementations
+listing with mtimes for retention, prefix reaping, legacy detection
+— behind the same two implementations
 (:class:`PosixPayloadStore`, :class:`S3PayloadStore`). With both
 planes injected, the watermark and the idempotency ledger run
 end-to-end against an object store with no ``os.*`` in the control
@@ -92,9 +92,8 @@ compaction's size gate, vacuum's listing/retention/reaping — behind
 :class:`S3DataFileStore` (ListObjectsV2 + LastModified/Size,
 server-side CopyObject, DeleteObject, GetObject footers). With all
 three seams injected a versioned table — and the idempotency
-ledger's post-handoff backend via
-:meth:`PayloadStore.data_file_store` — runs its full lifecycle on a
-bucket (tests/test_versioned_object_store.py).
+ledger's table via :meth:`PayloadStore.data_file_store` — runs its
+full lifecycle on a bucket (tests/test_versioned_object_store.py).
 """
 
 from __future__ import annotations
@@ -518,9 +517,9 @@ def _s3_retry_call(client, op: str, max_retries: int, sleep: float, **kw):
 class PayloadStore:
     """The payload-plane contract beside :class:`LogStore`'s record
     plane: what :class:`DataDirPointer` needs from wherever its
-    directory-shaped payloads (the watermark's single-row parquet, the
-    idempotency ledger's table) actually live. Exactly the surface
-    SCALE.md's "Object-store data plane" mapping describes —
+    directory-shaped payloads (the watermark's single-row parquet, an
+    unconverted idempotency ledger's parquet) actually live. Exactly
+    the surface SCALE.md's "Object-store data plane" mapping describes —
 
     - ``uri(name)`` — the location handed to Spark for reading or
       writing one payload dir (a POSIX path, an ``s3a://`` URI, …).
@@ -531,13 +530,10 @@ class PayloadStore:
     - ``root_files()`` — loose file names directly under the root
       (the pre-pointer legacy-layout detection).
     - ``delete_dir(name)`` — recursive reap of one payload dir.
-    - ``parquet_files(name)`` / ``open_file(name, f)`` — enumerate and
-      read a payload's parquet members, for footer-level metadata
-      (the ledger's threshold row count) without a Spark job.
 
     With both planes behind seams, the ledger and the watermark run
     end-to-end on an object store: records via :class:`LogStore`,
-    payload listing/retention/reaping/footers via this contract, and
+    payload listing/retention/reaping via this contract, and
     the payload BYTES via whatever filesystem Spark's own connector
     mounts at ``uri()`` (s3a on a real cluster)."""
 
@@ -553,28 +549,10 @@ class PayloadStore:
     def delete_dir(self, name: str) -> None:
         raise NotImplementedError
 
-    def parquet_files(self, name: str) -> "list[str]":
-        raise NotImplementedError
-
-    def open_file(self, name: str, filename: str):
-        raise NotImplementedError
-
-    def parquet_row_count(self, name: str) -> int:
-        """Row count of one payload dir from parquet FOOTERS —
-        metadata-speed, no Spark job. Shared across implementations:
-        each footer read is one ``open_file``."""
-        import pyarrow.parquet as pq
-
-        total = 0
-        for f in self.parquet_files(name):
-            with self.open_file(name, f) as fh:
-                total += pq.ParquetFile(fh).metadata.num_rows
-        return total
-
     def data_file_store(self, name: str) -> "DataFileStore":
         """A :class:`DataFileStore` rooted at one payload dir — what a
         :class:`VersionedTable` living INSIDE the payload plane (the
-        idempotency ledger's post-handoff backend) injects so its
+        idempotency ledger's table) injects so its
         data-file operations stay in the same storage domain as the
         pointer that references it."""
         raise NotImplementedError
@@ -636,19 +614,6 @@ class PosixPayloadStore(PayloadStore):
 
         shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
 
-    def parquet_files(self, name: str) -> "list[str]":
-        try:
-            return sorted(
-                f
-                for f in os.listdir(os.path.join(self.root, name))
-                if f.endswith(".parquet")
-            )
-        except OSError:
-            return []
-
-    def open_file(self, name: str, filename: str):
-        return open(os.path.join(self.root, name, filename), "rb")
-
     def data_file_store(self, name: str) -> "PosixDataFileStore":
         return PosixDataFileStore(os.path.join(self.root, name))
 
@@ -656,7 +621,7 @@ class PosixPayloadStore(PayloadStore):
 class S3PayloadStore(PayloadStore):
     """Object-store payload plane over the same duck-typed boto3
     surface as :class:`S3ObjectLogStore` (``list_objects_v2`` with
-    ``LastModified``, ``delete_object``, ``get_object``), sharing its
+    ``LastModified``, ``delete_object``), sharing its
     bounded throttle-retry discipline. ``uri_base`` defaults to the
     ``s3a://`` mount a Spark cluster reads/writes the same keys
     through; tests pass the fake bucket's local backing path so Spark
@@ -669,11 +634,7 @@ class S3PayloadStore(PayloadStore):
     that created no objects left nothing to reclaim. ``delete_dir``
     deletes every object under the prefix — partial failure leaves a
     re-listable remainder the next sweep retries (the reap is
-    advisory by contract). ``parquet_row_count`` fetches whole
-    objects to read footers: it backs the ledger's handoff threshold,
-    which by definition only runs while the ledger is still BELOW the
-    threshold — bounded small reads, after which the versioned
-    backend's own footer stats take over."""
+    advisory by contract)."""
 
     MAX_RETRIES: int = 5
     RETRY_SLEEP: float = 0.05
@@ -746,27 +707,6 @@ class S3PayloadStore(PayloadStore):
                 Bucket=self.bucket,
                 Key=key,
             )
-
-    def parquet_files(self, name: str) -> "list[str]":
-        base = f"{self.prefix}/{name}/"
-        return sorted(
-            key[len(base):]
-            for key, _ in self._list(base)
-            if key.endswith(".parquet") and "/" not in key[len(base):]
-        )
-
-    def open_file(self, name: str, filename: str):
-        import io
-
-        resp = _s3_retry_call(
-            self.client,
-            "get_object",
-            self.MAX_RETRIES,
-            self.RETRY_SLEEP,
-            Bucket=self.bucket,
-            Key=f"{self.prefix}/{name}/{filename}",
-        )
-        return io.BytesIO(resp["Body"].read())
 
     def data_file_store(self, name: str) -> "S3DataFileStore":
         return S3DataFileStore(
@@ -1197,7 +1137,8 @@ class PointerSlot:
 
 class DataDirPointer:
     """Pointer-flip publish for directory-shaped payloads (the
-    watermark's single-row parquet, the idempotency ledger's table):
+    watermark's single-row parquet, an unconverted idempotency
+    ledger's parquet):
     ``flip(write_fn)`` writes the new payload under a fresh unique
     ``data-<uuid>`` dir (write-direct-to-final-name — no rename on
     the data plane), then atomically publishes a pointer record at
@@ -1297,11 +1238,6 @@ class DataDirPointer:
         """The Spark-readable/writable location of one payload dir."""
         return self.payloads.uri(name)
 
-    def payload_row_count(self, name: str) -> int:
-        """Row count of one payload dir from parquet footers —
-        metadata-speed (no Spark job), on any payload store."""
-        return self.payloads.parquet_row_count(name)
-
     def require_migrated(self, what: str) -> None:
         if self.latest()[0] is not None:
             return
@@ -1328,9 +1264,10 @@ class DataDirPointer:
         ``expected`` anchors the swap: the pointer version this
         writer's read state came from (``latest()[0]``; ``None`` for
         "no pointer yet"). Passing it is what makes read-modify-write
-        callers (the ledger's MERGE) serializable — a flip that lands
-        after an intervening publish raises :class:`PointerConflict`
-        instead of silently discarding the intervening writer's rows.
+        callers (the watermark's advance) serializable — a flip that
+        lands after an intervening publish raises
+        :class:`PointerConflict` instead of silently discarding the
+        intervening writer's state.
         Left unanchored, the flip snapshots latest itself (correct
         only for payloads that don't derive from the previous one).
         """

@@ -839,23 +839,29 @@ def test_payload_uri_roundtrip_and_dirs(payloads):
 
     assert all(abs(time.time() - m) < 300 for m in dirs.values())
     assert payloads.root_files() == ["loose.parquet"]
-    assert payloads.parquet_files("data-a") == ["p0.parquet", "p1.parquet"]
-    assert payloads.parquet_row_count("data-a") == 7
-    assert payloads.parquet_row_count("data-b") == 2
-    assert payloads.parquet_row_count("data-missing") == 0
     payloads.delete_dir("data-a")
     assert set(payloads.payload_dirs()) == {"data-b"}
-    assert payloads.parquet_files("data-a") == []
+    assert not os.path.exists(payloads.uri("data-a"))
+    payloads.delete_dir("data-missing")  # reaping an absent dir is a no-op
+    assert set(payloads.payload_dirs()) == {"data-b"}
 
 
 def test_payload_listing_paginates(payloads):
     # 5 files > PAGE=2: the S3 leg must walk ContinuationToken pages
+    # and a reap must delete every page of keys, not just the first
     for i in range(5):
         _write_parquet(
             os.path.join(payloads.uri("data-big"), f"p{i}.parquet"), 1
         )
-    assert len(payloads.parquet_files("data-big")) == 5
-    assert payloads.parquet_row_count("data-big") == 5
+        _write_parquet(
+            os.path.join(payloads.uri(f"data-{i}"), "p0.parquet"), 1
+        )
+    assert set(payloads.payload_dirs()) == {
+        "data-big", *(f"data-{i}" for i in range(5))
+    }
+    payloads.delete_dir("data-big")
+    assert "data-big" not in payloads.payload_dirs()
+    assert not os.path.exists(payloads.uri("data-big"))
 
 
 def test_payload_mtime_missing_is_never_reclaimable():
@@ -879,10 +885,9 @@ def test_payload_s3_throttle_absorbed(tmp_path):
     s = S3PayloadStore("bkt", root, client, uri_base=root)
     s.RETRY_SLEEP = 0
     _write_parquet(os.path.join(root, "data-a", "p0.parquet"), 3)
-    for op in ("list_objects_v2", "get_object", "delete_object"):
+    for op in ("list_objects_v2", "delete_object"):
         client.inject(op, "SlowDown")
     assert set(s.payload_dirs()) == {"data-a"}
-    assert s.parquet_row_count("data-a") == 3
     s.delete_dir("data-a")
     assert s.payload_dirs() == {}
     assert not client._faults  # every throttle retried, none escaped

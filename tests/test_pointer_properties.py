@@ -3,21 +3,16 @@
 The lake's conflict tier earned its robustness from Hypothesis
 op-sequence models (they found the CDF tombstone bug and the
 duplicate-key model bug); the pointer plane — watermark advances,
-ledger merges/mark_done, crash-orphan reclaim, the
-pointer→versioned-ledger handoff — had only pointwise tests. This
-net drives random op sequences against dict models of both
-artifacts, checking the FULL observable state after EVERY op (any
-drift localizes to the op shape that introduced it), across five
-store legs: POSIX, the in-memory object-store stand-in, a lost-ACK
-injector firing on every second put (so sequences mix clean ACKs
-with landed-but-conflicted ones — the flip's writer-token read-back
-must absorb exactly the lost ones and never a real loss), the S3
-fake (records), and ``s3-full`` (round 12: records AND payload
-dirs both through the fake bucket's client API).
-
-The ledger leg draws a random handoff threshold too, so sequences
-cross the pointer→VersionedTable migration MID-RUN and the model
-must hold on both sides of (and during) the switch.
+ledger merges/mark_done, crash-orphan reclaim — had only pointwise
+tests. This net drives random op sequences against dict models of
+both artifacts, checking the FULL observable state after EVERY op
+(any drift localizes to the op shape that introduced it), across
+five store legs: POSIX, the in-memory object-store stand-in, a
+lost-ACK injector firing on every second put (so sequences mix
+clean ACKs with landed-but-conflicted ones — the writer-token
+read-back must absorb exactly the lost ones and never a real loss),
+the S3 fake (records), and ``s3-full`` (round 12: records AND
+payload dirs both through the fake bucket's client API).
 """
 
 from __future__ import annotations
@@ -43,6 +38,7 @@ from jde_to_datalake_spark.sources.log_store import (
     S3ObjectLogStore,
 )
 from tests.test_log_store import FakeS3Client
+from tests.test_pointer_publish import _PutHook
 
 # CI default 5 examples/leg; POINTER_PROP_EXAMPLES=N soaks at depth
 # (round-12 soak sessions are recorded in NOTES.md)
@@ -122,26 +118,26 @@ def _ledger_state(spark, led):
     return {r["k"]: r["status"] for r in df.collect()}
 
 
+def _crash(version, record):
+    raise RuntimeError("injected crash before publish")
+
+
+def _ledger(leg, root):
+    return IdempotencyLedger(
+        root,
+        key="k",
+        store=_make_store(leg, root),
+        payload_store=_make_payloads(leg, root),
+    )
+
+
 @pytest.mark.parametrize("leg", _LEGS)
-@given(
-    ops=_SEQ,
-    threshold=st.one_of(st.none(), st.integers(1, 6)),
-    data=st.data(),
-)
+@given(ops=_SEQ)
 @HS
-def test_pointer_plane_matches_dict_model(
-    spark, tmp_path_factory, leg, ops, threshold, data
-):
+def test_pointer_plane_matches_dict_model(spark, tmp_path_factory, leg, ops):
     tmp = tmp_path_factory.mktemp(f"ptrprop-{leg}")
     lroot, wroot = str(tmp / "led"), str(tmp / "wm")
-    led = IdempotencyLedger(
-        lroot,
-        key="k",
-        store=_make_store(leg, lroot),
-        versioned_threshold_rows=threshold,
-        versioned_store=_make_store(leg, os.path.join(lroot, "_versioned")),
-        payload_store=_make_payloads(leg, lroot),
-    )
+    led = _ledger(leg, lroot)
     wm = Watermark(
         wroot,
         store=_make_store(leg, wroot),
@@ -149,7 +145,6 @@ def test_pointer_plane_matches_dict_model(
     )
     model: dict = {}
     model_wm = None
-    crossed = led.backend()
     for op, arg in ops:
         if op == "merge":
             led.merge(
@@ -172,30 +167,39 @@ def test_pointer_plane_matches_dict_model(
             if model_wm is None or max(arg) > model_wm:
                 model_wm = max(arg)
             assert got == model_wm  # advance returns the in-effect value
-        else:  # crash_reclaim: a writer died pre-flip, then the sweep
-            for root, artifact in ((lroot, led), (wroot, wm)):
-                orphan = os.path.join(root, "data-crashed")
-                os.makedirs(orphan, exist_ok=True)
-                open(os.path.join(orphan, "part-0.parquet"), "w").close()
-                old = time.time() - 7200
-                os.utime(os.path.join(orphan, "part-0.parquet"), (old, old))
-                os.utime(orphan, (old, old))
-                artifact.clean_stale()  # default 1 h retention
-                assert not os.path.exists(orphan)
+        else:  # crash_reclaim: a writer died pre-publish, then the sweep
+            # the watermark's orphan: a payload dir no flip published
+            orphan = os.path.join(wroot, "data-crashed")
+            os.makedirs(orphan, exist_ok=True)
+            open(os.path.join(orphan, "part-0.parquet"), "w").close()
+            old = time.time() - 7200
+            os.utime(os.path.join(orphan, "part-0.parquet"), (old, old))
+            os.utime(orphan, (old, old))
+            wm.clean_stale()  # default 1 h retention
+            assert not os.path.exists(orphan)
+            # the ledger's orphan: a merge's staged files no commit
+            # references, reclaimed by the table's retention-gated vacuum
+            vt = led._vt
+            before = set(vt.data.parquet_mtimes())
+            vt.log = _PutHook(vt.log, _crash)  # dies at the commit put
+            with pytest.raises(RuntimeError, match="injected crash"):
+                led.merge(
+                    spark,
+                    spark.createDataFrame([(99, "lost")], "k bigint, status string"),
+                )
+            vt.log = vt.log.inner
+            orphans = set(vt.data.parquet_mtimes()) - before
+            assert orphans
+            for f in orphans:
+                os.utime(os.path.join(lroot, led.VERSIONED_DIR, f), (old, old))
+            removed = vt.vacuum(keep_last=max(1, len(vt.versions())))
+            assert orphans <= set(removed)
+            assert not set(vt.data.parquet_mtimes()) & orphans
         # the FULL observable state must match the models every step
         assert _ledger_state(spark, led) == model
         assert wm.get(spark) == model_wm
-        if crossed == "pointer" and led.backend() == "versioned":
-            crossed = "versioned"  # handoff happened mid-sequence
     # a fresh handle (separate store instance) resolves the same state
-    led2 = IdempotencyLedger(
-        lroot,
-        key="k",
-        store=_make_store(leg, lroot),
-        versioned_store=_make_store(leg, os.path.join(lroot, "_versioned")),
-        payload_store=_make_payloads(leg, lroot),
-    )
-    assert _ledger_state(spark, led2) == model
+    assert _ledger_state(spark, _ledger(leg, lroot)) == model
     assert Watermark(
         wroot,
         store=_make_store(leg, wroot),
@@ -215,97 +219,13 @@ def test_pointer_plane_matches_dict_model(
 # -- deterministic regression pins (shapes the net found interesting) -----
 
 
-def test_lost_ack_handoff_crossing_pin(spark, tmp_path):
-    """Pin: the handoff fires exactly while the lost-ACK injector is
-    due — the handoff CAS's own put lands + reports conflict, and the
-    read-back must classify it as a self-win (versioned record), not
-    a PointerConflict."""
-    root = str(tmp_path / "led")
-    store = LostAckStore(InMemoryLogStore(root), fire_every=1)
-    led = IdempotencyLedger(
-        root,
-        key="k",
-        store=store,
-        versioned_threshold_rows=2,
-        versioned_store=LostAckStore(
-            InMemoryLogStore(os.path.join(root, "_versioned")), fire_every=1
-        ),
-    )
-    led.merge(spark, spark.createDataFrame([(1, "pending")], "k bigint, status string"))
-    assert led.backend() == "pointer"
-    led.merge(spark, spark.createDataFrame([(2, "sent")], "k bigint, status string"))
-    # footer count pre-merge was 1 < 2: still pointer-backed
-    assert led.backend() == "pointer"
-    assert _ledger_state(spark, led) == {1: "pending", 2: "sent"}
-    # this merge sees 2 >= 2 rows: the handoff CAS fires under the
-    # every-put lost-ACK injector
-    led.mark_done(spark, spark.createDataFrame([(1,)], "k bigint"))
-    assert led.backend() == "versioned"
-    assert _ledger_state(spark, led) == {1: "done", 2: "sent"}
-    InMemoryLogStore.reset()
-
-
-def test_mark_done_inserts_unseen_keys_both_backends(spark, tmp_path):
+def test_mark_done_inserts_unseen_keys(spark, tmp_path):
     """Pin: mark_done on a key the ledger has never seen INSERTS it as
-    done (merge semantics) — identically pre- and post-handoff."""
-    for threshold, expect_backend in ((None, "pointer"), (1, "versioned")):
-        root = str(tmp_path / f"led-{expect_backend}")
-        led = IdempotencyLedger(
-            root, key="k", versioned_threshold_rows=threshold
-        )
-        led.merge(
-            spark,
-            spark.createDataFrame([(1, "pending")], "k bigint, status string"),
-        )
-        led.mark_done(spark, spark.createDataFrame([(9,)], "k bigint"))
-        assert led.backend() == expect_backend
-        assert _ledger_state(spark, led) == {1: "pending", 9: "done"}
-
-
-def test_handoff_crash_between_upsert_and_cas_redrives(spark, tmp_path):
-    """Pin for the handoff's crash window: a writer that dies AFTER
-    the versioned upsert landed but BEFORE the handoff CAS leaves the
-    pointer on the parquet payload (the crashed merge is invisible —
-    no torn state), and re-driving the same batch completes the
-    migration with zero duplicate rows (the keyed upsert is
-    idempotent over its own earlier landing)."""
-    root = str(tmp_path / "led")
-    led = IdempotencyLedger(root, key="k", versioned_threshold_rows=1)
+    done (merge semantics)."""
+    led = IdempotencyLedger(str(tmp_path / "led"), key="k")
     led.merge(
-        spark, spark.createDataFrame([(1, "pending")], "k bigint, status string")
+        spark,
+        spark.createDataFrame([(1, "pending")], "k bigint, status string"),
     )
-
-    class CrashOnce:
-        """Dies exactly at the handoff CAS — the versioned upsert has
-        already landed in the shared table."""
-
-        def __init__(self, store):
-            self._s = store
-            self._fired = False
-
-        def put_if_absent(self, version, record):
-            if not self._fired and record.get("backend") == "versioned":
-                self._fired = True
-                raise RuntimeError("injected crash before handoff CAS")
-            return self._s.put_if_absent(version, record)
-
-        def __getattr__(self, name):
-            return getattr(self._s, name)
-
-    real = led._ptr.store
-    led._ptr.store = CrashOnce(real)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        led.merge(
-            spark,
-            spark.createDataFrame([(2, "sent")], "k bigint, status string"),
-        )
-    # the pointer never moved: the crashed merge is NOT visible
-    assert led.backend() == "pointer"
-    assert _ledger_state(spark, led) == {1: "pending"}
-    # crash-replay: re-drive the same batch; the handoff completes
-    led.merge(
-        spark, spark.createDataFrame([(2, "sent")], "k bigint, status string")
-    )
-    assert led.backend() == "versioned"
-    assert _ledger_state(spark, led) == {1: "pending", 2: "sent"}
-    assert led.load(spark).count() == 2  # the double upsert left no dupes
+    led.mark_done(spark, spark.createDataFrame([(9,)], "k bigint"))
+    assert _ledger_state(spark, led) == {1: "pending", 9: "done"}

@@ -4,12 +4,12 @@ their semantics against EVERY LogStore implementation — POSIX, the
 in-memory object-store stand-in, the S3 adapter over the fake
 conditional-write client, a lost-ACK wrapper (every successful put
 also reports a conflict), and ``s3-full``: BOTH planes — pointer
-records AND payload dirs (listing, retention mtimes, reaping, footer
-reads) — on the fault-injectable S3 fake, the proof that the ledger
-and the watermark run END-TO-END against a bucket with zero ``os.*``
-in the control path. This is what routing them through the seams
-(records round 10, payloads round 12) actually bought: the same
-behavior, byte for byte, on every store."""
+records AND payload dirs (listing, retention mtimes, reaping; the
+ledger table's data files) — on the fault-injectable S3 fake, the
+proof that the ledger and the watermark run END-TO-END against a
+bucket with zero ``os.*`` in the control path. This is what routing
+them through the seams (records round 10, payloads round 12)
+actually bought: the same behavior, byte for byte, on every store."""
 
 from __future__ import annotations
 
@@ -20,6 +20,7 @@ import pytest
 
 from jde_to_datalake_spark.sources.log_store import (
     InMemoryLogStore,
+    LogStore,
     LostAckStore,
     PosixLogStore,
     S3ObjectLogStore,
@@ -105,13 +106,39 @@ def test_watermark_semantics_on_every_store(spark, tmp_path, make_store):
     assert wm.get(spark) == 99  # current payload untouched by the sweep
 
 
-def test_ledger_semantics_on_every_store(spark, tmp_path, make_store):
-    from pyspark.sql import functions as F
-
+def _led(root, make_store):
     from jde_to_datalake_spark.plans.ledger import IdempotencyLedger
 
+    return IdempotencyLedger(
+        root,
+        key="k",
+        store=make_store(root),
+        payload_store=make_store.payloads(root),
+    )
+
+
+class _PutHook:
+    """Delegating store that runs ``hook(version, record)`` once,
+    before the first ``put_if_absent`` it forwards — the deterministic
+    stand-in for another writer acting inside this one's publish."""
+
+    def __init__(self, inner, hook):
+        self.inner = inner
+        self.hook = hook
+
+    def put_if_absent(self, version, record):
+        hook, self.hook = self.hook, None
+        if hook is not None:
+            hook(version, record)
+        return self.inner.put_if_absent(version, record)
+
+    def __getattr__(self, name):
+        return getattr(self.inner, name)
+
+
+def test_ledger_semantics_on_every_store(spark, tmp_path, make_store):
     root = str(tmp_path / "led")
-    led = IdempotencyLedger(root, key="k", store=make_store(root), payload_store=make_store.payloads(root))
+    led = _led(root, make_store)
     assert not led.exists() and led.load(spark) is None
     batch = spark.createDataFrame(
         [(1, "pending"), (2, "pending")], ["k", "status"]
@@ -124,15 +151,14 @@ def test_ledger_semantics_on_every_store(spark, tmp_path, make_store):
     assert got == {1: "done", 2: "pending"}
     # the done key is filtered out of the next batch (J6 order)
     assert {r["k"] for r in led.pending_only(spark, batch).collect()} == {2}
-    # a second handle sees the flipped pointer
-    led2 = IdempotencyLedger(root, key="k", store=make_store(root), payload_store=make_store.payloads(root))
+    # a second handle (own store instance) sees both commits
+    led2 = _led(root, make_store)
     assert led2.exists()
     assert {r["k"] for r in led2.pending_only(spark, batch).collect()} == {2}
-    # superseded ledger dirs survive the flips for lazy readers and
-    # are reclaimed by the retention-gated sweep (2 flips = 1 stale)
-    datas = [d for d in os.listdir(root) if d.startswith("data-")]
-    assert len(datas) == 2
-    assert len(led.clean_stale(retention_seconds=0)) == 1
+    assert len(led2._vt.versions()) == 2
+    # every row lives in the table: no pointer payload dirs to reclaim
+    assert not [d for d in os.listdir(root) if d.startswith("data-")]
+    assert led.clean_stale(retention_seconds=0) == []
     got = {r["k"]: r["status"] for r in led.load(spark).collect()}
     assert got == {1: "done", 2: "pending"}  # current ledger untouched
 
@@ -294,22 +320,20 @@ def test_nonce_legacy_file_migrates_identity(tmp_path):
 
 def test_flip_defers_reap_for_lazy_readers(spark, tmp_path, make_store):
     """A reader holding an UNMATERIALIZED DataFrame bound to the
-    pre-flip ledger must still be able to run its action after a flip
-    — the flip publishes the new pointer but never deletes the
-    superseded payload (that's clean_stale's retention-gated job)."""
-    from jde_to_datalake_spark.plans.ledger import IdempotencyLedger
-
+    pre-merge ledger must still be able to run its action after a
+    merge — the merge publishes a new table version but never deletes
+    the files it superseded (that's vacuum's retention-gated job)."""
     root = str(tmp_path / "led")
-    led = IdempotencyLedger(root, key="k", store=make_store(root), payload_store=make_store.payloads(root))
+    led = _led(root, make_store)
     led.merge(
         spark,
         spark.createDataFrame([(1, "pending"), (2, "done")], ["k", "status"]),
     )
     lazy = led.load(spark).filter("status = 'done'")  # plan only, no action
-    led.mark_done(spark, spark.createDataFrame([(1,)], ["k"]))  # flip lands
-    # the pre-flip plan still materializes against the old payload
+    led.mark_done(spark, spark.createDataFrame([(1,)], ["k"]))  # merge lands
+    # the pre-merge plan still materializes against the old files
     assert [r["k"] for r in lazy.collect()] == [2]
-    # and a fresh read sees the post-flip state
+    # and a fresh read sees the post-merge state
     got = {r["k"]: r["status"] for r in led.load(spark).collect()}
     assert got == {1: "done", 2: "done"}
 
@@ -317,34 +341,40 @@ def test_flip_defers_reap_for_lazy_readers(spark, tmp_path, make_store):
 def test_two_dispatcher_merge_loses_loudly_zero_rows_lost(
     spark, tmp_path, make_store
 ):
-    """TWO concurrent dispatchers merging the ledger: with the CAS'd
-    flip exactly one wins, the other raises PointerConflict — and the
-    ledger holds exactly the winner's rows (the old last-writer-wins
-    flip silently dropped one side's rows → duplicate side-effect
-    dispatch, the failure A12 exists to prevent). The loud loser then
-    re-merges with conflict_retries and BOTH sides' rows are present."""
-    from jde_to_datalake_spark.plans.ledger import IdempotencyLedger
+    """TWO concurrent dispatchers whose batches share a key race for
+    the same table version: exactly one wins, the other raises
+    PointerConflict — and the ledger holds exactly the base plus the
+    winner's rows (a last-writer-wins publish would silently drop one
+    side's rows → duplicate side-effect dispatch, the failure A12
+    exists to prevent). The loud loser then re-merges with
+    conflict_retries and BOTH sides' rows are present, the loser's
+    update last on the shared key."""
     from jde_to_datalake_spark.sources.log_store import PointerConflict
 
     root = str(tmp_path / "led")
-    handles = [
-        IdempotencyLedger(root, key="k", store=make_store(root), payload_store=make_store.payloads(root))
-        for _ in range(2)
-    ]
+    handles = [_led(root, make_store) for _ in range(2)]
+    handles[0].merge(
+        spark, spark.createDataFrame([(0, "done")], "k bigint, status string")
+    )
     batches = [
-        spark.createDataFrame([(1, "done"), (2, "done")], ["k", "status"]),
-        spark.createDataFrame([(3, "done"), (4, "done")], ["k", "status"]),
+        spark.createDataFrame([(1, "a"), (2, "a")], "k bigint, status string"),
+        spark.createDataFrame([(2, "b"), (3, "b")], "k bigint, status string"),
     ]
+    # hold each writer's first commit put until both reach theirs: both
+    # have read version 0, so both publish at version 1
+    publish = threading.Barrier(2, timeout=120)
+    for h in handles:
+        h._vt.log = _PutHook(h._vt.log, lambda v, r: publish.wait())
     outcomes: list = [None, None]
-    barrier = threading.Barrier(2)
 
     def dispatch(i):
-        barrier.wait()
         try:
             handles[i].merge(spark, batches[i])
             outcomes[i] = "won"
         except PointerConflict:
             outcomes[i] = "lost"
+        except Exception as e:  # noqa: BLE001 — collected for assert
+            outcomes[i] = repr(e)
 
     ts = [threading.Thread(target=dispatch, args=(i,)) for i in range(2)]
     for t in ts:
@@ -354,53 +384,44 @@ def test_two_dispatcher_merge_loses_loudly_zero_rows_lost(
     assert sorted(outcomes) == ["lost", "won"]
     winner = outcomes.index("won")
     loser = 1 - winner
-    keys = {r["k"] for r in handles[0].load(spark).collect()}
+    got = {r["k"]: r["status"] for r in handles[0].load(spark).collect()}
     # exactly the winner's rows — nothing silently half-merged
-    assert keys == {1, 2} if winner == 0 else keys == {3, 4}
+    won = {r[0]: r[1] for r in batches[winner].collect()}
+    assert got == {0: "done", **won}
     # the loud loser re-derives: both sides present, zero rows lost
     handles[loser].merge(spark, batches[loser], conflict_retries=3)
-    keys = {r["k"] for r in handles[0].load(spark).collect()}
-    assert keys == {1, 2, 3, 4}
+    got = {r["k"]: r["status"] for r in handles[0].load(spark).collect()}
+    assert set(got) == {0, 1, 2, 3}
+    assert got[2] == "ab"[loser]
 
 
 def test_merge_conflict_retries_rederive_serialized_outcome(
     spark, tmp_path, make_store
 ):
-    """conflict_retries re-reads the NEW current ledger and re-applies
-    the updates on top — the serialized ON CONFLICT DO UPDATE outcome:
-    both writers' disjoint keys survive, and the retrying writer's
-    update wins on the contended key."""
-    from jde_to_datalake_spark.plans.ledger import IdempotencyLedger
-
+    """conflict_retries re-runs the merge against the NEW snapshot —
+    the serialized ON CONFLICT DO UPDATE outcome: the intervening
+    writer's disjoint key survives, and the retrying writer's update
+    wins on the contended key."""
     root = str(tmp_path / "led")
-    led = IdempotencyLedger(root, key="k", store=make_store(root), payload_store=make_store.payloads(root))
+    led = _led(root, make_store)
     led.merge(spark, spark.createDataFrame([(1, "pending")], ["k", "status"]))
+    other = _led(root, make_store)
 
-    class StaleAnchorPtr:
-        """First flip attempt uses a deliberately stale anchor — the
-        deterministic stand-in for an intervening dispatcher."""
+    def intervene(version, record):
+        # another dispatcher commits first, rewriting key 1's file
+        other.merge(
+            spark,
+            spark.createDataFrame([(1, "sent"), (7, "sent")], ["k", "status"]),
+        )
 
-        def __init__(self, ptr):
-            self._ptr = ptr
-            self._sabotaged = False
-
-        def flip(self, write_fn, expected):
-            if not self._sabotaged:
-                self._sabotaged = True
-                expected = None if expected is None else expected - 1
-            return self._ptr.flip(write_fn, expected=expected)
-
-        def __getattr__(self, name):
-            return getattr(self._ptr, name)
-
-    led._ptr = StaleAnchorPtr(led._ptr)
+    led._vt.log = _PutHook(led._vt.log, intervene)
     led.merge(
         spark,
         spark.createDataFrame([(1, "done"), (5, "pending")], ["k", "status"]),
         conflict_retries=2,
     )
     got = {r["k"]: r["status"] for r in led.load(spark).collect()}
-    assert got == {1: "done", 5: "pending"}
+    assert got == {1: "done", 5: "pending", 7: "sent"}
 
 
 @pytest.mark.soak
@@ -412,14 +433,9 @@ def test_many_dispatchers_with_retries_lose_no_rows(
     end — the serialized ON-CONFLICT-DO-UPDATE outcome under REAL
     thread interleavings (not just the pointwise two-writer shapes).
     Runs on every store leg incl. the every-put lost-ACK injector."""
-    from jde_to_datalake_spark.plans.ledger import IdempotencyLedger
-
     root = str(tmp_path / "led")
     n_threads, n_merges = 4, 3
-    handles = [
-        IdempotencyLedger(root, key="k", store=make_store(root), payload_store=make_store.payloads(root))
-        for _ in range(n_threads)
-    ]
+    handles = [_led(root, make_store) for _ in range(n_threads)]
     errors: list = []
     barrier = threading.Barrier(n_threads)
 
@@ -524,104 +540,137 @@ def test_watermark_stale_anchor_conflict_is_loud(
         )
 
 
-def _vled(root, make_store, threshold):
+def test_ledger_log_store_budget_at_smoke_size(spark, tmp_path):
+    """The ledger's log-store traffic per call, pinned: the root _log
+    (the legacy-layout check) is read on the instance's first call
+    only, and a probe at a version this instance already holds reads
+    no table record — the held table's manifest cache serves it."""
     from jde_to_datalake_spark.plans.ledger import IdempotencyLedger
 
-    return IdempotencyLedger(
-        root,
-        key="k",
-        store=make_store(root),
-        versioned_threshold_rows=threshold,
-        versioned_store=make_store(os.path.join(root, "_versioned")),
-        payload_store=make_store.payloads(root),
-    )
+    calls: list = []
 
+    class Counting(LogStore):
+        def __init__(self, inner, name):
+            self.inner, self.name = inner, name
 
-def test_ledger_hands_off_to_versioned_above_threshold(
-    spark, tmp_path, make_store
-):
-    """Below the threshold the ledger is a pointer-flipped parquet
-    swap; the merge that carries it to >= threshold rows hands off to
-    the VersionedTable backend (file-level partial-rewrite MERGE), and
-    every ledger surface — load, pending_only, mark_done, exists —
-    behaves identically across the switch."""
+        def for_child(self, name):
+            return Counting(self.inner.for_child(name), name)
+
+        def _call(self, op, *args):
+            calls.append((self.name, op))
+            return getattr(self.inner, op)(*args)
+
+        def list_versions(self):
+            return self._call("list_versions")
+
+        def read(self, version):
+            return self._call("read", version)
+
+        def put_if_absent(self, version, record):
+            return self._call("put_if_absent", version, record)
+
+        def replace(self, version, record):
+            return self._call("replace", version, record)
+
+        def delete(self, version):
+            return self._call("delete", version)
+
     root = str(tmp_path / "led")
-    led = _vled(root, make_store, threshold=3)
-    led.merge(
-        spark,
-        spark.createDataFrame([(1, "pending"), (2, "pending")], ["k", "status"]),
+    led = IdempotencyLedger(
+        root, key="k", store=Counting(PosixLogStore(root), "root")
     )
-    assert led.backend() == "pointer"
-    led.merge(
-        spark,
-        spark.createDataFrame([(3, "pending"), (4, "pending")], ["k", "status"]),
-    )
-    # the threshold is read from the CURRENT payload's parquet footers
-    # (metadata-only, no extra Spark action), so the handoff fires on
-    # the first merge AFTER the ledger has reached the threshold
-    assert led.backend() == "pointer"
-    got = {r["k"]: r["status"] for r in led.load(spark).collect()}
-    assert got == {1: "pending", 2: "pending", 3: "pending", 4: "pending"}
-    # post-handoff A13 + J6 semantics are unchanged (this merge sees
-    # 4 >= 3 rows and migrates)
-    led.mark_done(spark, spark.createDataFrame([(1,), (3,)], ["k"]))
-    assert led.backend() == "versioned"
-    got = {r["k"]: r["status"] for r in led.load(spark).collect()}
-    assert got == {1: "done", 2: "pending", 3: "done", 4: "pending"}
-    batch = spark.createDataFrame(
-        [(1, "x"), (2, "x"), (9, "x")], ["k", "status"]
-    )
-    assert {r["k"] for r in led.pending_only(spark, batch).collect()} == {2, 9}
-    # a second handle routes through the handoff record too
-    led2 = _vled(root, make_store, threshold=3)
-    assert led2.backend() == "versioned" and led2.exists()
-    assert {r["k"] for r in led2.pending_only(spark, batch).collect()} == {2, 9}
-    # superseded pointer payload dirs are now all unreferenced
-    led.clean_stale(retention_seconds=0)
-    assert [d for d in os.listdir(root) if d.startswith("data-")] == []
-    # ... and the versioned backend survived the sweep
-    got = {r["k"]: r["status"] for r in led.load(spark).collect()}
-    assert got == {1: "done", 2: "pending", 3: "done", 4: "pending"}
+    rows = "k bigint, status string"
+    led.merge(spark, spark.createDataFrame([(k, "done") for k in range(5)], rows))
+    assert ("root", "list_versions") in calls  # the one-time check
+    calls.clear()
+    batch = spark.createDataFrame([(0, "x"), (1, "x"), (9, "x")], rows)
+    assert {r["k"] for r in led.pending_only(spark, batch).collect()} == {9}
+    led.merge(spark, spark.createDataFrame([(9, "done")], rows))
+    n = len(calls)
+    assert {r["k"] for r in led.pending_only(spark, batch).collect()} == set()
+    assert [c for c in calls if c[0] == "root"] == []
+    # the repeat probe: one listing to resolve latest, no record read
+    assert calls[n:] == [("_versioned", "list_versions")]
 
 
 def test_ledger_explicit_migration_and_merge_cadence(
     spark, tmp_path, make_store
 ):
-    """migrate_to_versioned() is the threshold path minus the
-    threshold; post-handoff merges go through VersionedTable.merge
-    (partial rewrite), and the table's history records each merge."""
+    """A pointer-backed ledger — written here the way the retired
+    parquet backend wrote it, with DataDirPointer.flip — refuses every
+    call until migrate_to_versioned converts it. The conversion keeps
+    every row, is idempotent, and re-drives cleanly after a crash
+    between its upsert and its marker publish (the crashed run is
+    invisible; the double upsert leaves no duplicate rows). After it,
+    merges go through VersionedTable.merge and the table's history
+    records each one, and clean_stale reclaims the superseded pointer
+    payload without touching the table."""
+    from jde_to_datalake_spark.sources.log_store import DataDirPointer
+
     root = str(tmp_path / "led")
-    led = _vled(root, make_store, threshold=None)
-    led.merge(
-        spark,
-        spark.createDataFrame([(1, "pending"), (2, "done")], ["k", "status"]),
+    rows = "k bigint, status string"
+    DataDirPointer(
+        root, make_store(root), payloads=make_store.payloads(root)
+    ).flip(
+        lambda p: spark.createDataFrame([(1, "pending"), (2, "done")], rows)
+        .coalesce(1)
+        .write.parquet(p)
     )
-    led.migrate_to_versioned(spark)
-    assert led.backend() == "versioned"
+    led = _led(root, make_store)
+    batch = spark.createDataFrame([(1, "x"), (2, "x"), (3, "x")], rows)
+    for call in (
+        led.exists,
+        lambda: led.load(spark),
+        lambda: led.pending_only(spark, batch),
+        lambda: led.merge(spark, batch),
+        lambda: led.mark_done(spark, batch.select("k")),
+    ):
+        with pytest.raises(RuntimeError, match="migrate_to_versioned"):
+            call()
+
+    def crash(version, record):
+        raise RuntimeError("injected crash before the marker publish")
+
+    real = led._ptr.store
+    led._ptr.store = _PutHook(real, crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        led.migrate_to_versioned(spark)
+    led._ptr.store = real
+    # the upsert landed in the table, but without the marker the
+    # ledger still refuses rather than serve a half-converted state
+    assert len(led._vt.versions()) == 1
+    with pytest.raises(RuntimeError, match="migrate_to_versioned"):
+        led.exists()
+    led.migrate_to_versioned(spark)  # crash-replay converges
     led.migrate_to_versioned(spark)  # idempotent no-op
-    led.merge(spark, spark.createDataFrame([(5, "pending")], ["k", "status"]))
+    got = {r["k"]: r["status"] for r in led.load(spark).collect()}
+    assert got == {1: "pending", 2: "done"}
+    assert led.load(spark).count() == 2  # the double upsert left no dupes
+    assert {r["k"] for r in led.pending_only(spark, batch).collect()} == {1, 3}
+    assert _led(root, make_store).exists()  # a second handle sees it too
+    n = len(led._vt.versions())
+    led.merge(spark, spark.createDataFrame([(5, "pending")], rows))
+    assert len(led._vt.versions()) == n + 1
+    led.clean_stale(retention_seconds=0)
+    assert [d for d in os.listdir(root) if d.startswith("data-")] == []
     got = {r["k"]: r["status"] for r in led.load(spark).collect()}
     assert got == {1: "pending", 2: "done", 5: "pending"}
-    # the versioned backend keeps history: handoff commit + merge
-    assert len(led._vt().versions()) >= 2
 
 
 def test_versioned_ledger_concurrent_merges_lose_loudly_or_serialize(
     spark, tmp_path, make_store
 ):
-    """Post-handoff, two concurrent dispatchers ride the versioned
-    table's optimistic concurrency: with conflict_retries=0 one may
-    lose LOUDLY (PointerConflict) and no rows are silently dropped;
-    with retries the loser re-derives and both land."""
+    """Two concurrent dispatchers ride the versioned table's
+    optimistic concurrency: with conflict_retries=0 one may lose
+    LOUDLY (PointerConflict) and no rows are silently dropped; with
+    retries the loser re-derives and both land."""
     from jde_to_datalake_spark.sources.log_store import PointerConflict
 
     root = str(tmp_path / "led")
-    led = _vled(root, make_store, threshold=1)
-    led.merge(spark, spark.createDataFrame([(0, "done")], ["k", "status"]))
-    assert led.backend() == "pointer"  # footer count was 0 pre-merge
-    led.merge(spark, spark.createDataFrame([(0, "done")], ["k", "status"]))
-    assert led.backend() == "versioned"  # 1 >= threshold: handoff
-    handles = [_vled(root, make_store, threshold=1) for _ in range(2)]
+    _led(root, make_store).merge(
+        spark, spark.createDataFrame([(0, "done")], ["k", "status"])
+    )
+    handles = [_led(root, make_store) for _ in range(2)]
     batches = [
         spark.createDataFrame([(1, "done")], ["k", "status"]),
         spark.createDataFrame([(2, "done")], ["k", "status"]),
@@ -654,52 +703,47 @@ def test_versioned_ledger_concurrent_merges_lose_loudly_or_serialize(
 
 
 def test_handoff_races_pointer_flip_rederives(spark, tmp_path, make_store):
-    """A pointer flip landing between a migrator's read and its
-    handoff CAS must force re-derivation — the handoff retry upserts
-    the FRESHER merged state (including the intervening writer's
-    rows) before publishing."""
+    """A pointer flip landing between a migrator's read and its marker
+    CAS (a dispatcher still on the parquet backend) makes
+    migrate_to_versioned raise PointerConflict; invoking it again
+    upserts the FRESHER payload — the intervening writer's rows
+    included — before publishing."""
+    from jde_to_datalake_spark.sources.log_store import (
+        DataDirPointer,
+        PointerConflict,
+    )
+
     root = str(tmp_path / "led")
-    led = _vled(root, make_store, threshold=100)  # stays pointer-backed
-    led.merge(spark, spark.createDataFrame([(1, "done")], ["k", "status"]))
-    # drop the threshold so the next merge migrates — but sabotage its
-    # first CAS anchor to simulate an intervening dispatcher
-    led.versioned_threshold_rows = 1
-
-    class StaleAnchorOnce:
-        def __init__(self, store):
-            self._store = store
-            self._fired = False
-
-        def put_if_absent(self, version, record):
-            if not self._fired and record.get("backend") == "versioned":
-                self._fired = True
-                # an intervening pointer flip claimed this version
-                self._store.put_if_absent(
-                    version, {"data_dir": "data-intervener"}
-                )
-            return self._store.put_if_absent(version, record)
-
-        def __getattr__(self, name):
-            return getattr(self._store, name)
-
-    real_store = led._ptr.store
-    led._ptr.store = StaleAnchorOnce(real_store)
-    # the intervener's merged state carries the existing row forward
-    # (a real merge never drops keys) plus its own new row
-    spark.createDataFrame(
-        [(1, "done"), (7, "done")], ["k", "status"]
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(root, "data-intervener")
+    rows = "k bigint, status string"
+    ptr = DataDirPointer(
+        root, make_store(root), payloads=make_store.payloads(root)
     )
-    led.merge(
-        spark,
-        spark.createDataFrame([(2, "pending")], ["k", "status"]),
-        conflict_retries=2,
+    ptr.flip(
+        lambda p: spark.createDataFrame([(1, "done")], rows).write.parquet(p)
     )
-    assert led.backend() == "versioned"
+    led = _led(root, make_store)
+
+    def intervene(version, record):
+        # the intervener's merged state carries the existing row
+        # forward (a real merge never drops keys) plus its own new row
+        ptr.flip(
+            lambda p: spark.createDataFrame([(1, "done"), (7, "done")], rows)
+            .write.parquet(p),
+            expected=version - 1,
+        )
+
+    real = led._ptr.store
+    led._ptr.store = _PutHook(real, intervene)
+    with pytest.raises(PointerConflict):
+        led.migrate_to_versioned(spark)
+    led._ptr.store = real
+    with pytest.raises(RuntimeError, match="migrate_to_versioned"):
+        led.exists()
+    led.migrate_to_versioned(spark)
+    led.merge(spark, spark.createDataFrame([(2, "pending")], rows))
     got = {r["k"]: r["status"] for r in led.load(spark).collect()}
-    # the intervener's row (7) AND the migrating writer's row (2) both
-    # survived the race — zero silent loss across the handoff
+    # the intervener's row (7) and the later merge's row (2) both
+    # survived the race — zero silent loss across the conversion
     assert got == {1: "done", 7: "done", 2: "pending"}
 
 
@@ -764,43 +808,6 @@ def _dual_plane(root):
     pay = S3PayloadStore("bkt", root, pay_client, uri_base=root)
     pay.RETRY_SLEEP = 0
     return log, pay, pay_client
-
-
-def test_payload_throttle_defers_threshold_handoff_not_merge(
-    spark, tmp_path
-):
-    """A payload-store fault during the handoff THRESHOLD read (footer
-    row count) must defer the handoff — never fail the merge, never
-    hand off on garbage — and the next clean merge hands off."""
-    from jde_to_datalake_spark.plans.ledger import IdempotencyLedger
-
-    root = str(tmp_path / "led")
-    log, pay, pay_client = _dual_plane(root)
-    led = IdempotencyLedger(
-        root, key="k", store=log, payload_store=pay,
-        versioned_threshold_rows=1,
-    )
-    led.merge(
-        spark, spark.createDataFrame([(1, "pending")], "k bigint, status string")
-    )
-    assert led.backend() == "pointer"
-    # exhaust the payload plane's bounded retries on the listing the
-    # threshold read needs — the record plane is untouched
-    pay_client.inject(
-        "list_objects_v2", "SlowDown", times=pay.MAX_RETRIES + 1
-    )
-    led.merge(
-        spark, spark.createDataFrame([(2, "sent")], "k bigint, status string")
-    )
-    # the merge LANDED (deferral, not failure) and no bogus handoff
-    assert led.backend() == "pointer"
-    got = {r["k"]: r["status"] for r in led.load(spark).collect()}
-    assert got == {1: "pending", 2: "sent"}
-    # next merge reads the threshold cleanly and hands off
-    led.mark_done(spark, spark.createDataFrame([(1,)], "k bigint"))
-    assert led.backend() == "versioned"
-    got = {r["k"]: r["status"] for r in led.load(spark).collect()}
-    assert got == {1: "done", 2: "sent"}
 
 
 def test_payload_faults_never_fail_sweep_or_publish(spark, tmp_path):
@@ -875,26 +882,25 @@ def test_ledger_merge_handles_map_typed_payload(spark, tmp_path):
 def test_pending_only_probe_is_file_pruned_on_versioned_backend(
     spark, tmp_path
 ):
-    """Post-handoff, pending_only's done-probe must read only the
-    ledger files whose footer key-range can contain the batch's keys
-    (read_where_in) — O(batch-intersecting files), not O(ledger) —
-    while returning exactly the J6 anti-join result. Mirrors the
-    band-probe plan pin in test_plan_shapes."""
+    """pending_only's done-probe must read only the ledger files whose
+    footer key-range can contain the batch's keys (read_where_in) —
+    O(batch-intersecting files), not O(ledger) — while returning
+    exactly the J6 anti-join result. Mirrors the band-probe plan pin
+    in test_plan_shapes."""
     from jde_to_datalake_spark.plans.ledger import IdempotencyLedger
 
     root = str(tmp_path / "led")
-    led = IdempotencyLedger(root, key="k", versioned_threshold_rows=1)
+    led = IdempotencyLedger(root, key="k")
     led.merge(
         spark,
         spark.createDataFrame(
             [(k, "done") for k in range(10)], "k bigint, status string"
         ),
     )
-    led.merge(  # crosses the threshold: handoff to the versioned table
+    led.merge(
         spark,
         spark.createDataFrame([(10, "pending")], "k bigint, status string"),
     )
-    assert led.backend() == "versioned"
     led.merge(  # disjoint key range lands in its own file(s)
         spark,
         spark.createDataFrame(
