@@ -17,8 +17,9 @@ to Delta in prod:
     ).whenMatchedUpdateAll().whenNotMatchedInsertAll().execute()
 
 Scale: each MERGE rewrites only the ledger files whose footer
-key-range intersects the batch, and ``pending_only`` probes only those
-files — O(batch) per tick on a key-clustered ledger.
+key-range intersects the batch. ``pending_only`` is one lazy anti-join
+against the latest version's done keys: no collect of the batch, and no
+py4j traffic that grows with the batch.
 """
 
 from __future__ import annotations
@@ -60,12 +61,6 @@ class IdempotencyLedger:
     #: prefixed so no data-dir sweep ever touches it
     VERSIONED_DIR = "_versioned"
 
-    #: pending_only collects at most this many distinct batch keys to
-    #: drive the file-pruned probe; a larger batch falls back to the
-    #: full-ledger anti-join (the probe's point is micro-batch ≪
-    #: ledger, so past this size the full scan wins)
-    PROBE_MAX_KEYS = 10_000
-
     #: the root ``_log`` record that marks a converted pointer ledger
     _HANDOFF = {"backend": "versioned", "table_dir": VERSIONED_DIR}
 
@@ -95,6 +90,9 @@ class IdempotencyLedger:
             ),
         )
         self._layout_checked = False
+        #: (version, session, done-key frame) of the last pending_only;
+        #: threads racing on it only rebuild it
+        self._done = None
 
     def _table(self):
         """The table, after the one-time legacy-layout check: a
@@ -131,33 +129,24 @@ class IdempotencyLedger:
     def pending_only(self, spark: SparkSession, batch: DataFrame) -> DataFrame:
         """J6: drop rows already marked done (MUST precede side effects).
 
-        The done-probe is FILE-PRUNED: the batch's distinct keys
-        (bounded by ``PROBE_MAX_KEYS`` — a micro-batch, not a table)
-        drive ``read_where_in``, which plans over only the ledger files
-        whose footer key-range can contain them — O(batch-intersecting
-        files) per probe on a key-clustered ledger instead of O(ledger)
-        scan. Batches past the bound fall back to the full read +
-        anti-join (at that size the full scan is the cheaper plan
-        anyway)."""
+        One lazy plan, ``batch LEFT ANTI JOIN done``, where ``done`` is
+        the latest version's ``status = 'done'`` keys (NULL batch keys
+        survive). The ``done`` frame is pinned to that version's file
+        list and kept per (version, session), so its schema-inference
+        job runs once per version, not once per call."""
         vt = self._table()
         v = vt.latest_version()
         if v is None:
             return batch
-        keys = [
-            r[0]
-            for r in batch.select(self.key)
-            .distinct()
-            .limit(self.PROBE_MAX_KEYS + 1)
-            .collect()
-        ]
-        if len(keys) <= self.PROBE_MAX_KEYS:
-            ledger = vt.read_where_in(
-                spark, self.key, keys, version=v, merge_schema=True
+        memo = self._done
+        if memo is None or memo[0] != v or memo[1] is not spark:
+            done = (
+                vt.read(spark, version=v, merge_schema=True)
+                .filter(F.col("status") == "done")
+                .select(self.key)
             )
-        else:
-            ledger = vt.read(spark, version=v, merge_schema=True)
-        done = ledger.filter(F.col("status") == "done").select(self.key)
-        return batch.join(done, self.key, "left_anti")
+            memo = self._done = (v, spark, done)
+        return batch.join(memo[2], self.key, "left_anti")
 
     def merge(
         self,

@@ -523,10 +523,12 @@ class PayloadStore:
 
     - ``uri(name)`` — the location handed to Spark for reading or
       writing one payload dir (a POSIX path, an ``s3a://`` URI, …).
-    - ``payload_dirs()`` — ``{dir_name: newest_mtime_epoch}`` of the
-      top-level payload dirs under the root (``ListObjectsV2`` grouped
-      by first key segment, newest ``LastModified`` per group), the
-      input to ``clean_stale``'s retention gate.
+    - ``payload_dirs(prefixes)`` — ``{dir_name: newest_mtime_epoch}``
+      of the top-level payload dirs under the root whose names start
+      with one of ``prefixes`` (``ListObjectsV2`` per name prefix,
+      grouped by first key segment, newest ``LastModified`` per
+      group), the input to ``clean_stale``'s retention gate. Other
+      dirs (a ledger's ``_versioned`` table) are never walked.
     - ``root_files()`` — loose file names directly under the root
       (the pre-pointer legacy-layout detection).
     - ``delete_dir(name)`` — recursive reap of one payload dir.
@@ -540,7 +542,7 @@ class PayloadStore:
     def uri(self, name: str = "") -> str:
         raise NotImplementedError
 
-    def payload_dirs(self) -> "dict[str, float]":
+    def payload_dirs(self, prefixes: tuple) -> "dict[str, float]":
         raise NotImplementedError
 
     def root_files(self) -> "list[str]":
@@ -571,7 +573,7 @@ class PosixPayloadStore(PayloadStore):
     def uri(self, name: str = "") -> str:
         return self.root if not name else os.path.join(self.root, name)
 
-    def payload_dirs(self) -> "dict[str, float]":
+    def payload_dirs(self, prefixes: tuple) -> "dict[str, float]":
         out: "dict[str, float]" = {}
         try:
             names = os.listdir(self.root)
@@ -579,7 +581,7 @@ class PosixPayloadStore(PayloadStore):
             return out
         for name in names:
             p = os.path.join(self.root, name)
-            if not os.path.isdir(p):
+            if not name.startswith(prefixes) or not os.path.isdir(p):
                 continue
             try:
                 newest = os.path.getmtime(p)
@@ -677,15 +679,16 @@ class S3PayloadStore(PayloadStore):
                 return
             token = resp.get("NextContinuationToken")
 
-    def payload_dirs(self) -> "dict[str, float]":
+    def payload_dirs(self, prefixes: tuple) -> "dict[str, float]":
         out: "dict[str, float]" = {}
         base = f"{self.prefix}/"
-        for key, mtime in self._list(base):
-            rel = key[len(base):]
-            if "/" not in rel:
-                continue
-            name = rel.split("/", 1)[0]
-            out[name] = max(out.get(name, 0.0), mtime)
+        for p in prefixes:
+            for key, mtime in self._list(base + p):
+                rel = key[len(base):]
+                if "/" not in rel:
+                    continue
+                name = rel.split("/", 1)[0]
+                out[name] = max(out.get(name, 0.0), mtime)
         return out
 
     def root_files(self) -> "list[str]":
@@ -1374,9 +1377,11 @@ class DataDirPointer:
         are also dropped. Returns removed payload locations.
 
         The payload walk goes through the :class:`PayloadStore` seam
-        (``payload_dirs`` = prefix listing with per-object mtimes,
-        ``delete_dir`` = prefix reap), so the same sweep runs against
-        a bucket exactly as against POSIX. Every payload-plane step
+        (``payload_dirs(("data-",))`` = a listing of the ``data-*``
+        dirs only, with per-object mtimes, so a converted ledger's
+        ``_versioned`` table is never walked; ``delete_dir`` = prefix
+        reap), so the same sweep runs against a bucket exactly as
+        against POSIX. Every payload-plane step
         is ADVISORY: a throttled listing or a failed delete never
         fails the sweep's caller (the next flip or sweep retries) —
         a reclaim can only ever be deferred, never forced."""
@@ -1400,12 +1405,10 @@ class DataDirPointer:
                         continue
         cutoff = time.time() - retention_seconds
         try:
-            dirs = self.payloads.payload_dirs()
+            dirs = self.payloads.payload_dirs(("data-",))
         except Exception:  # noqa: BLE001 — the sweep is advisory
             return removed  # throttled listing: reclaim next sweep
         for name in sorted(dirs):
-            if not name.startswith("data-"):
-                continue
             if dirs[name] > cutoff:
                 continue
             if self.current() == name:  # re-read: authoritative

@@ -294,12 +294,10 @@ def clean_stale_stagings(
     payloads = _payloads(root, payload_store)
     cutoff = time.time() - retention_seconds
     try:
-        dirs = payloads.payload_dirs()
+        dirs = payloads.payload_dirs(("shards-", "_shards-"))
     except Exception:  # noqa: BLE001 — the sweep is advisory
         return removed  # throttled listing: reclaim next sweep
     for name in sorted(dirs):
-        if not name.startswith(("shards-", "_shards-")):
-            continue
         if dirs[name] > cutoff:
             continue
         # authoritative re-check right before the destructive step:

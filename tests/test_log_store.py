@@ -825,25 +825,32 @@ def payloads(request, tmp_path):
 
 def test_payload_uri_roundtrip_and_dirs(payloads):
     root = payloads.uri()
-    assert payloads.payload_dirs() == {}
+    assert payloads.payload_dirs(("data-",)) == {}
     assert payloads.root_files() == []
     _write_parquet(os.path.join(payloads.uri("data-a"), "p0.parquet"), 3)
     _write_parquet(os.path.join(payloads.uri("data-a"), "p1.parquet"), 4)
     _write_parquet(os.path.join(payloads.uri("data-b"), "p0.parquet"), 2)
     with open(os.path.join(root, "loose.parquet"), "w") as fh:
         fh.write("x")
-    dirs = payloads.payload_dirs()
+    _write_parquet(os.path.join(payloads.uri("_versioned"), "t0.parquet"), 1)
+    dirs = payloads.payload_dirs(("data-",))
     assert set(dirs) == {"data-a", "data-b"}
+    assert set(payloads.payload_dirs(("",))) == {  # every dir, no loose file
+        "data-a", "data-b", "_versioned"
+    }
+    assert set(payloads.payload_dirs(("data-b", "_v"))) == {
+        "data-b", "_versioned"
+    }
     # mtimes are fresh (just written)
     import time
 
     assert all(abs(time.time() - m) < 300 for m in dirs.values())
     assert payloads.root_files() == ["loose.parquet"]
     payloads.delete_dir("data-a")
-    assert set(payloads.payload_dirs()) == {"data-b"}
+    assert set(payloads.payload_dirs(("data-",))) == {"data-b"}
     assert not os.path.exists(payloads.uri("data-a"))
     payloads.delete_dir("data-missing")  # reaping an absent dir is a no-op
-    assert set(payloads.payload_dirs()) == {"data-b"}
+    assert set(payloads.payload_dirs(("data-",))) == {"data-b"}
 
 
 def test_payload_listing_paginates(payloads):
@@ -856,11 +863,11 @@ def test_payload_listing_paginates(payloads):
         _write_parquet(
             os.path.join(payloads.uri(f"data-{i}"), "p0.parquet"), 1
         )
-    assert set(payloads.payload_dirs()) == {
+    assert set(payloads.payload_dirs(("data-",))) == {
         "data-big", *(f"data-{i}" for i in range(5))
     }
     payloads.delete_dir("data-big")
-    assert "data-big" not in payloads.payload_dirs()
+    assert "data-big" not in payloads.payload_dirs(("data-",))
     assert not os.path.exists(payloads.uri("data-big"))
 
 
@@ -887,9 +894,9 @@ def test_payload_s3_throttle_absorbed(tmp_path):
     _write_parquet(os.path.join(root, "data-a", "p0.parquet"), 3)
     for op in ("list_objects_v2", "delete_object"):
         client.inject(op, "SlowDown")
-    assert set(s.payload_dirs()) == {"data-a"}
+    assert set(s.payload_dirs(("data-",))) == {"data-a"}
     s.delete_dir("data-a")
-    assert s.payload_dirs() == {}
+    assert s.payload_dirs(("data-",)) == {}
     assert not client._faults  # every throttle retried, none escaped
 
 

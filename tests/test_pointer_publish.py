@@ -14,6 +14,7 @@ actually bought: the same behavior, byte for byte, on every store."""
 from __future__ import annotations
 
 import os
+import sys
 import threading
 
 import pytest
@@ -593,6 +594,87 @@ def test_ledger_log_store_budget_at_smoke_size(spark, tmp_path):
     assert calls[n:] == [("_versioned", "list_versions")]
 
 
+def test_ledger_pending_only_py4j_budget_at_smoke_size(spark, tmp_path):
+    """The py4j commands sent while building pending_only do not grow
+    with the batch: a 4-key and a 2,000-key batch cost the same, both
+    on a fresh handle (which builds its done-set plan) and on a handle
+    that already holds it."""
+    from jde_to_datalake_spark.plans.ledger import IdempotencyLedger
+
+    root = str(tmp_path / "led")
+    rows = "k bigint, status string"
+    IdempotencyLedger(root, key="k").merge(
+        spark, spark.createDataFrame([(k, "done") for k in range(5)], rows)
+    )
+    small = spark.createDataFrame([(k, "x") for k in range(4)], rows)
+    big = spark.createDataFrame([(k, "x") for k in range(2000)], rows)
+    client = spark.sparkContext._gateway._gateway_client  # noqa: SLF001
+    real = client.send_command
+    sent = [0]
+
+    def counting(*a, **kw):
+        sent[0] += 1
+        return real(*a, **kw)
+
+    def commands(led, batch):
+        n = sent[0]
+        led.pending_only(spark, batch)
+        return sent[0] - n
+
+    a, b = (IdempotencyLedger(root, key="k") for _ in range(2))
+    client.send_command = counting
+    try:
+        cold = (commands(a, small), commands(b, big))
+        warm = (commands(a, big), commands(b, small))
+    finally:
+        del client.send_command  # back to the class's bound method
+    assert cold[0] == cold[1], cold
+    assert warm[0] == warm[1], warm
+    assert warm[0] < cold[0]
+
+
+@pytest.mark.parametrize("leg", ["posix", "s3"])
+def test_ledger_sweep_never_walks_its_table(spark, tmp_path, monkeypatch, leg):
+    """clean_stale looks only for ``data-*`` payload dirs: the ledger's
+    ``_versioned`` table — its data files and commit records — is
+    never stat'ed (POSIX) or listed (S3), however many files it has."""
+    from jde_to_datalake_spark.plans.ledger import IdempotencyLedger
+
+    root = str(tmp_path / "led")
+    if leg == "s3":
+        log, pay, client = _dual_plane(root)
+        led = IdempotencyLedger(root, key="k", store=log, payload_store=pay)
+    else:
+        led = IdempotencyLedger(root, key="k")
+    rows = "k bigint, status string"
+    for i in range(3):
+        led.merge(spark, spark.createDataFrame([(i, "done")], rows))
+    table = os.path.join(root, IdempotencyLedger.VERSIONED_DIR)
+    n_files = sum(len(files) for _, _, files in os.walk(table))
+    assert n_files >= 6  # data files and commit records
+    touched: list = []
+    if leg == "s3":
+        real_list = client.list_objects_v2
+
+        def listing(**kw):
+            resp = real_list(**kw)
+            touched.extend(o["Key"] for o in resp.get("Contents", []))
+            return resp
+
+        monkeypatch.setattr(client, "list_objects_v2", listing)
+    else:
+        real_mtime = os.path.getmtime
+
+        def mtime(p):
+            touched.append(str(p))
+            return real_mtime(p)
+
+        monkeypatch.setattr(os.path, "getmtime", mtime)
+    assert led.clean_stale(retention_seconds=0) == []
+    # object keys carry no leading "/": match on the relative tail
+    assert [t for t in touched if "led/_versioned" in t] == []
+
+
 def test_ledger_explicit_migration_and_merge_cadence(
     spark, tmp_path, make_store
 ):
@@ -879,48 +961,102 @@ def test_ledger_merge_handles_map_typed_payload(spark, tmp_path):
     assert rows[1]["status"] == first_pick
 
 
-def test_pending_only_probe_is_file_pruned_on_versioned_backend(
-    spark, tmp_path
-):
-    """pending_only's done-probe must read only the ledger files whose
-    footer key-range can contain the batch's keys (read_where_in) —
-    O(batch-intersecting files), not O(ledger) — while returning
-    exactly the J6 anti-join result. Mirrors the band-probe plan pin
-    in test_plan_shapes."""
+def test_pending_only_is_one_lazy_anti_join(spark, tmp_path, monkeypatch):
+    """pending_only is ``batch LEFT ANTI JOIN done`` as one lazy plan:
+    the J6 result, no action on the batch (its only job is the
+    done-set read's own schema inference, paid once per version), no
+    rescan at a version it already holds, a fresh plan once another
+    handle commits, and an empty latest version raises like read."""
     from jde_to_datalake_spark.plans.ledger import IdempotencyLedger
+    from jde_to_datalake_spark.sources.versioned import VersionedTable
 
     root = str(tmp_path / "led")
     led = IdempotencyLedger(root, key="k")
+    rows = "k bigint, status string"
+    led.merge(spark, spark.createDataFrame([(k, "done") for k in range(10)], rows))
+    led.merge(spark, spark.createDataFrame([(10, "pending")], rows))
     led.merge(
         spark,
-        spark.createDataFrame(
-            [(k, "done") for k in range(10)], "k bigint, status string"
-        ),
-    )
-    led.merge(
-        spark,
-        spark.createDataFrame([(10, "pending")], "k bigint, status string"),
-    )
-    led.merge(  # disjoint key range lands in its own file(s)
-        spark,
-        spark.createDataFrame(
-            [(k, "done") for k in range(100, 110)], "k bigint, status string"
-        ),
+        spark.createDataFrame([(k, "done") for k in range(100, 110)], rows),
     )
     batch = spark.createDataFrame(
-        [(0, "x"), (1, "x"), (10, "x"), (500, "x")], "k bigint, payload string"
+        [(0, "x"), (1, "x"), (10, "x"), (500, "x"), (None, "x")],
+        "k bigint, payload string",
     )
-    out = led.pending_only(spark, batch)
-    # correctness: done keys 0,1 drop; pending 10 and unseen 500 stay
-    assert {r["k"] for r in out.collect()} == {10, 500}
-    # the probe planned over a strict SUBSET of the ledger's files —
-    # the 100-109 file(s) can't contain keys {0,1,10,500}
-    all_files = set(led.load(spark).inputFiles())
-    probe_files = set(out.inputFiles())
-    assert probe_files < all_files
-    # past the key bound the probe falls back to the full read — same
-    # result, no collect of an unbounded key list
-    led.PROBE_MAX_KEYS = 2
-    out2 = led.pending_only(spark, batch)
-    assert {r["k"] for r in out2.collect()} == {10, 500}
-    assert set(out2.inputFiles()) == all_files
+    sc = spark.sparkContext
+    scans: list = []
+    real_scan = VersionedTable._scan_files
+
+    def counting_scan(self, *a, **kw):
+        scans.append(self.root)
+        return real_scan(self, *a, **kw)
+
+    monkeypatch.setattr(VersionedTable, "_scan_files", counting_scan)
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, "")
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # a cold build starts exactly the jobs of the bare done-set read
+    # (mergeSchema inference) — nothing runs over the batch
+    _, read_jobs = jobs_of(
+        "bare-read",
+        lambda: VersionedTable(os.path.join(root, "_versioned")).read(
+            spark, merge_schema=True
+        ),
+    )
+    out, cold_jobs = jobs_of("cold", lambda: led.pending_only(spark, batch))
+    assert cold_jobs == read_jobs
+    # correctness: done keys 0,1 drop; pending 10, unseen 500 and the
+    # NULL key (no anti-join match) stay
+    assert {r["k"] for r in out.collect()} == {10, 500, None}
+    # a second call at the same version: no job, no new file scan
+    n = len(scans)
+    out2, warm_jobs = jobs_of("warm", lambda: led.pending_only(spark, batch))
+    assert warm_jobs == 0
+    assert len(scans) == n
+    # a merge through a second handle: the next call sees the new
+    # done key, and the frame built before the merge keeps its version
+    IdempotencyLedger(root, key="k").mark_done(
+        spark, spark.createDataFrame([(10,)], "k bigint")
+    )
+    n = len(scans)
+    out3 = led.pending_only(spark, batch)
+    assert len(scans) == n + 1  # one done-set plan for the new version
+    assert {r["k"] for r in out3.collect()} == {500, None}
+    # threads sharing the handle across one more commit: a race on the
+    # held plan only rebuilds it, and every frame sees the new done key
+    IdempotencyLedger(root, key="k").mark_done(
+        spark, spark.createDataFrame([(500,)], "k bigint")
+    )
+    frames: list = []
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(
+                target=lambda: frames.append(led.pending_only(spark, batch))
+            )
+            for _ in range(8)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(frames) == 8
+    assert all({r["k"] for r in f.collect()} == {None} for f in frames)
+    assert {r["k"] for r in out2.collect()} == {10, 500, None}
+    # a latest version with no files raises exactly as read does
+    vt = VersionedTable(os.path.join(root, "_versioned"))
+    vt.publish([], mode="overwrite")
+    with pytest.raises(FileNotFoundError, match="empty commit"):
+        vt.read(spark, merge_schema=True)
+    with pytest.raises(FileNotFoundError, match="empty commit"):
+        led.pending_only(spark, batch)
