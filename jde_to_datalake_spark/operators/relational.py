@@ -94,21 +94,6 @@ def exists_flag_join(
     )
 
 
-def anti_join_ledger(
-    batch: DataFrame, ledger: DataFrame, key: str, status_col: str = "status",
-    done_value: str = "done",
-) -> DataFrame:
-    """J6: drop rows whose idempotency key is already marked done.
-
-    Reference: per-row `SELECT status WHERE unique_transaction_id=%s`
-    (backend/jde_helper.py:857-867) — an N-round-trip probe; here one
-    left_anti join that AQE turns into a broadcast when the done-set is
-    small. MUST run before any side-effecting sink (SURVEY §4).
-    """
-    done = ledger.filter(F.col(status_col) == done_value).select(key)
-    return batch.join(done, key, "left_anti")
-
-
 def argmax_per_group(
     df: DataFrame, group: Column, order: Column, group_name: str
 ) -> DataFrame:

@@ -199,10 +199,10 @@ def serve(service: QueryService, host: str = "127.0.0.1", port: int = 0):
     """
 
     class Handler(BaseHTTPRequestHandler):
-        def do_GET(self):  # noqa: N802 - http.server API
+        def _reply(self, route):
             parsed = urlparse(self.path)
             try:
-                status, payload = service.handle(parsed.path, parse_qs(parsed.query))
+                status, payload = route(parsed.path, parse_qs(parsed.query))
             except Exception as e:  # noqa: BLE001 - surface as 500
                 status, payload = 500, {"error": str(e)[:500]}
             body = json.dumps(payload).encode()
@@ -212,20 +212,11 @@ def serve(service: QueryService, host: str = "127.0.0.1", port: int = 0):
             self.end_headers()
             self.wfile.write(body)
 
+        def do_GET(self):  # noqa: N802 - http.server API
+            self._reply(service.handle)
+
         def do_POST(self):  # noqa: N802 - http.server API
-            parsed = urlparse(self.path)
-            try:
-                status, payload = service.handle_post(
-                    parsed.path, parse_qs(parsed.query)
-                )
-            except Exception as e:  # noqa: BLE001 - surface as 500
-                status, payload = 500, {"error": str(e)[:500]}
-            body = json.dumps(payload).encode()
-            self.send_response(status)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
+            self._reply(service.handle_post)
 
         def log_message(self, *args):  # quiet test output
             pass

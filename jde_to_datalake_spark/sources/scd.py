@@ -28,27 +28,29 @@ key by ``ts_col``):
   than its last recorded event, so a redelivered stale upsert can
   never resurrect a deleted/closed entity with old data.
 
-Scale: the same partial-rewrite discipline as ``merge`` — the batch's
-keys are probed against footer stats, only files that can hold a
-batch key are read and rewritten, everything else is carried by
-reference; on a key-clustered dimension a B-key batch rewrites O(B)
-files regardless of how much history the table holds. A one-job probe
-skips the commit entirely when no clause would act. Snapshot-isolated
-with the ``merge``-style optimistic ``retries`` loop, and exactly-once
-from a stream via the txn-stamped ``scd2_batch_writer``.
+Scale: SCD2 shares the keyed partial rewrite of ``merge`` and
+``merge_into`` (``VersionedTable._probe_batch``, ``_publish_inserts``,
+``_publish_rewrite``) — the batch's keys are probed against footer
+stats in one job, only files that can hold a batch key are read and
+rewritten, everything else is carried by reference, and a batch no
+file can hold is appended with nothing rewritten; on a key-clustered
+dimension a B-key batch rewrites O(B) files regardless of how much
+history the table holds. A one-job probe skips the commit entirely
+when no clause would act. Snapshot-isolated with the optimistic
+``retries`` loop every keyed writer shares, and exactly-once from a
+stream via the txn-stamped ``scd2_batch_writer``.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jde_to_datalake_spark.sources.versioned import (
-    ConcurrentCommitError,
     VersionedTable,
+    _retry_on_conflict,
 )
 
 
@@ -94,26 +96,21 @@ def apply_scd2(
     missing = [c for c in need if c not in updates.columns]
     if missing:
         raise ValueError(f"apply_scd2: batch lacks column(s) {missing}")
-    attempt = 0
-    while True:
-        try:
-            return _apply_scd2_once(
-                spark,
-                table,
-                updates,
-                key,
-                list(tracked),
-                ts_col,
-                start_col,
-                end_col,
-                current_col,
-                delete_col,
-                txn,
-            )
-        except ConcurrentCommitError:
-            attempt += 1
-            if attempt > retries:
-                raise
+    return _retry_on_conflict(
+        retries,
+        _apply_scd2_once,
+        spark,
+        table,
+        updates,
+        keys,
+        list(tracked),
+        ts_col,
+        start_col,
+        end_col,
+        current_col,
+        delete_col,
+        txn,
+    )
 
 
 def _and_eq(a: str, b: str, keys: "list[str]"):
@@ -127,7 +124,7 @@ def _apply_scd2_once(
     spark,
     table,
     updates,
-    key,
+    keys,
     tracked,
     ts_col,
     start_col,
@@ -138,7 +135,6 @@ def _apply_scd2_once(
 ) -> "int | None":
     # SEQUENCE BY: latest row per key wins within the batch (NULL keys
     # are dropped — a dimension row needs an identity)
-    keys = [key] if isinstance(key, str) else list(key)
     ident = F.lit(True)
     for k in keys:
         ident = ident & F.col(k).isNotNull()
@@ -189,47 +185,18 @@ def _apply_scd2_once(
             annotations={"operation": "SCD2"},
         )
 
-    manifest = table._manifest(prev)
-    keys_phys = [table._to_physical_name(k) for k in keys]
     # key envelope (the commit-reconciliation read declaration) and
-    # footer-stat file probe in ONE job (_guarded_probe — the batch is
-    # already key-unique after the window dedup, so the guard half is
-    # vacuously satisfied; the envelope agg was previously its own
-    # collect on top of the probe's, round-9 job-fuse)
-    matchable = F.lit(True)
-    for k in keys:
-        matchable = matchable & F.col(k).isNotNull()
-    grouped = latest.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
-    env, touched, untouched = table._guarded_probe(
-        spark, grouped, keys, keys_phys, matchable, manifest
-    )
-    read_ranges = {
-        kp: (env[f"kmin_{k}"], env[f"kmax_{k}"])
-        for k, kp in zip(keys, keys_phys)
-        if env[f"kmin_{k}"] is not None
-    } or {}
+    # footer-stat file probe in ONE job — the batch is already
+    # key-unique after the window dedup, so the duplicate guard is
+    # vacuously satisfied
+    p = table._probe_batch(spark, latest, keys, prev, "apply_scd2")
+    touched = p.touched
     if not touched:
         # no file can hold a batch key: every batch row is a new key
         # (delete events for unknown keys are ignored)
-        ins = _as_dim(latest.filter(_not_deleted(latest)))
-        if ins.isEmpty():
-            return prev
-        ins = table._apply_generated(ins)
-        table._enforce_constraints(ins)
-        staged = table.stage(
-            table._align_types(
-                spark, table._to_physical_df(ins, prev), prev
-            )
-        )
-        return table.publish(
-            staged,
-            mode="overwrite",
-            expected_base=prev,
-            carry=manifest["files"],
-            read_files=[],
-            read_ranges=read_ranges,
-            txn=txn,
-            annotations={"operation": "SCD2"},
+        return table._publish_inserts(
+            spark, p, _as_dim(latest.filter(_not_deleted(latest))), txn,
+            "SCD2",
         )
 
     live = table._live_scan(spark, touched, prev)
@@ -339,17 +306,7 @@ def _apply_scd2_once(
         if name not in new_rel.columns:
             new_rel = new_rel.withColumn(name, F.expr(expr_sql))
     table._enforce_constraints(opens)
-    staged = table.stage(table._to_physical_df(new_rel, prev))
-    return table.publish(
-        staged,
-        mode="overwrite",
-        expected_base=prev,
-        carry=untouched,
-        read_files=touched,
-        read_ranges=read_ranges,
-        txn=txn,
-        annotations={"operation": "SCD2"},
-    )
+    return table._publish_rewrite(p, new_rel, txn, "SCD2")
 
 
 def scd2_batch_writer(

@@ -64,12 +64,12 @@ from __future__ import annotations
 
 import bisect
 import datetime as _dt
-import json
 import os
 import time
 import uuid
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from jde_to_datalake_spark.sources.log_store import (
@@ -85,6 +85,24 @@ class ConcurrentCommitError(RuntimeError):
     """Another writer published this version first (optimistic loser)."""
 
 
+def _retry_on_conflict(retries: int, attempt_once, *args):
+    """``attempt_once(*args)``, re-run against the fresh snapshot up
+    to ``retries`` more times while it loses a race
+    (``ConcurrentCommitError``) — Delta's optimistic-conflict retry.
+    Safe because a losing publish commits nothing (its staged files
+    are orphans ``vacuum`` reclaims) and every attempt re-reads the
+    latest version. ``retries=0`` is the fail-loudly contract for
+    callers that coordinate writers themselves."""
+    attempt = 0
+    while True:
+        try:
+            return attempt_once(*args)
+        except ConcurrentCommitError:
+            attempt += 1
+            if attempt > retries:
+                raise
+
+
 class CommitOwnershipUnknown(RuntimeError):
     """``put_if_absent`` reported a conflict but the record at that
     version could not be read back (store read errors persisting
@@ -95,6 +113,19 @@ class CommitOwnershipUnknown(RuntimeError):
     Callers must re-check table state — e.g. compare
     ``latest_version``/row counts or retry the whole operation through
     an idempotent path (txn app-id) — before re-driving the write."""
+
+
+class _KeyedBatch(NamedTuple):
+    """What a keyed writer knows about its batch before staging
+    (``VersionedTable._probe_batch``)."""
+
+    prev: "int | None"  # the version read; the publish's expected base
+    manifest: "dict | None"  # prev's manifest (None: no table yet)
+    guard: Row  # n_groups, max_n, any_match, kmin_<k>/kmax_<k>
+    keys: "list[str]"  # PHYSICAL key names
+    touched: "list[str] | None"  # files that can hold a batch key
+    untouched: "list[str] | None"  # files carried by reference
+    read_ranges: "dict | None"  # the batch's key envelope
 
 
 # publish(expected_base=...) sentinel: None is a meaningful expectation
@@ -2599,14 +2630,9 @@ class VersionedTable:
         predicate on the new snapshot is the correct outcome, and
         rows already tombstoned are never re-recorded).
         """
-        attempt = 0
-        while True:
-            try:
-                return self._delete_where_once(spark, predicate, prune_ranges)
-            except ConcurrentCommitError:
-                attempt += 1
-                if attempt > retries:
-                    raise
+        return _retry_on_conflict(
+            retries, self._delete_where_once, spark, predicate, prune_ranges
+        )
 
     def _delete_where_once(
         self, spark: SparkSession, predicate, prune_ranges: dict | None
@@ -2719,16 +2745,15 @@ class VersionedTable:
         ``merge``. A predicate matching nothing is a no-op returning
         the current version.
         """
-        attempt = 0
-        while True:
-            try:
-                return self._update_where_once(
-                    spark, assignments, predicate, prune_ranges, txn
-                )
-            except ConcurrentCommitError:
-                attempt += 1
-                if attempt > retries:
-                    raise
+        return _retry_on_conflict(
+            retries,
+            self._update_where_once,
+            spark,
+            assignments,
+            predicate,
+            prune_ranges,
+            txn,
+        )
 
     def _update_where_once(
         self, spark, assignments, predicate, prune_ranges, txn
@@ -3290,15 +3315,14 @@ class VersionedTable:
     ) -> DataFrame:
         """Cast ``df``'s columns that already exist in the table to
         the table's merged column types (PHYSICAL names on both
-        sides). The general merge path gets this coercion for free
-        from its union with the table scan; the insert-only fast
-        paths (``not touched`` / insert-only MERGE, SCD new-key
-        batches) stage the source frame directly, and WITHOUT
-        alignment a narrower source type (int batch into a bigint
-        table) writes mixed-type files whose plain-read success
-        depends on which footer Spark samples for the schema. Schema
-        resolution here is a plan-only metadata read. Extra (evolved)
-        columns pass through untouched."""
+        sides). In ``_publish_rewrite`` the union with the table scan
+        widens a narrower batch type to the table's; ``_publish_inserts``
+        stages the source frame directly, and WITHOUT alignment a
+        narrower source type (int batch into a bigint table) writes
+        mixed-type files whose plain-read success depends on which
+        footer Spark samples for the schema. Schema resolution here is
+        a plan-only metadata read. Extra (evolved) columns pass
+        through untouched."""
         files = self._manifest(version)["files"]
         if not files:
             return df
@@ -3315,104 +3339,51 @@ class VersionedTable:
         }
         return df.withColumns(casts) if casts else df
 
-    def _key_touched_files(
+    def _probe_batch(
         self,
         spark: SparkSession,
-        keys_df: DataFrame,
+        batch: DataFrame,
         key: "str | list[str]",
-        manifest: dict,
-        any_nonnull: bool = True,
-    ) -> "tuple[list[str], list[str]]":
-        """Split a manifest's files into (touched, untouched) — a file
-        is touched when its footer [min, max] for ``key`` (PHYSICAL
-        name) can hold at least one of the batch's keys. One broadcast
-        range-join job per key column: the ranges side is |files| rows
-        (metadata scale); ``keys_df`` carries the batch's distinct
-        keys. Files lacking stats for a column are conservatively kept
-        by that column's probe (unknown range = may match), so
-        correctness never depends on stats being present.
+        prev: "int | None",
+        op: str,
+        physical: bool = False,
+    ) -> _KeyedBatch:
+        """What a keyed writer (``merge``, ``merge_into``, SCD2) must
+        know about ``batch`` against version ``prev`` before it
+        stages, from ONE Spark job:
 
-        COMPOSITE keys (``key`` a list) INTERSECT the per-column
-        probes: a row matching on the full key tuple necessarily has
-        every component inside its file's per-column range, so a file
-        any single column's probe excludes can hold no match — each
-        additional key column prunes further (footer stats are
-        per-column; this is the sound per-column over-approximation of
-        tuple membership).
+        - the duplicate-key guard: a key held by two MATCHABLE rows
+          (every key component non-null) raises ``ValueError`` naming
+          ``op`` — Delta errors when several source rows match one
+          target row. A row with any NULL component matches nothing
+          under equi-join semantics (a pure insert), so it is exempt;
+        - the per-column key envelope, ``read_ranges``: the read
+          predicate the publish declares for commit reconciliation
+          (``{}`` when no row is matchable — an equi-join on NULL
+          reads nothing);
+        - the footer-stat file probe: each file's [min, max] per key
+          column becomes one row of a metadata-scale ranges relation,
+          and a broadcast range join probes the batch's DISTINCT keys
+          against it, so a file is touched only when at least one
+          batch key falls inside its range. Composite keys intersect
+          the per-column tests (a row matching the whole tuple has
+          every component inside its file's range), so each key
+          column prunes further. Files lacking stats for a column stay
+          touched (unknown range = may match).
 
-        ``any_nonnull=False`` (every batch key NULL) skips the probe:
-        an equi-join on NULL matches nothing. Both lists preserve
-        manifest order."""
+        The guard aggregate and the per-column range joins are UNIONED
+        into one relation and collected once. ``batch`` speaks logical
+        names unless ``physical``; footer stats, ``keys`` and
+        ``read_ranges`` are physical. With no table yet (``prev`` None)
+        only the guard runs and ``touched``/``untouched`` are None."""
         keys = [key] if isinstance(key, str) else list(key)
-        manifest_files = manifest["files"]
-        file_stats = manifest.get("stats", {})
-        if not any_nonnull:
-            # no matchable batch key: nothing can touch ranged files,
-            # and stat-less files cannot match a NULL key either
-            return ([], list(manifest_files))
-        candidates = set(manifest_files)
-        for kc in keys:
-            ranged = []
-            for f in manifest_files:
-                if f not in candidates:
-                    continue
-                st = file_stats.get(f, {}).get(kc)
-                if st is not None:
-                    ranged.append((f, st[0], st[1]))
-                # no stats for this column: stays a candidate
-            if not ranged:
-                continue
-            rdf = spark.createDataFrame(ranged, ["__file", "__mn", "__mx"])
-            hits = {
-                r["__file"]
-                for r in keys_df.select(F.col(kc).alias("__k"))
-                .dropna()
-                .distinct()
-                .join(
-                    F.broadcast(rdf),
-                    (F.col("__k") >= F.col("__mn"))
-                    & (F.col("__k") <= F.col("__mx")),
-                )
-                .select("__file")
-                .distinct()
-                .collect()
-            }
-            candidates -= {f for f, _mn, _mx in ranged if f not in hits}
-        return (
-            [f for f in manifest_files if f in candidates],
-            [f for f in manifest_files if f not in candidates],
-        )
-
-    def _guarded_probe(
-        self,
-        spark: SparkSession,
-        grouped: DataFrame,
-        keys: "list[str]",
-        keys_phys: "list[str]",
-        matchable,
-        manifest: "dict | None",
-    ):
-        """ONE Spark job for everything a MERGE must know about its
-        batch before staging: the duplicate-key guard (max per-key
-        multiplicity), the per-column key envelope (the commit-
-        reconciliation read declaration), and the footer-stat file
-        probe (touched/untouched split). The guard aggregate and the
-        per-column broadcast range joins are UNIONED into one relation
-        and collected once — the guard was previously its own job on
-        top of the probe's (round-8 judge #7: one job, not just one
-        pass; ``grouped`` derives from the caller's checkpointed
-        batch, so the computation was already shared — this removes
-        the extra job launch).
-
-        ``grouped`` must be ``batch.groupBy(*keys).agg(count → __n)``.
-        ``keys`` name its columns; ``keys_phys`` name the footer
-        stats. Returns ``(guard_row, touched, untouched)`` —
-        touched/untouched are None when ``manifest`` is None (no
-        table yet: guard only). Files lacking stats for a column stay
-        touched by that column's probe (conservative), matching
-        ``_key_touched_files``; per-column exclusions are intersected
-        driver-side, which is set-algebraically identical to its
-        sequential candidate shrinking."""
+        keys_phys = [self._to_physical_name(k, prev) for k in keys]
+        if physical:
+            keys = keys_phys
+        matchable = F.lit(True)
+        for k in keys:
+            matchable = matchable & F.col(k).isNotNull()
+        grouped = batch.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
         stats_df = grouped.agg(
             F.count(F.lit(1)).alias("n_groups"),
             F.max(F.when(matchable, F.col("__n"))).alias("max_n"),
@@ -3425,6 +3396,7 @@ class VersionedTable:
             F.lit(None).cast("string").alias("__file"),
             "*",
         )
+        manifest = self._manifest(prev) if prev is not None else None
         ranged_by_col: "list[list[str]]" = []
         combined = stats_df
         if manifest is not None:
@@ -3457,21 +3429,118 @@ class VersionedTable:
                 )
         rows = combined.collect()
         guard = next(r for r in rows if r["__col"] == -1)
-        if manifest is None:
-            return guard, None, None
-        mf = manifest["files"]
-        if not bool(guard["any_match"]) or guard["n_groups"] == 0:
-            # no matchable key: an equi-join on NULL matches nothing —
-            # stat-less files cannot match either
-            return guard, [], list(mf)
-        hits = {(r["__col"], r["__file"]) for r in rows if r["__col"] >= 0}
-        excluded: set = set()
-        for i, flist in enumerate(ranged_by_col):
-            excluded |= {f for f in flist if (i, f) not in hits}
-        return (
-            guard,
-            [f for f in mf if f not in excluded],
-            [f for f in mf if f in excluded],
+        if guard["max_n"] is not None and guard["max_n"] > 1:
+            dup = (
+                grouped.filter(F.col("__n") > 1)
+                .filter(matchable)
+                .limit(1)
+                .collect()
+            )
+            dupkey = tuple(dup[0][k] for k in keys)
+            raise ValueError(
+                f"{op}: batch contains duplicate key "
+                f"{dupkey if len(keys) > 1 else dupkey[0]!r} — a key may "
+                "match at most one batch row (Delta MERGE contract); "
+                "dedupe the batch first"
+            )
+        any_match = bool(guard["any_match"])
+        read_ranges = (
+            {
+                kp: (guard[f"kmin_{k}"], guard[f"kmax_{k}"])
+                for k, kp in zip(keys, keys_phys)
+            }
+            if any_match
+            else {}
+        )
+        touched = untouched = None
+        if manifest is not None:
+            mf = manifest["files"]
+            # no matchable key: an equi-join on NULL matches nothing,
+            # so even stat-less files stay untouched
+            excluded = set(mf)
+            if any_match:
+                hits = {
+                    (r["__col"], r["__file"]) for r in rows if r["__col"] >= 0
+                }
+                excluded = {
+                    f
+                    for i, flist in enumerate(ranged_by_col)
+                    for f in flist
+                    if (i, f) not in hits
+                }
+            touched = [f for f in mf if f not in excluded]
+            untouched = [f for f in mf if f in excluded]
+        return _KeyedBatch(
+            prev, manifest, guard, keys_phys, touched, untouched, read_ranges
+        )
+
+    def _publish_inserts(
+        self,
+        spark: SparkSession,
+        p: _KeyedBatch,
+        rows: DataFrame,
+        txn,
+        op: str,
+        read_files: "list[str] | None" = None,
+        physical: bool = False,
+    ) -> int:
+        """The insert-only keyed write: nothing existing changes, so
+        ``rows`` are staged as new files and EVERY file of ``p.prev``
+        is carried by reference. Logical ``rows`` get their generated
+        columns filled, CHECK constraints enforced and names mapped
+        to physical first (``physical``: the caller already did all
+        three). ``read_files`` are the files scanned to find the
+        inserts (none when no file can hold a batch key). Zero staged
+        rows publish nothing and return ``p.prev``."""
+        if not physical:
+            rows = self._apply_generated(rows)
+            self._enforce_constraints(rows)
+            rows = self._to_physical_df(rows, p.prev)
+        staged = self.stage(self._align_types(spark, rows, p.prev))
+        if not staged or self.data.parquet_row_count(staged[0]) == 0:
+            self.discard(staged)
+            return p.prev
+        return self.publish(
+            staged,
+            mode="overwrite",
+            expected_base=p.prev,
+            carry=p.manifest["files"],
+            txn=txn,
+            annotations={"operation": op},
+            read_files=read_files or [],
+            read_ranges=p.read_ranges,
+        )
+
+    def _publish_rewrite(
+        self,
+        p: _KeyedBatch,
+        rows: DataFrame,
+        txn,
+        op: str,
+        physical: bool = False,
+    ) -> int:
+        """The partial-rewrite keyed write: ``rows`` (logical unless
+        ``physical``) replace the live rows of ``p.touched``, every
+        untouched file is carried by reference, and the publish
+        declares the probe's read set (the touched files and the key
+        envelope) for commit reconciliation. A rewrite that deletes
+        every touched row publishes the carried files alone, not an
+        empty part."""
+        staged = self.stage(
+            rows if physical else self._to_physical_df(rows, p.prev)
+        )
+        if not staged or self.data.parquet_row_count(staged[0]) == 0:
+            self.discard(staged)
+            staged = []
+        return self.publish(
+            staged,
+            mode="overwrite",
+            expected_base=p.prev,
+            carry=p.untouched,
+            txn=txn,
+            annotations={"operation": op},
+            read_files=p.touched,
+            read_ranges=p.read_ranges,
         )
 
     def merge(
@@ -3506,23 +3575,22 @@ class VersionedTable:
         reconciliation contract). ``retries``: when the intervening
         commit genuinely overlaps (``ConcurrentCommitError``), re-run
         the whole merge against the NEW snapshot up to this many times
-        — Delta's optimistic-conflict retry. Safe because a losing
-        publish commits nothing (its staged files are orphans vacuum
-        reclaims) and a MERGE re-resolved against the fresher snapshot
-        is the semantically correct outcome. Default 0 preserves the
-        fail-loudly contract for callers that coordinate writers
-        themselves.
+        — Delta's optimistic-conflict retry; a MERGE re-resolved
+        against the fresher snapshot is the semantically correct
+        outcome. Default 0 preserves the fail-loudly contract for
+        callers that coordinate writers themselves.
 
-        The partial-rewrite form of Delta's file-level MERGE: each
-        file's footer [min, max] for ``key`` becomes one row of a
-        metadata-scale ranges relation, and a single broadcast range
-        join probes the batch's DISTINCT keys against it — a file is
-        touched only when at least one batch key falls inside its
-        range. Untouched files are carried into the new version BY
-        REFERENCE (``publish(carry=...)``); only touched files are
-        read, anti-joined, and rewritten. Per-key membership (not
-        batch-range overlap) matters because hash-valued keys span the
-        whole key space in any batch: on a table kept key-clustered
+        The partial-rewrite form of Delta's file-level MERGE, shared
+        with ``merge_into`` and SCD2: one Spark job probes the batch's
+        DISTINCT keys against every file's footer [min, max] for
+        ``key``, so a file is touched only when at least one batch key
+        falls inside its range. Untouched files are carried into the
+        new version BY REFERENCE (``publish(carry=...)``); only touched
+        files are read, anti-joined, and rewritten, and when no file
+        can hold a batch key the batch is appended with nothing
+        rewritten. Per-key membership (not batch-range overlap)
+        matters because hash-valued keys span the whole key space in
+        any batch: on a table kept key-clustered
         (``compact(cluster_by=key)``) a B-key micro-batch rewrites at
         most B files, not O(corpus) — the property that makes
         continuous ingestion viable at 100 TB. Files lacking stats for
@@ -3546,24 +3614,12 @@ class VersionedTable:
           (snapshot isolation): an intervening commit fails this merge
           instead of being silently overwritten.
         """
-        attempt = 0
-        while True:
-            try:
-                return self._merge_once(spark, updates, key, txn)
-            except ConcurrentCommitError:
-                attempt += 1
-                if attempt > retries:
-                    raise
+        return _retry_on_conflict(
+            retries, self._merge_once, spark, updates, key, txn
+        )
 
     def _merge_once(self, spark, updates, key, txn) -> int:
         prev = self.latest_version()
-        # one job: duplicate-key guard + the batch key floor. NULL keys
-        # are exempt from the guard: they match no existing row under
-        # equi-join semantics (pure inserts), so several NULL-key rows
-        # cannot violate the one-match-per-key invariant — Delta's rule.
-        # The guard runs BEFORE the empty-table fast path: a first
-        # merge must reject duplicate keys exactly like every later one
-        # (round-5 self-review finding).
         # everything below operates in PHYSICAL column names: the
         # updates frame (logical, like every caller-facing surface) is
         # translated once, the key follows, and the internal raw scans
@@ -3574,56 +3630,19 @@ class VersionedTable:
         # reference them).
         updates = self._apply_generated(updates)
         self._enforce_constraints(updates)
-        updates = self._to_physical_df(updates)
+        updates = self._to_physical_df(updates, prev)
         # three consumers read the batch (dup-guard/envelope agg, the
         # key probe, the final anti-join + stage): a lazy local
         # checkpoint computes it once and shares blocks instead of
-        # re-running the source plan per job (round-7 advisor: one
-        # full source pass saved per call)
+        # re-running the source plan per job
         updates = updates.localCheckpoint(eager=False)
-        keys = [key] if isinstance(key, str) else list(key)
-        keys = [self._to_physical_name(k) for k in keys]
-        # a row is MATCHABLE when every key component is non-null —
-        # composite equality with any NULL component matches no row
-        # (SQL equi-join semantics), so such rows are pure inserts and
-        # exempt from the duplicate guard (Delta's rule)
-        matchable = F.lit(True)
-        for k in keys:
-            matchable = matchable & F.col(k).isNotNull()
-        grouped = updates.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
-        # guard + envelope + file probe in ONE job (_guarded_probe);
-        # grouped is already physical-named, so probe names == agg names
-        manifest = self._manifest(prev) if prev is not None else None
-        s, touched, untouched = self._guarded_probe(
-            spark, grouped, keys, keys, matchable, manifest
+        # the guard runs BEFORE the empty-table path: a first merge
+        # must reject duplicate keys exactly like every later one
+        p = self._probe_batch(
+            spark, updates, key, prev, "merge", physical=True
         )
-        if s["n_groups"] == 0:
+        if p.guard["n_groups"] == 0:
             return prev  # empty batch: nothing to merge (None if no table yet)
-        any_matchable = bool(s["any_match"])
-        # the read predicate this merge declares for commit
-        # reconciliation: only rows whose key falls inside the batch's
-        # per-column key envelope could have changed its outcome; an
-        # all-NULL-key batch reads nothing (equi-join on NULL matches
-        # no row)
-        read_ranges = (
-            {k: (s[f"kmin_{k}"], s[f"kmax_{k}"]) for k in keys}
-            if any_matchable
-            else {}
-        )
-        if s["max_n"] is not None and s["max_n"] > 1:
-            dup = (
-                grouped.filter(F.col("__n") > 1)
-                .filter(matchable)
-                .limit(1)
-                .collect()
-            )
-            dupkey = tuple(dup[0][k] for k in keys)
-            raise ValueError(
-                f"merge: updates contain duplicate key "
-                f"{dupkey if len(keys) > 1 else dupkey[0]!r} — "
-                "a key may match at most one update row (Delta MERGE "
-                "contract); dedupe the batch first"
-            )
         if prev is None:
             return self.commit(
                 updates,
@@ -3633,34 +3652,24 @@ class VersionedTable:
                 _physical=True,
                 annotations={"operation": "MERGE"},
             )
-        if not touched:
-            return self.publish(
-                self.stage(self._align_types(spark, updates, prev)),
-                mode="overwrite",
-                expected_base=prev,
-                carry=untouched,
-                txn=txn,
-                annotations={"operation": "MERGE"},
-                read_files=[],
-                read_ranges=read_ranges,
+        if not p.touched:
+            return self._publish_inserts(
+                spark, p, updates, txn, "MERGE", physical=True
             )
         current = self._apply_dvs(
-            self._scan_files(spark, touched, True, prev),
+            self._scan_files(spark, p.touched, True, prev),
             spark,
             prev,
         )
         kept = current.join(
-            updates.select(*keys).distinct(), keys, "left_anti"
+            updates.select(*p.keys).distinct(), p.keys, "left_anti"
         )
-        return self.publish(
-            self.stage(kept.unionByName(updates, allowMissingColumns=True)),
-            mode="overwrite",
-            expected_base=prev,
-            carry=untouched,
-            txn=txn,
-            annotations={"operation": "MERGE"},
-            read_files=touched,
-            read_ranges=read_ranges,
+        return self._publish_rewrite(
+            p,
+            kept.unionByName(updates, allowMissingColumns=True),
+            txn,
+            "MERGE",
+            physical=True,
         )
 
     # -- full-clause MERGE --------------------------------------------------
@@ -3715,12 +3724,14 @@ class VersionedTable:
         inserted rows.
 
         Scale shape: without ``not_matched_by_source`` clauses, the
-        same footer-stat key probe as ``merge`` bounds the rewrite to
-        files that can hold a source key (and a matched-/nbs-free
-        call rewrites NOTHING — inserts are appended, all existing
-        files carried by reference). ``not_matched_by_source``
-        inspects every target row by definition, so those calls
-        rewrite all files — exactly Delta's cost for the same clause.
+        footer-stat key probe ``merge`` and SCD2 share bounds the
+        rewrite to files that can hold a source key, and a call that
+        changes no existing row (no file can hold a source key, or no
+        ``matched`` clause) rewrites NOTHING — inserts are appended,
+        all existing files carried by reference.
+        ``not_matched_by_source`` inspects every target row by
+        definition, so those calls rewrite all files — exactly Delta's
+        cost for the same clause.
 
         Source rows must be key-unique (duplicate keys raise — Delta
         errors when multiple source rows match one target row); NULL
@@ -3750,16 +3761,17 @@ class VersionedTable:
                         "AS (...) — assign their source columns and the "
                         "expressions recompute them"
                     )
-        attempt = 0
-        while True:
-            try:
-                return self._merge_into_once(
-                    spark, source, key, matched, not_matched, nbs, txn
-                )
-            except ConcurrentCommitError:
-                attempt += 1
-                if attempt > retries:
-                    raise
+        return _retry_on_conflict(
+            retries,
+            self._merge_into_once,
+            spark,
+            source,
+            key,
+            matched,
+            not_matched,
+            nbs,
+            txn,
+        )
 
     @staticmethod
     def _norm_clause(c, allowed: tuple) -> tuple:
@@ -3793,41 +3805,13 @@ class VersionedTable:
         keys = [key] if isinstance(key, str) else list(key)
         # the source feeds the guard/envelope agg, the key probe, the
         # full-outer join, and the insert projection: lazily
-        # checkpoint it once (round-7 advisor: one fewer full source
-        # pass per call)
+        # checkpoint it once (one fewer full source pass per call)
         source = source.localCheckpoint(eager=False)
-        # duplicate-source-key guard + key floor, one job. A source
-        # row with ANY null key component matches nothing (composite
-        # equi-join semantics) — pure insert candidate, exempt from
-        # the guard (Delta's rule).
-        matchable = F.lit(True)
-        for k in keys:
-            matchable = matchable & F.col(k).isNotNull()
-        grouped = source.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
-        # guard + envelope + file probe in ONE job (_guarded_probe).
-        # The probe half is wasted work only when a by-source clause
-        # forces a full rewrite anyway (nbs) — metadata-scale joins,
-        # not worth a second code path.
-        keys_phys = [self._to_physical_name(k) for k in keys]
-        manifest = self._manifest(prev) if prev is not None else None
-        s, probe_touched, probe_untouched = self._guarded_probe(
-            spark, grouped, keys, keys_phys, matchable, manifest
-        )
-        any_matchable = bool(s["any_match"])
-        if s["max_n"] is not None and s["max_n"] > 1:
-            dup = (
-                grouped.filter(F.col("__n") > 1)
-                .filter(matchable)
-                .limit(1)
-                .collect()
-            )
-            dupkey = tuple(dup[0][k] for k in keys)
-            raise ValueError(
-                f"merge_into: source contains duplicate key "
-                f"{dupkey if len(keys) > 1 else dupkey[0]!r} — "
-                "multiple source rows may not match one target row (Delta "
-                "MERGE contract); dedupe the source first"
-            )
+        # guard + envelope + file probe in ONE job. The probe half is
+        # wasted work only when a by-source clause forces a full
+        # rewrite anyway (nbs) — metadata-scale joins, not worth a
+        # second code path.
+        p = self._probe_batch(spark, source, key, prev, "merge_into")
 
         def _inserts_of(frame_with_aliases, bare: bool):
             """Source rows passing any insert clause. ``bare``: the
@@ -3842,12 +3826,13 @@ class VersionedTable:
             out = frame_with_aliases.filter(cond)
             if not bare:
                 out = out.select("s.*")
-            return self._apply_generated(out.drop("__src"))
+            return out.drop("__src")
 
+        src = source.withColumn("__src", F.lit(True)).alias("s")
         if prev is None:
             # no table yet: only not_matched clauses can act
-            ins = _inserts_of(source.withColumn("__src", F.lit(True)).alias("s"), bare=True)
-            if ins is None or s["n_groups"] == 0:
+            ins = _inserts_of(src, bare=True)
+            if ins is None or p.guard["n_groups"] == 0:
                 return prev
             return self.commit(
                 ins,
@@ -3857,61 +3842,37 @@ class VersionedTable:
                 annotations={"operation": "MERGE"},
             )
 
-        if s["n_groups"] == 0 and not nbs:
+        if p.guard["n_groups"] == 0 and not nbs:
             return prev  # empty source, no by-source clause: no-op
         if nbs:
             # a by-source clause inspects EVERY target row: all files
             # are candidates (Delta pays the same full-rewrite cost)
-            touched, untouched = list(manifest["files"]), []
             # ... and ABSENCE from the source matters, so a concurrent
             # add of any row could change the outcome: the read
             # predicate is unbounded (reconciliation always re-runs)
-            read_ranges = None
-        else:
-            touched, untouched = probe_touched, probe_untouched
-            read_ranges = (
-                {
-                    kp: (s[f"kmin_{k}"], s[f"kmax_{k}"])
-                    for k, kp in zip(keys, keys_phys)
-                }
-                if any_matchable
-                else {}
+            p = p._replace(
+                touched=list(p.manifest["files"]),
+                untouched=[],
+                read_ranges=None,
             )
+        touched = p.touched
 
-        def _publish_staged(staged, carry, read_files):
-            if not staged or all(
-                self.data.parquet_row_count(f) == 0 for f in staged
-            ):
-                # nothing changed: drop the empty commit entirely
-                self.discard(staged)
-                return prev
-            return self.publish(
-                staged,
-                mode="overwrite",
-                expected_base=prev,
-                carry=carry,
-                txn=txn,
-                annotations={"operation": "MERGE"},
-                read_files=read_files,
-                read_ranges=read_ranges,
-            )
-
-        if not touched:
-            # no file can hold a source key: pure insert (if any)
-            ins = _inserts_of(
-                source.withColumn("__src", F.lit(True)).alias("s"), bare=True
-            )
+        if not touched or not (matched or nbs):
+            # nothing existing changes: append the inserts (source rows
+            # whose key no touched row holds), carry every file
+            if touched:
+                src = src.join(
+                    self._live_scan(spark, touched, prev)
+                    .select(*[F.col(k) for k in keys])
+                    .distinct(),
+                    on=keys,
+                    how="left_anti",
+                )
+            ins = _inserts_of(src, bare=True)
             if ins is None:
                 return prev
-            self._enforce_constraints(ins)
-            return _publish_staged(
-                self.stage(
-                    self._align_types(
-                        spark, self._to_physical_df(ins, prev), prev
-                    )
-                ),
-                manifest["files"],
-                read_files=[],
+            return self._publish_inserts(
+                spark, p, ins, txn, "MERGE", read_files=touched
             )
 
         live = self._live_scan(spark, touched, prev)
@@ -3922,40 +3883,12 @@ class VersionedTable:
         live = live.localCheckpoint(eager=False)
         tcols = list(live.columns)
 
-        if not matched and not nbs:
-            # insert-only MERGE: nothing existing changes, so rewrite
-            # NOTHING — anti-join the source against the (pruned)
-            # touched keys and append, carrying every file by reference
-            ins_cand = (
-                source.withColumn("__src", F.lit(True))
-                .alias("s")
-                .join(
-                    live.select(*[F.col(k) for k in keys]).distinct(),
-                    on=keys,
-                    how="left_anti",
-                )
-            )
-            ins = _inserts_of(ins_cand, bare=True)
-            if ins is None:
-                return prev
-            self._enforce_constraints(ins)
-            return _publish_staged(
-                self.stage(
-                    self._align_types(
-                        spark, self._to_physical_df(ins, prev), prev
-                    )
-                ),
-                manifest["files"],
-                read_files=touched,
-            )
-
         # general path: one full-outer join over the touched rows
         t = live.withColumn("__tgt", F.lit(True)).alias("t")
-        srcj = source.withColumn("__src", F.lit(True)).alias("s")
         jcond = F.lit(True)
         for k in keys:
             jcond = jcond & (F.col(f"t.`{k}`") == F.col(f"s.`{k}`"))
-        j = t.join(srcj, jcond, "full_outer")
+        j = t.join(src, jcond, "full_outer")
 
         def _first_match(clauses, prefix):
             expr = F.lit(None).cast("string")
@@ -4060,31 +3993,16 @@ class VersionedTable:
                 rewritten = rewritten.withColumn(name, F.expr(expr_sql))
         ins = _inserts_of(j.filter(F.col("__tgt").isNull()), bare=False)
         changed = rewritten.filter(F.col("__act").isNotNull()).drop("__act")
-        if ins is not None:
-            changed = changed.unionByName(ins, allowMissingColumns=True)
-        self._enforce_constraints(changed)
         final = rewritten.drop("__act")
         if ins is not None:
+            ins = self._apply_generated(ins)
+            changed = changed.unionByName(ins, allowMissingColumns=True)
             final = final.unionByName(ins, allowMissingColumns=True)
-        staged = self.stage(self._to_physical_df(final, prev))
-        # a clause CAN delete every touched row: publish the shrunken
-        # file set rather than empty part files (empty staged parts are
-        # dropped; publish([]) + carry is the legitimate all-deleted
-        # outcome — the probe above already ruled out the no-op case)
-        keep = [
-            f for f in staged if self.data.parquet_row_count(f) > 0
-        ]
-        self.discard([f for f in staged if f not in keep])
-        return self.publish(
-            keep,
-            mode="overwrite",
-            expected_base=prev,
-            carry=untouched,
-            txn=txn,
-            annotations={"operation": "MERGE"},
-            read_files=touched,
-            read_ranges=read_ranges,
-        )
+        self._enforce_constraints(changed)
+        # a clause CAN delete every touched row: the rewrite then
+        # publishes the shrunken file set (the probe above already
+        # ruled out the no-op case)
+        return self._publish_rewrite(p, final, txn, "MERGE")
 
     # -- streaming sink ---------------------------------------------------
     def foreach_batch_writer(self, mode: str = "append", key: str | None = None):

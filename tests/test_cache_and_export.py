@@ -1,63 +1,16 @@
-"""T5 TTL result cache, S13 export sink, F3 unit validation."""
+"""S13 export sink, F3 unit validation, plan-shape checks."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from jde_to_datalake_spark.functions.scalars import validate_unit
-from jde_to_datalake_spark.plans.result_cache import ResultCache, request_key
 from jde_to_datalake_spark.session import load_table
 from jde_to_datalake_spark.sources.excel import ExportTooLargeError, export_result
 from tests.conftest import SF_DIR
-
-
-def test_request_key_normalization():
-    k1 = request_key("/data/x", {"b": 2, "a": 1})
-    k2 = request_key("/data/x", {"a": 1, "b": 2})
-    k3 = request_key("/data/x", {"a": 1, "b": 3})
-    assert k1 == k2 and k1 != k3 and len(k1) == 64
-
-
-def test_result_cache_roundtrip(spark, tmp_path):
-    cache = ResultCache(str(tmp_path / "cache"), ttl_seconds=3600)
-    key = request_key("/data/nation_count")
-    nation = load_table(spark, SF_DIR, "nation")
-
-    calls = {"n": 0}
-
-    def compute():
-        calls["n"] += 1
-        return nation.groupBy("n_regionkey").count()
-
-    r1, hit1 = cache.get_or_compute(spark, key, compute)
-    r2, hit2 = cache.get_or_compute(spark, key, compute)
-    assert (not hit1) and hit2 and calls["n"] == 1
-    assert sorted(map(tuple, r1.collect())) == sorted(map(tuple, r2.collect()))
-
-
-def test_result_cache_ttl_expiry_and_empty_not_cached(spark, tmp_path):
-    cache = ResultCache(str(tmp_path / "cache"), ttl_seconds=3600)
-    nation = load_table(spark, SF_DIR, "nation")
-
-    empty_key = request_key("/data/empty")
-    cache.store(empty_key, nation.filter(F.lit(False)))
-    assert cache.lookup(spark, empty_key) is None  # empty -> not cached
-
-    key = request_key("/data/n")
-    cache.store(key, nation.limit(3))
-    # age the entry artificially past the TTL
-    meta = os.path.join(str(tmp_path / "cache"), key, "_cache_meta.json")
-    with open(meta) as f:
-        m = json.load(f)
-    m["created_at"] -= 7200
-    with open(meta, "w") as f:
-        json.dump(m, f)
-    assert cache.lookup(spark, key) is None
-    assert cache.evict_expired() == 1
 
 
 def test_export_result_and_size_guard(spark, tmp_path):

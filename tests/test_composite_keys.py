@@ -79,14 +79,14 @@ def test_composite_merge_null_key_rows_are_pure_inserts(spark, table):
 
 def test_composite_probe_prunes_files(spark, table):
     _base(spark, table)
-    m = table._manifest(table.latest_version())
     keys_df = spark.createDataFrame([(0, 0)], ["a", "b"])
-    touched, untouched = table._key_touched_files(
-        spark, keys_df, ["a", "b"], m
+    p = table._probe_batch(
+        spark, keys_df, ["a", "b"], table.latest_version(), "merge"
     )
-    assert touched and untouched  # the probe pruned a real subset
+    m = p.manifest
+    assert p.touched and p.untouched  # the probe pruned a real subset
     # every untouched file is provably range-disjoint on a or b
-    for f in untouched:
+    for f in p.untouched:
         sa = m["stats"][f].get("a")
         sb = m["stats"][f].get("b")
         assert (sa and not sa[0] <= 0 <= sa[1]) or (
@@ -235,13 +235,16 @@ def test_read_changes_null_key_rows_are_delete_insert(spark, table):
 
 def test_merge_guard_and_probe_share_one_job(spark, tmp_path):
     """The duplicate-key guard, the key-envelope aggregate, and the
-    footer-stat file probe ride ONE Spark job (_guarded_probe): the
+    footer-stat file probe ride ONE Spark job (_probe_batch): the
     guard was previously its own collect on top of the per-column
-    probe jobs (round-8 judge #7). Measured on this suite's pinned
-    session: single-key merge 12 -> 11 jobs, composite 15 -> 14 —
-    the upper bounds below regress if the guard job reappears."""
+    probe jobs. Measured on this suite's pinned session: single-key
+    merge 12 -> 11 jobs, composite 15 -> 14 — the upper bounds below
+    regress if the guard job reappears. The merge_into (matched
+    update plus insert) and apply_scd2 legs hold the other two keyed
+    writers on the same probe to their measured job counts."""
     from pyspark.sql import functions as F
 
+    from jde_to_datalake_spark.sources.scd import apply_scd2
     from jde_to_datalake_spark.sources.versioned import VersionedTable
 
     sc = spark.sparkContext
@@ -255,30 +258,78 @@ def test_merge_guard_and_probe_share_one_job(spark, tmp_path):
         df.repartitionByRange(4, "k").sortWithinPartitions("k"),
         mode="overwrite",
     )
-    try:
-        sc.setJobGroup("merge-jobs-single", "")
-        t.merge(
+    dim = VersionedTable(str(tmp_path / "dim"))
+    apply_scd2(
+        spark,
+        dim,
+        spark.range(0, 100).select(
+            F.col("id").alias("k"),
+            (F.col("id") % 7).alias("v"),
+            F.lit(1).cast("long").alias("ts"),
+        ),
+        "k",
+        ["v"],
+        "ts",
+    )
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, "")
+        try:
+            fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    n_single = jobs(
+        "merge-jobs-single",
+        lambda: t.merge(
             spark,
             spark.createDataFrame([(95, 1, -1), (97, 2, -2)], ["k", "g", "v"]),
             "k",
-        )
-        n_single = len(
-            sc.statusTracker().getJobIdsForGroup("merge-jobs-single")
-        )
-        sc.setJobGroup("merge-jobs-composite", "")
-        t.merge(
+        ),
+    )
+    n_comp = jobs(
+        "merge-jobs-composite",
+        lambda: t.merge(
             spark,
             spark.createDataFrame([(12, 2, -3)], ["k", "g", "v"]),
             ["k", "g"],
-        )
-        n_comp = len(
-            sc.statusTracker().getJobIdsForGroup("merge-jobs-composite")
-        )
-    finally:
-        sc.setJobGroup(None, None)
+        ),
+    )
+    n_into = jobs(
+        "merge-jobs-merge-into",
+        lambda: t.merge_into(
+            spark,
+            spark.createDataFrame([(40, 0, -4), (500, 0, -5)], ["k", "g", "v"]),
+            "k",
+            matched=[("update", None, {"v": "s.v"})],
+            not_matched=[("insert", None)],
+        ),
+    )
+    n_scd = jobs(
+        "merge-jobs-scd2",
+        lambda: apply_scd2(
+            spark,
+            dim,
+            spark.createDataFrame([(3, 99, 2), (300, 1, 2)], ["k", "v", "ts"]),
+            "k",
+            ["v"],
+            "ts",
+        ),
+    )
     assert n_single <= 11, n_single
     assert n_comp <= 14, n_comp
-    # and the merges themselves were correct
+    assert n_into <= 17, n_into
+    assert n_scd <= 22, n_scd
+    # and the writes themselves were correct
     got = {r["k"]: r["v"] for r in t.read(spark).collect()}
     assert got[95] == -1 and got[97] == -2 and got[12] == -3
-    assert len(got) == 100
+    assert got[40] == -4 and got[500] == -5
+    assert len(got) == 101
+    cur = {
+        r["k"]: r["v"]
+        for r in dim.read(spark).collect()
+        if r["is_current"]
+    }
+    assert cur[3] == 99 and cur[300] == 1 and cur[4] == 4
+    assert len(cur) == 101

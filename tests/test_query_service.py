@@ -101,3 +101,48 @@ def test_explain_endpoint_returns_physical_plan(service_url):
             raise AssertionError(f"expected {expected}")
         except urllib.error.HTTPError as e:
             assert e.code == expected
+
+
+def _request(url: str, method: str = "GET"):
+    req = urllib.request.Request(url, method=method)
+    try:
+        with urllib.request.urlopen(req, timeout=60) as r:
+            return r.status, r.headers["Content-Type"], json.loads(r.read())
+    except urllib.error.HTTPError as e:
+        return e.code, e.headers["Content-Type"], json.loads(e.read())
+
+
+def test_get_and_post_share_one_json_reply_path(spark):
+    """Over a real socket: a refused POST and a raising handler of
+    either verb both come back as JSON bodies with their status."""
+    from jde_to_datalake_spark.plans.query_service import QueryService, serve
+
+    svc = QueryService(spark, SF_DIR, {}, enable_sql=False)
+    server = serve(svc)
+    host, port = server.server_address
+    base = f"http://{host}:{port}"
+
+    def boom(path, params):
+        raise RuntimeError(f"handler exploded on {path}")
+
+    try:
+        assert _request(f"{base}/maintenance/compact?root=x", "POST") == (
+            403,
+            "application/json",
+            {"error": "maintenance endpoints disabled"},
+        )
+        svc.handle = boom
+        svc.handle_post = boom
+        assert _request(f"{base}/queries") == (
+            500,
+            "application/json",
+            {"error": "handler exploded on /queries"},
+        )
+        assert _request(f"{base}/maintenance/compact", "POST") == (
+            500,
+            "application/json",
+            {"error": "handler exploded on /maintenance/compact"},
+        )
+    finally:
+        server.shutdown()
+        server.server_close()
