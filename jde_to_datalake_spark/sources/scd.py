@@ -306,7 +306,7 @@ def _apply_scd2_once(
         if name not in new_rel.columns:
             new_rel = new_rel.withColumn(name, F.expr(expr_sql))
     table._enforce_constraints(opens)
-    return table._publish_rewrite(p, new_rel, txn, "SCD2")
+    return table._publish_rewrite(p, new_rel, live, txn, "SCD2")
 
 
 def scd2_batch_writer(

@@ -49,11 +49,15 @@ new files' footer stats, this commit's txn stamps, and any schema-
 metadata change — so commit metadata is O(changed files), never
 O(table); every ``CHECKPOINT_INTERVAL`` commits (and always at version
 0) the record additionally embeds a CHECKPOINT: the full reconstructed
-table state. ``_manifest(v)`` rebuilds a version's state from the
-nearest checkpoint at-or-below it plus the delta tail (bounded by the
-interval), and ``commit_delta(v)`` exposes the per-commit change
-summary directly — what the streaming source plans from, reading
-O(span x changed) instead of O(span x files). A continuous 5-minute
+table state. Writer and reader share ONE fold: the writer builds only
+the delta record and derives its new state with
+``_apply_commit_record`` — the same step ``_manifest(v)`` replays to
+rebuild a version from the nearest checkpoint at-or-below it plus the
+delta tail (bounded by the interval) — so the published state and
+every replay of it cannot disagree. ``commit_delta(v)`` exposes the
+per-commit change summary directly — what the streaming source plans
+from, reading O(span x changed) instead of O(span x files), and what
+commit reconciliation checks. A continuous 5-minute
 append cadence (the reference's own, dag_bakery_system_to_jde.py:449)
 therefore writes a few hundred bytes per cycle regardless of how many
 files the table has accumulated. Pre-delta manifests (a full state
@@ -71,6 +75,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType
 
 from jde_to_datalake_spark.sources.log_store import (
     DataFileStore,
@@ -131,6 +136,28 @@ class _KeyedBatch(NamedTuple):
 # publish(expected_base=...) sentinel: None is a meaningful expectation
 # ("I read an empty table"), so absence needs its own marker
 _UNSET = object()
+
+# Table-level metadata: a commit record sets one as ``set_<key>`` and
+# every later state inherits it until another commit sets it again.
+# ``partition_types`` is pinned together with the layout it types, so
+# it is no change of its own: ``commit_delta``'s ``metadata_changed``
+# reads the other five.
+_TABLE_METADATA_KEYS = (
+    "partitioned_by",
+    "partition_types",
+    "column_renames",
+    "dropped_columns",
+    "constraints",
+    "generated_columns",
+)
+_CONFLICT_METADATA_KEYS = tuple(
+    k for k in _TABLE_METADATA_KEYS if k != "partition_types"
+)
+# keys of a reconstructed state that commit annotations may not shadow
+_STATE_KEYS = frozenset(
+    ("version", "mode", "files", "stats", "committed_at", "dv_files",
+     "dv_refs", "txns") + _TABLE_METADATA_KEYS
+)
 
 
 class AuditFailure(RuntimeError):
@@ -332,6 +359,37 @@ def _stat_probe_value(v):
     if isinstance(v, (bytes, bytearray)):
         return _B16 + bytes(v).hex()
     return v
+
+
+def _stat_excludes(stat, lower=None, upper=None, values=None) -> bool:
+    """Does a file's footer ``stat`` (``[min, max]`` of one column)
+    prove the file holds no probed value: none in ``[lower, upper]``
+    (``None`` = unbounded), or, given a sorted ``values`` list, none
+    of those? Probes are in stored-stat form (``_stat_probe_value``).
+    A missing stat or incomparable types (``TypeError``) prove
+    nothing: the file is kept. The one overlap test behind
+    ``files_for_range``, ``files_for_values`` and commit
+    reconciliation."""
+    if stat is None:
+        return False
+    mn, mx = stat
+    try:
+        if values is not None:
+            # the smallest probe value >= min is the only candidate
+            i = bisect.bisect_left(values, mn)
+            if i == len(values):
+                return True
+            lower = upper = values[i]
+        return (lower is not None and mx < lower) or (
+            upper is not None and mn > upper
+        )
+    except TypeError:
+        return False
+
+
+def _b16_decode(v: str) -> bytes:
+    """The bytes a ``b16:``-tagged BINARY stat encodes."""
+    return bytes.fromhex(v[len(_B16):])
 
 
 def _dv_referenced_files(source) -> "list[str] | None":
@@ -601,9 +659,12 @@ class VersionedTable:
             if d in dv_set
         }
         dv_refs.update(rec.get("dv_refs_upd", {}))
-        # txn map: carry forward within the retention window (measured
-        # against this commit's timestamp — deterministic replay), then
-        # fold this commit's stamps with the max-version rule
+        # txn map: every state carries the full per-app map (lookups
+        # read one state, and it survives vacuum/compaction — Delta's
+        # checkpointed setTransaction). Entries idle past the retention
+        # window (measured against this commit's timestamp, so replay
+        # is deterministic) are pruned, then this commit's stamps fold
+        # in with the max-version rule
         at_commit = rec["committed_at"]
         cutoff = at_commit - self.txn_retention_seconds
         txns: dict = {}
@@ -625,51 +686,14 @@ class VersionedTable:
             "stats": stats,
             "committed_at": at_commit,
         }
-        # schema metadata: inherited unless this commit explicitly set
+        # table metadata: inherited unless this commit explicitly set
         # it (rename/drop/restore/clone record even an empty map — the
-        # "explicitly cleared" case)
-        cr = (
-            rec["set_column_renames"]
-            if "set_column_renames" in rec
-            else prev.get("column_renames")
-        )
-        dc = (
-            rec["set_dropped_columns"]
-            if "set_dropped_columns" in rec
-            else prev.get("dropped_columns")
-        )
-        cons = (
-            rec["set_constraints"]
-            if "set_constraints" in rec
-            else prev.get("constraints")
-        )
-        gen = (
-            rec["set_generated_columns"]
-            if "set_generated_columns" in rec
-            else prev.get("generated_columns")
-        )
-        pb = (
-            rec["set_partitioned_by"]
-            if "set_partitioned_by" in rec
-            else prev.get("partitioned_by")
-        )
-        pt = (
-            rec["set_partition_types"]
-            if "set_partition_types" in rec
-            else prev.get("partition_types")
-        )
-        if pb:
-            state["partitioned_by"] = list(pb)
-            if pt:
-                state["partition_types"] = dict(pt)
-        if cr:
-            state["column_renames"] = dict(cr)
-        if dc:
-            state["dropped_columns"] = list(dc)
-        if cons:
-            state["constraints"] = dict(cons)
-        if gen:
-            state["generated_columns"] = dict(gen)
+        # "explicitly cleared" case); partition types only with a
+        # layout
+        for k in _TABLE_METADATA_KEYS:
+            v = rec[f"set_{k}"] if f"set_{k}" in rec else prev.get(k)
+            if v and (k != "partition_types" or "partitioned_by" in state):
+                state[k] = dict(v) if isinstance(v, dict) else list(v)
         if dv_files:
             state["dv_files"] = dv_files
             if dv_refs:
@@ -724,13 +748,25 @@ class VersionedTable:
         return base
 
     def commit_delta(self, version: int) -> dict:
-        """The per-commit change summary ``{"mode", "add", "remove",
-        "dv_add", "dv_remove"}`` — what changed AT ``version`` relative
-        to ``version - 1``. For delta-format commits this is one small
-        record read, O(changed files) regardless of table size — the
-        planning primitive the streaming source uses to stay
-        O(span x changed). Legacy full-state manifests fall back to a
-        two-manifest diff (preserving manifest order)."""
+        """The per-commit change summary — what changed AT ``version``
+        relative to ``version - 1``:
+
+        - ``mode``; ``add``/``remove``: data files; ``dv_add``/
+          ``dv_remove``: deletion-vector sidecars;
+        - ``add_stats``: footer stats of the added files (and of any
+          file whose stats this commit replaced);
+        - ``dv_refs``: the data files each sidecar tombstones, at
+          least for every readable sidecar in ``dv_add``;
+        - ``txn_apps``: the set of idempotent-writer apps it stamped;
+        - ``metadata_changed``: whether it set the layout, column
+          mapping, constraints or generated columns.
+
+        For delta-format commits this is one small record read,
+        O(changed files) regardless of table size — the planning
+        primitive the streaming source uses to stay O(span x changed)
+        and the per-commit view commit reconciliation checks. Legacy
+        full-state manifests fall back to a two-manifest diff
+        (preserving manifest order)."""
         rec = self._read_record(version)
         if "files" not in rec:
             return {
@@ -739,6 +775,12 @@ class VersionedTable:
                 "remove": list(rec.get("remove", [])),
                 "dv_add": list(rec.get("dv_add", [])),
                 "dv_remove": list(rec.get("dv_remove", [])),
+                "add_stats": dict(rec.get("add_stats", {})),
+                "dv_refs": dict(rec.get("dv_refs_upd", {})),
+                "txn_apps": set(rec.get("txn", {})),
+                "metadata_changed": any(
+                    f"set_{k}" in rec for k in _CONFLICT_METADATA_KEYS
+                ),
             }
         prev = (
             self._manifest(version - 1)
@@ -748,9 +790,12 @@ class VersionedTable:
         old_f, new_f = set(prev.get("files", [])), set(rec["files"])
         old_d = set(prev.get("dv_files", []))
         new_d = set(rec.get("dv_files", []))
+        added = [f for f in rec["files"] if f not in old_f]
+        stats = rec.get("stats", {})
+        old_txns = prev.get("txns", {})
         return {
             "mode": rec["mode"],
-            "add": [f for f in rec["files"] if f not in old_f],
+            "add": added,
             "remove": [f for f in prev.get("files", []) if f not in new_f],
             "dv_add": [
                 d for d in rec.get("dv_files", []) if d not in old_d
@@ -758,6 +803,17 @@ class VersionedTable:
             "dv_remove": [
                 d for d in prev.get("dv_files", []) if d not in new_d
             ],
+            "add_stats": {f: stats[f] for f in added if f in stats},
+            "dv_refs": dict(rec.get("dv_refs", {})),
+            "txn_apps": {
+                a
+                for a, e in rec.get("txns", {}).items()
+                if old_txns.get(a) != e
+            },
+            "metadata_changed": any(
+                (prev.get(k) or None) != (rec.get(k) or None)
+                for k in _CONFLICT_METADATA_KEYS
+            ),
         }
 
     def last_txn_version(self, app_id: str) -> int | None:
@@ -1920,7 +1976,7 @@ class VersionedTable:
         start = 0 if lo is None else lo + 1
         for v in range(start, hi + 1):
             try:
-                s = self._commit_summary(v)
+                s = self.commit_delta(v)
             except FileNotFoundError:
                 # a concurrent vacuum trimmed an intervening record
                 # mid-reconciliation: surface a retryable conflict,
@@ -1991,88 +2047,14 @@ class VersionedTable:
             return True
         if not fstats:
             return False
-        for column, (lower, upper) in read_ranges.items():
-            s = fstats.get(column)
-            if s is None:
-                continue  # no stats for this column: inconclusive
-            mn, mx = s
-            lo_p = _stat_probe_value(lower) if lower is not None else None
-            hi_p = _stat_probe_value(upper) if upper is not None else None
-            try:
-                if hi_p is not None and mn > hi_p:
-                    return True
-                if lo_p is not None and mx < lo_p:
-                    return True
-            except TypeError:
-                continue  # incomparable bound types: inconclusive
-        return False
-
-    def _commit_summary(self, version: int) -> dict:
-        """Normalized conflict-relevant view of one commit: files/DVs
-        added+removed, new-file stats, txn apps stamped, and whether
-        table metadata changed. Delta-format records answer from the
-        record alone; legacy full manifests fall back to a
-        two-manifest diff."""
-        rec = self._read_record(version)
-        if "files" not in rec:
-            meta_changed = any(
-                k in rec
-                for k in (
-                    "set_column_renames",
-                    "set_dropped_columns",
-                    "set_constraints",
-                    "set_generated_columns",
-                    "set_partitioned_by",
-                )
+        return any(
+            _stat_excludes(
+                fstats.get(column),
+                _stat_probe_value(lower),
+                _stat_probe_value(upper),
             )
-            return {
-                "add": list(rec.get("add", [])),
-                "remove": list(rec.get("remove", [])),
-                "add_stats": dict(rec.get("add_stats", {})),
-                "dv_add": list(rec.get("dv_add", [])),
-                "dv_refs": dict(rec.get("dv_refs_upd", {})),
-                "txn_apps": set(rec.get("txn", {})),
-                "metadata_changed": meta_changed,
-            }
-        prev = (
-            self._manifest(version - 1)
-            if version > 0
-            else {"files": [], "dv_files": []}
+            for column, (lower, upper) in read_ranges.items()
         )
-        old_f, new_f = set(prev.get("files", [])), set(rec["files"])
-        old_d = set(prev.get("dv_files", []))
-        added = [f for f in rec["files"] if f not in old_f]
-        meta_changed = any(
-            (prev.get(k) or None) != (rec.get(k) or None)
-            for k in (
-                "column_renames",
-                "dropped_columns",
-                "constraints",
-                "generated_columns",
-                "partitioned_by",
-            )
-        )
-        old_txns = prev.get("txns", {})
-        txn_apps = {
-            a
-            for a, e in rec.get("txns", {}).items()
-            if old_txns.get(a) != e
-        }
-        return {
-            "add": added,
-            "remove": [f for f in prev.get("files", []) if f not in new_f],
-            "add_stats": {
-                f: s
-                for f, s in rec.get("stats", {}).items()
-                if f in set(added)
-            },
-            "dv_add": [
-                d for d in rec.get("dv_files", []) if d not in old_d
-            ],
-            "dv_refs": dict(rec.get("dv_refs", {})),
-            "txn_apps": txn_apps,
-            "metadata_changed": meta_changed,
-        }
 
     def _publish_once(
         self,
@@ -2092,43 +2074,46 @@ class VersionedTable:
         dv_files_add: "list[str] | None" = None,
         partition_types: "dict | None" = None,
     ) -> int:
-        """One publish attempt against base version ``prev`` — builds
-        the manifest + delta record and atomically links it as
-        ``prev + 1``. Raises ``ConcurrentCommitError`` if that version
-        number was taken (the reconciliation loop in ``publish``
-        decides whether to re-base or surface it)."""
-        new_files = staged
-        # the base manifest is consulted for the file list, the
-        # carried stats, and the txn map — read and parse it ONCE
-        prev_manifest = self._manifest(prev) if prev is not None else {}
+        """One publish attempt against base version ``prev``: builds
+        the commit's delta record, derives the new state from it with
+        the fold every reader replays (``_apply_commit_record``), and
+        atomically links the record as ``prev + 1``. Raises
+        ``ConcurrentCommitError`` if that version number was taken
+        (the reconciliation loop in ``publish`` decides whether to
+        re-base or surface it)."""
+        base = self._manifest(prev) if prev is not None else {}
         if carry is not None:
             if prev is None:
                 raise ValueError("carry requires an existing base version")
-            prev_files = set(prev_manifest["files"])
-            missing = [f for f in carry if f not in prev_files]
+            base_files = set(base["files"])
+            missing = [f for f in carry if f not in base_files]
             if missing:
                 raise ValueError(
                     f"carry names files absent from version {prev}: "
                     f"{missing[:5]}"
                 )
-            files = list(carry) + new_files
+            files = list(carry) + staged
         elif mode == "append" and prev is not None:
-            files = prev_manifest["files"] + new_files
+            files = base["files"] + staged
         else:
-            files = new_files
+            files = list(staged)
         version = 0 if prev is None else prev + 1
+        now = time.time()
         # per-file column stats from the parquet FOOTERS (no data scan)
         # power manifest-level data skipping (read_where). New files are
         # footer-read here driver-side — at lake scale Delta collects
         # these from the writing tasks; footer reads are metadata-sized
-        # either way. Carried-over files keep their previous stats.
-        prev_stats = prev_manifest.get("stats", {})
-        if known_stats:
-            # caller already holds these files' stats (restore reuses
-            # the target manifest's) — base-manifest stats still win
-            prev_stats = {**known_stats, **prev_stats}
-        stats = {f: prev_stats[f] for f in files if f in prev_stats}
-        need_stats = [f for f in new_files if f not in stats]
+        # either way. Files the base already has stats for keep them
+        # (the fold carries them); stats the caller already holds
+        # (restore reuses the target manifest's) skip the footer read.
+        base_stats = base.get("stats", {})
+        known = known_stats or {}
+        add_stats = {
+            f: known[f] for f in files if f not in base_stats and f in known
+        }
+        need_stats = [
+            f for f in staged if f not in base_stats and f not in add_stats
+        ]
         if len(need_stats) > 8:
             # wide commits (a big overwrite/backfill stages hundreds of
             # files): footer reads are independent metadata I/O —
@@ -2138,16 +2123,10 @@ class VersionedTable:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=16) as pool:
-                for f, fs in zip(
-                    need_stats, pool.map(self._stats_of, need_stats)
-                ):
-                    if fs:
-                        stats[f] = fs
+                read = list(pool.map(self._stats_of, need_stats))
         else:
-            for f in need_stats:
-                fs = self._stats_of(f)
-                if fs:
-                    stats[f] = fs
+            read = [self._stats_of(f) for f in need_stats]
+        add_stats.update((f, fs) for f, fs in zip(need_stats, read) if fs)
         # hive-partitioned tables: partition values live in directory
         # names, not file bytes — record each new file's values as
         # constant min=max column stats, so files_for_range/values
@@ -2155,77 +2134,28 @@ class VersionedTable:
         # exactly like Delta's partition pruning, with zero extra
         # machinery. NULL partitions simply record no stat
         # (conservative: the file is never pruned on that column).
-        partitioned_explicit = partitioned_by is not None
-        if partitioned_by is None and prev is not None:
-            partitioned_by = prev_manifest.get("partitioned_by")
-        if partitioned_by:
-            for f in new_files:
+        pby = partitioned_by
+        if pby is None:
+            pby = base.get("partitioned_by")
+        if pby:
+            for f in staged:
                 pvals = _path_partitions(f)
-                cs = stats.setdefault(f, {})
-                for c in partitioned_by:
-                    v = pvals.get(c)
-                    if v is not None:
-                        cs[c] = [v, v]
-        # pin the partition columns' TYPES once (immutable, like the
-        # layout itself): prefer the established manifest value, else
-        # the caller's declaration (commit() passes the written
-        # frame's own schema — exact), else a path-value scan (the
-        # CONVERT adoption path, Spark's inference lattice). Every
-        # read surface casts to these, so batch/stream/CDF schemas
-        # cannot drift apart.
-        ptypes = None
-        ptypes_established = False
-        if partitioned_by:
-            if prev is not None:
-                ptypes = prev_manifest.get("partition_types")
-            if ptypes is None:
-                ptypes = {
-                    c: str(t)
-                    for c, t in (partition_types or {}).items()
-                    if c in partitioned_by
-                }
-                derived = self._derive_partition_types(
-                    [f for f in files], partitioned_by
-                )
-                for c in partitioned_by:
-                    ptypes.setdefault(c, derived[c])
-                ptypes_established = True
-        # the per-app idempotent-txn map is ACCUMULATED across commits
-        # (every manifest carries the full map), so lookups read one
-        # manifest and the record survives vacuum/compaction — the
-        # manifest-embedded form of Delta's checkpointed setTransaction.
-        # Entries idle past the retention window are pruned here, so
-        # the map is bounded by recently-active writer apps.
-        now = time.time()
-        cutoff = now - self.txn_retention_seconds
-        txns: dict = {}
-        if prev is not None:
-            for app, entry in prev_manifest.get("txns", {}).items():
-                at = entry.get("at", now) if isinstance(entry, dict) else now
-                if at > cutoff:
-                    txns[app] = (
-                        dict(entry)
-                        if isinstance(entry, dict)
-                        else {"version": int(entry), "at": now}
-                    )
-        for app_id, txn_version in _txn_pairs(txn):
-            old = txns.get(str(app_id), {}).get("version", int(txn_version))
-            txns[str(app_id)] = {
-                "version": max(int(txn_version), int(old)),
-                "at": now,
-            }
+                fs = dict(add_stats.get(f, base_stats.get(f, {})))
+                for c in pby:
+                    if pvals.get(c) is not None:
+                        fs[c] = [pvals[c], pvals[c]]
+                if fs != base_stats.get(f):
+                    add_stats[f] = fs
         if dv_files is None:
             # inherit: deletes survive appends and partial rewrites;
             # a full overwrite materialized them
-            if prev is not None and (mode == "append" or carry is not None):
-                dv_files = prev_manifest.get("dv_files", [])
-            else:
-                dv_files = []
-            if dv_files_add:
-                have = set(dv_files)
-                dv_files = list(dv_files) + [
-                    d for d in dv_files_add if d not in have
-                ]
+            inherit = prev is not None and (
+                mode == "append" or carry is not None
+            )
+            dv_files = list(base.get("dv_files", [])) if inherit else []
+            for d in dv_files_add or ():
+                if d not in dv_files:
+                    dv_files.append(d)
         # prune DV sidecars whose EVERY referenced data file has left
         # the manifest (a merge/compact rewrote them — the rewrite
         # materialized those deletes): their tombstones can no longer
@@ -2241,108 +2171,36 @@ class VersionedTable:
         # advisor, high). Liveness is recomputed transiently against
         # each publish's own file set; unknown refs are kept whole
         # (conservative — pruning is an optimization, never semantics).
-        dv_refs: dict = {}
+        base_refs = base.get("dv_refs", {})
+        dv_refs_upd: dict = {}
         if dv_files:
-            prev_refs = (
-                prev_manifest.get("dv_refs", {}) if prev is not None else {}
-            )
             # sidecars reference data files by BASENAME (the join key
             # of the DV read path); manifests of shallow clones list
             # files by absolute path — compare on both forms
             file_set = set(files) | {os.path.basename(f) for f in files}
             kept_dvs = []
             for d in dv_files:
-                refs = prev_refs.get(d)
+                refs = base_refs.get(d)
                 if refs is None:
                     refs = self._dv_refs(d)
                 if refs is None:
                     kept_dvs.append(d)  # unreadable refs: keep whole
-                    continue
-                if any(r in file_set for r in refs):
+                elif any(r in file_set for r in refs):
                     kept_dvs.append(d)
-                    dv_refs[d] = refs
+                    if d not in base_refs:
+                        dv_refs_upd[d] = refs
             dv_files = kept_dvs
-        manifest = {
-            "version": version,
-            "mode": mode,
-            "files": files,
-            "stats": stats,
-            "committed_at": now,
-        }
-        # column mapping is table-level schema metadata: inherited
-        # across every commit kind unless explicitly replaced
-        # (rename_column/drop_column/restore/clone pass their own).
-        # Whether it was EXPLICIT matters to the delta record: an
-        # explicit empty map means "cleared", absence means "inherit".
-        schema_explicit = (
-            column_renames is not None or dropped_columns is not None
-        )
-        if column_renames is None and prev is not None:
-            column_renames = prev_manifest.get("column_renames")
-        if dropped_columns is None and prev is not None:
-            dropped_columns = prev_manifest.get("dropped_columns")
-        constraints_explicit = constraints is not None
-        if constraints is None and prev is not None:
-            constraints = prev_manifest.get("constraints")
-        generated_explicit = generated_columns is not None
-        if generated_columns is None and prev is not None:
-            generated_columns = prev_manifest.get("generated_columns")
-        if partitioned_by:
-            manifest["partitioned_by"] = list(partitioned_by)
-            if ptypes:
-                manifest["partition_types"] = dict(ptypes)
-        if column_renames:
-            manifest["column_renames"] = dict(column_renames)
-        if dropped_columns:
-            manifest["dropped_columns"] = list(dropped_columns)
-        if constraints:
-            manifest["constraints"] = dict(constraints)
-        if generated_columns:
-            manifest["generated_columns"] = dict(generated_columns)
         if annotations:
-            clash = annotations.keys() & manifest.keys() | {
-                "dv_files", "dv_refs", "txns",
-                "column_renames", "dropped_columns", "constraints",
-                "generated_columns", "partitioned_by", "partition_types",
-            } & annotations.keys()
+            clash = _STATE_KEYS & annotations.keys()
             if clash:
                 raise ValueError(
                     f"annotations may not shadow manifest keys: {sorted(clash)}"
                 )
-            manifest.update(annotations)
-        if dv_files:
-            manifest["dv_files"] = dv_files
-            if dv_refs:
-                manifest["dv_refs"] = dv_refs
-        if txns:
-            manifest["txns"] = txns
-        # -- delta record: what changed relative to the previous
+        # -- the delta record: what changed relative to the previous
         # version — O(changed files) bytes per commit, never O(table)
-        prev_files_list = prev_manifest.get("files", [])
-        prev_fset = set(prev_files_list)
-        new_fset = set(files)
-        added = [f for f in files if f not in prev_fset]
-        removed_files = [f for f in prev_files_list if f not in new_fset]
-        files_order_ok = (
-            [f for f in prev_files_list if f in new_fset] + added == files
-        )
-        prev_stats_actual = prev_manifest.get("stats", {})
-        add_stats = {
-            f: s for f, s in stats.items() if prev_stats_actual.get(f) != s
-        }
-        prev_dv_list = prev_manifest.get("dv_files", [])
-        prev_dset = set(prev_dv_list)
-        new_dset = set(dv_files)
-        dv_added = [d for d in dv_files if d not in prev_dset]
-        dv_removed = [d for d in prev_dv_list if d not in new_dset]
-        dv_order_ok = (
-            [d for d in prev_dv_list if d in new_dset] + dv_added
-            == dv_files
-        )
-        prev_refs_actual = prev_manifest.get("dv_refs", {})
-        dv_refs_upd = {
-            d: r for d, r in dv_refs.items() if prev_refs_actual.get(d) != r
-        }
+        base_fset, new_fset = set(base.get("files", [])), set(files)
+        base_dvs = base.get("dv_files", [])
+        base_dset, new_dset = set(base_dvs), set(dv_files)
         record = {
             "version": version,
             "mode": mode,
@@ -2356,15 +2214,17 @@ class VersionedTable:
             # (never a competitor: the token is generated fresh per
             # attempt and never leaves this call).
             "commit_id": uuid.uuid4().hex,
-            "add": added,
-            "remove": removed_files,
+            "add": [f for f in files if f not in base_fset],
+            "remove": [f for f in base.get("files", []) if f not in new_fset],
         }
         if add_stats:
             record["add_stats"] = add_stats
-        if dv_added:
-            record["dv_add"] = dv_added
-        if dv_removed:
-            record["dv_remove"] = dv_removed
+        dv_add = [d for d in dv_files if d not in base_dset]
+        if dv_add:
+            record["dv_add"] = dv_add
+        dv_remove = [d for d in base_dvs if d not in new_dset]
+        if dv_remove:
+            record["dv_remove"] = dv_remove
         if dv_refs_upd:
             record["dv_refs_upd"] = dv_refs_upd
         txn_rec: dict = {}
@@ -2377,31 +2237,60 @@ class VersionedTable:
             }
         if txn_rec:
             record["txn"] = txn_rec
-        if partitioned_explicit:
-            record["set_partitioned_by"] = list(partitioned_by or [])
-        if ptypes_established and ptypes:
-            record["set_partition_types"] = dict(ptypes)
-        if schema_explicit:
-            record["set_column_renames"] = dict(column_renames or {})
-            record["set_dropped_columns"] = list(dropped_columns or [])
-        if constraints_explicit:
-            record["set_constraints"] = dict(constraints or {})
-        if generated_explicit:
-            record["set_generated_columns"] = dict(generated_columns or {})
+        # table metadata: only what the caller passed (an explicit
+        # empty value is recorded: it clears) — the fold inherits the
+        # rest
+        passed = (
+            partitioned_by,
+            column_renames,
+            dropped_columns,
+            constraints,
+            generated_columns,
+        )  # in _CONFLICT_METADATA_KEYS order
+        for k, v in zip(_CONFLICT_METADATA_KEYS, passed):
+            if v is not None:
+                record[f"set_{k}"] = v
+        # pin the partition columns' TYPES once (immutable, like the
+        # layout itself), when a commit establishes the layout: the
+        # caller's declaration (commit() passes the written frame's
+        # own schema — exact), else a path-value scan (the CONVERT
+        # adoption path, Spark's inference lattice). Every read
+        # surface casts to these, so batch/stream/CDF schemas cannot
+        # drift apart.
+        if pby and not base.get("partition_types"):
+            ptypes = {
+                c: str(t)
+                for c, t in (partition_types or {}).items()
+                if c in pby
+            }
+            undeclared = [c for c in pby if c not in ptypes]
+            if undeclared:
+                ptypes.update(
+                    self._derive_partition_types(files, undeclared)
+                )
+            record["set_partition_types"] = ptypes
         if annotations:
             record["annotations"] = dict(annotations)
+        state = self._apply_commit_record(base, record)
+        # the caller's file and DV order is the published order; when
+        # the fold's differs (carry/files passed in non-manifest
+        # order — restore with reordered history; rare), restore it
+        # and checkpoint, so a replay reads the same order
+        reordered = (
+            state["files"] != files or state.get("dv_files", []) != dv_files
+        )
+        if reordered:
+            state["files"] = files
+            if dv_files:
+                state["dv_files"] = dv_files
         # checkpoint: always at version 0, every CHECKPOINT_INTERVAL
-        # commits, and whenever the reconstruction order would diverge
-        # from the published one (a caller passed carry/files in
-        # non-manifest order — restore with reordered history; rare,
-        # and correctness beats the few KB)
+        # commits, and whenever the order was restored above
         if (
             prev is None
             or version % self.CHECKPOINT_INTERVAL == 0
-            or not files_order_ok
-            or not dv_order_ok
+            or reordered
         ):
-            record["checkpoint"] = manifest
+            record["checkpoint"] = state
         # Reader-atomic publish through the LogStore seam: whatever
         # the store's put-if-absent primitive is (POSIX hard link, S3
         # If-None-Match, DynamoDB conditional put), failure means
@@ -2436,13 +2325,11 @@ class VersionedTable:
                             "re-check table state before retrying"
                         ) from e
                     time.sleep(backoff)
-            if existing.get("commit_id") == record["commit_id"]:
-                self._cache_state(version, manifest)
-                return version
-            raise ConcurrentCommitError(
-                f"version {version} was committed by another writer"
-            ) from None
-        self._cache_state(version, manifest)
+            if existing.get("commit_id") != record["commit_id"]:
+                raise ConcurrentCommitError(
+                    f"version {version} was committed by another writer"
+                ) from None
+        self._cache_state(version, state)
         return version
 
     def commit_audited(
@@ -3142,20 +3029,11 @@ class VersionedTable:
         upper = _stat_probe_value(upper)
         manifest = self._manifest(version)
         stats = manifest.get("stats", {})
-        keep = []
-        for f in manifest["files"]:
-            s = stats.get(f, {}).get(column)
-            if s is not None:
-                mn, mx = s
-                try:
-                    if lower is not None and mx < lower:
-                        continue
-                    if upper is not None and mn > upper:
-                        continue
-                except TypeError:
-                    pass  # incomparable bound types -> keep the file
-            keep.append(f)
-        return keep
+        return [
+            f
+            for f in manifest["files"]
+            if not _stat_excludes(stats.get(f, {}).get(column), lower, upper)
+        ]
 
     def files_for_ranges(
         self, ranges: dict, version: int | None = None
@@ -3204,20 +3082,13 @@ class VersionedTable:
         column = self._to_physical_name(column, version)
         manifest = self._manifest(version)
         stats = manifest.get("stats", {})
-        keep = []
-        for f in manifest["files"]:
-            s = stats.get(f, {}).get(column)
-            if s is not None:
-                mn, mx = s
-                try:
-                    # smallest probe value >= mn; in range iff <= mx
-                    i = bisect.bisect_left(vals, mn)
-                    if i >= len(vals) or vals[i] > mx:
-                        continue
-                except TypeError:
-                    pass  # incomparable bound types -> keep the file
-            keep.append(f)
-        return keep
+        return [
+            f
+            for f in manifest["files"]
+            if not _stat_excludes(
+                stats.get(f, {}).get(column), values=vals
+            )
+        ]
 
     def read_where_in(
         self,
@@ -3310,34 +3181,38 @@ class VersionedTable:
         )
 
     # -- upsert ---------------------------------------------------------
+    @staticmethod
+    def _cast_like(df: DataFrame, like: DataFrame) -> DataFrame:
+        """Cast ``df``'s columns that ``like`` also has to ``like``'s
+        types; other columns (evolved ones) pass through. The cast is
+        Spark's ANSI cast, so a value the narrower type cannot hold
+        raises instead of wrapping."""
+        target = {f.name: f.dataType for f in like.schema.fields}
+        casts = {
+            f.name: F.col(f.name).cast(target[f.name])
+            for f in df.schema.fields
+            if f.name in target and f.dataType != target[f.name]
+        }
+        return df.withColumns(casts) if casts else df
+
     def _align_types(
         self, spark: SparkSession, df: DataFrame, version: int
     ) -> DataFrame:
         """Cast ``df``'s columns that already exist in the table to
         the table's merged column types (PHYSICAL names on both
-        sides). In ``_publish_rewrite`` the union with the table scan
-        widens a narrower batch type to the table's; ``_publish_inserts``
+        sides) — the insert-only path's alignment: ``_publish_inserts``
         stages the source frame directly, and WITHOUT alignment a
-        narrower source type (int batch into a bigint table) writes
-        mixed-type files whose plain-read success depends on which
-        footer Spark samples for the schema. Schema resolution here is
-        a plan-only metadata read. Extra (evolved) columns pass
-        through untouched."""
+        source type that differs from the table's (an int batch into
+        a bigint table, or the reverse) writes mixed-type files whose
+        plain-read success depends on which footer Spark samples for
+        the schema. The merged schema comes from a mergeSchema scan of
+        every file (one Spark job). ``_publish_rewrite`` aligns to its
+        touched-file scan instead, which it has already resolved."""
         files = self._manifest(version)["files"]
         if not files:
             return df
-        target = {
-            f.name: f.dataType
-            for f in self._scan_files(
-                spark, files, True, version
-            ).schema.fields
-        }
-        casts = {
-            c: F.col(c).cast(target[c])
-            for c in df.columns
-            if c in target and df.schema[c].dataType != target[c]
-        }
-        return df.withColumns(casts) if casts else df
+        scan = self._scan_files(spark, files, True, version)
+        return self._cast_like(df, scan)
 
     def _probe_batch(
         self,
@@ -3411,6 +3286,17 @@ class VersionedTable:
                 ranged_by_col.append([f for f, _mn, _mx in ranged])
                 if not ranged:
                     continue
+                if any(
+                    isinstance(mn, str) and mn.startswith(_B16)
+                    for _f, mn, _mx in ranged
+                ) and isinstance(batch.schema[kc].dataType, BinaryType):
+                    # BINARY stats are stored hex-encoded; the join
+                    # compares native bytes (Spark orders binary
+                    # unsigned bytewise, the order the encoding keeps)
+                    ranged = [
+                        (f, _b16_decode(mn), _b16_decode(mx))
+                        for f, mn, mx in ranged
+                    ]
                 rdf = spark.createDataFrame(
                     ranged, ["__file", "__mn", "__mx"]
                 )
@@ -3515,6 +3401,7 @@ class VersionedTable:
         self,
         p: _KeyedBatch,
         rows: DataFrame,
+        scan: DataFrame,
         txn,
         op: str,
         physical: bool = False,
@@ -3523,9 +3410,13 @@ class VersionedTable:
         ``physical``) replace the live rows of ``p.touched``, every
         untouched file is carried by reference, and the publish
         declares the probe's read set (the touched files and the key
-        envelope) for commit reconciliation. A rewrite that deletes
-        every touched row publishes the carried files alone, not an
-        empty part."""
+        envelope) for commit reconciliation. ``rows`` are cast to the
+        types of ``scan``, the touched-file scan they were built from
+        (same naming): a union with a wider batch type would otherwise
+        rewrite the touched files in that type while carried files
+        keep theirs. A rewrite that deletes every touched row
+        publishes the carried files alone, not an empty part."""
+        rows = self._cast_like(rows, scan)
         staged = self.stage(
             rows if physical else self._to_physical_df(rows, p.prev)
         )
@@ -3667,6 +3558,7 @@ class VersionedTable:
         return self._publish_rewrite(
             p,
             kept.unionByName(updates, allowMissingColumns=True),
+            current,
             txn,
             "MERGE",
             physical=True,
@@ -4002,7 +3894,7 @@ class VersionedTable:
         # a clause CAN delete every touched row: the rewrite then
         # publishes the shrunken file set (the probe above already
         # ruled out the no-op case)
-        return self._publish_rewrite(p, final, txn, "MERGE")
+        return self._publish_rewrite(p, final, live, txn, "MERGE")
 
     # -- streaming sink ---------------------------------------------------
     def foreach_batch_writer(self, mode: str = "append", key: str | None = None):

@@ -97,7 +97,6 @@ def _load_fresh_bloom(
     index_version: int | None,
     num_bits: int,
     k: int,
-    broadcast_max_bits: int = BLOOM_BROADCAST_MAX_BITS,
 ) -> "dict | None":
     """The stored filter, ONLY if it covers exactly the index version
     this batch will join against, was built with the current sizing,
@@ -107,12 +106,12 @@ def _load_fresh_bloom(
     and mis-verdict known content as novel) — staleness falls back to
     the plain join and the post-append refresh re-engages the filter.
 
-    Returns ``{"mode": "array"|"shards", ...}``: small filters
-    (<= ``broadcast_max_bits``) collect to the flat word array for the
-    zero-shuffle broadcast probe; larger ones return the pinned
-    shard-row frame for the join probe — the freshness check itself is
-    one distinct over the five metadata columns, never a data-scale
-    collect.
+    Returns ``{"mode": "array"|"shards", ...}``: small filters (<=
+    ``BLOOM_BROADCAST_MAX_BITS``, read at call time) collect to the
+    flat word array for the zero-shuffle broadcast probe; larger ones
+    return the pinned shard-row frame for the join probe — the
+    freshness check itself is one distinct over the five metadata
+    columns, never a data-scale collect.
     """
     if index_version is None:
         return None
@@ -148,7 +147,7 @@ def _load_fresh_bloom(
         "shards": stored.select("shard", "words"),
         "words": None,
     }
-    if num_bits <= broadcast_max_bits:
+    if num_bits <= BLOOM_BROADCAST_MAX_BITS:
         out["mode"] = "array"
         out["words"] = sharded_to_words(
             out["shards"].collect(), num_bits, d["shard_words"]
@@ -231,7 +230,6 @@ def ingest_batch(
     bloom_bits: int = 1 << 20,
     bloom_k: int = 5,
     txn: "tuple[str, int] | None" = None,
-    bloom_broadcast_max_bits: int = BLOOM_BROADCAST_MAX_BITS,
     metrics: VersionedTable | None = None,
 ) -> dict:
     """Process one micro-batch; returns the verdict counts (the funnel
@@ -259,7 +257,7 @@ def ingest_batch(
     join is bloom-prefiltered: the definitely-novel slice of the batch
     never shuffles against the index — the steady-state win for crawl
     batches that are mostly new content. Filters up to
-    ``bloom_broadcast_max_bits`` collect to the driver and probe as a
+    ``BLOOM_BROADCAST_MAX_BITS`` collect to the driver and probe as a
     zero-shuffle broadcast projection; LARGER filters never leave the
     executors — the batch keys join their shard rows on the word
     index (bloom_probe_sharded), so the filter scales past driver
@@ -314,8 +312,7 @@ def ingest_batch(
     pre_bloom = None
     if bloom_filter is not None:
         pre_bloom = _load_fresh_bloom(
-            spark, bloom_filter, index.latest_version(), bloom_bits, bloom_k,
-            broadcast_max_bits=bloom_broadcast_max_bits,
+            spark, bloom_filter, index.latest_version(), bloom_bits, bloom_k
         )
     # the EXPENSIVE shared frame is the verdict join against the
     # fingerprint index, not the raw batch: counts, the near-dup flag

@@ -8,6 +8,9 @@ a file subset."""
 
 from __future__ import annotations
 
+import datetime as _dt
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -333,3 +336,105 @@ def test_merge_guard_and_probe_share_one_job(spark, tmp_path):
     }
     assert cur[3] == 99 and cur[300] == 1 and cur[4] == 4
     assert len(cur) == 101
+
+
+# -- keyed writes on non-numeric keys and wider batch types ----------------
+
+_KEYS = {
+    # BINARY stats are stored hex-encoded; the high bytes check that the
+    # probe keeps unsigned byte order
+    "binary": ("binary", [b"\x10\x01", b"\x10\x02", b"\x80\x01", b"\xf0\x02"]),
+    "date": (
+        "date",
+        [_dt.date(2024, 1, 1), _dt.date(2024, 1, 2),
+         _dt.date(2024, 6, 1), _dt.date(2024, 6, 2)],
+    ),
+    "timestamp": (
+        "timestamp",
+        [_dt.datetime(2024, 1, 1, 10), _dt.datetime(2024, 1, 1, 11),
+         _dt.datetime(2024, 6, 1, 10), _dt.datetime(2024, 6, 1, 11)],
+    ),
+}
+
+
+def _keyed_write(spark, t, writer, rows, ddl):
+    """One keyed write of ``rows`` through ``writer``: a plain upsert
+    for merge/merge_into, a newer SCD2 event (tracked ``v``, ``ts``)
+    for apply_scd2."""
+    from jde_to_datalake_spark.sources.scd import apply_scd2
+
+    df = spark.createDataFrame(rows, ddl).coalesce(1)
+    if writer == "merge":
+        return t.merge(spark, df, "k")
+    if writer == "merge_into":
+        return t.merge_into(
+            spark, df, "k", matched=[("update", None, None)],
+            not_matched=[("insert", None)],
+        )
+    return apply_scd2(spark, t, df, "k", ["v"], "ts")
+
+
+def _live_rows(spark, t, writer):
+    rows = t.read(spark).collect()
+    return [r for r in rows if writer != "apply_scd2" or r["is_current"]]
+
+
+@pytest.mark.parametrize("writer", ["merge", "merge_into", "apply_scd2"])
+@pytest.mark.parametrize("kind", sorted(_KEYS))
+def test_keyed_write_finds_non_numeric_keys_in_their_file(
+    spark, tmp_path, writer, kind
+):
+    """A key stored in a file must be found by the footer-stat probe
+    whatever its type: BINARY stats are hex-encoded, date/timestamp
+    stats ISO strings, and a probe comparing raw batch keys against
+    the stored form would prune the file holding the key and insert
+    the key a second time."""
+    ktype, keys = _KEYS[kind]
+    ddl = f"k {ktype}, v int, ts int"
+    t = VersionedTable(str(tmp_path / "t"))
+    # two files of two keys each
+    _keyed_write(spark, t, writer, [(keys[0], 0, 1), (keys[1], 1, 1)], ddl)
+    _keyed_write(spark, t, writer, [(keys[2], 2, 1), (keys[3], 3, 1)], ddl)
+    assert len(t._manifest(t.latest_version())["files"]) == 2
+    # one existing key from each file
+    _keyed_write(
+        spark, t, writer, [(keys[1], 10, 2), (keys[2], 20, 2)], ddl
+    )
+    live = _live_rows(spark, t, writer)
+    got = {bytes(r["k"]) if kind == "binary" else r["k"]: r["v"]
+           for r in live}
+    assert len(live) == 4, live
+    assert got == {keys[0]: 0, keys[1]: 10, keys[2]: 20, keys[3]: 3}
+
+
+@pytest.mark.parametrize("writer", ["merge", "merge_into", "apply_scd2"])
+def test_keyed_rewrite_keeps_the_table_column_types(
+    spark, tmp_path, writer
+):
+    """A batch whose ``v`` (and ``ts``) is bigint, rewriting files of
+    an int table, must write int files: a touched file rewritten as
+    bigint next to a carried int file makes a plain read fail. A value
+    the table type cannot hold raises and commits nothing."""
+    import pyarrow.parquet as pq
+
+    t = VersionedTable(str(tmp_path / "t"))
+    narrow = "k bigint, v int, ts int"
+    wide = "k bigint, v bigint, ts bigint"
+    _keyed_write(spark, t, writer, [(1, 1, 1), (2, 2, 1)], narrow)
+    _keyed_write(spark, t, writer, [(10, 10, 1), (11, 11, 1)], narrow)
+    # key 1 touches the first file only; key 5 is a new key
+    _keyed_write(spark, t, writer, [(1, 100, 2), (5, 5, 2)], wide)
+    files = t._manifest(t.latest_version())["files"]
+    types = {
+        str(pq.read_schema(os.path.join(t.root, f)).field(c).type)
+        for f in files
+        for c in ("v",) + (("valid_to",) if writer == "apply_scd2" else ())
+    }
+    assert types == {"int32"}, types
+    got = {r["k"]: r["v"] for r in _live_rows(spark, t, writer)}
+    assert got == {1: 100, 2: 2, 5: 5, 10: 10, 11: 11}
+    before = t.latest_version()
+    with pytest.raises(Exception, match="CAST_OVERFLOW|overflow"):
+        _keyed_write(spark, t, writer, [(2, 1 << 40, 3)], wide)
+    assert t.latest_version() == before
+    assert {r["k"]: r["v"] for r in _live_rows(spark, t, writer)} == got

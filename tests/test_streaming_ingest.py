@@ -551,12 +551,13 @@ def test_checkpoint_recreation_rotates_app_id(spark, tmp_path):
 
 
 @pytest.mark.soak
-def test_sharded_bloom_beyond_broadcast_ceiling(spark, tmp_path):
+def test_sharded_bloom_beyond_broadcast_ceiling(spark, tmp_path, monkeypatch):
     """Round-5 judge item #1: a filter LARGER than the broadcast
     ceiling must never collect to the driver — the loop switches to
     the shard-join probe (mode='shards') and still produces verdicts
     identical to the plain loop. Forced by setting the ceiling below
     the filter size rather than building a multi-GB filter."""
+    from jde_to_datalake_spark.streaming import ingest as ingest_mod
     from jde_to_datalake_spark.streaming.ingest import _load_fresh_bloom
 
     plain_c = VersionedTable(str(tmp_path / "pc"))
@@ -564,10 +565,9 @@ def test_sharded_bloom_beyond_broadcast_ceiling(spark, tmp_path):
     big_c = VersionedTable(str(tmp_path / "bc"))
     big_i = VersionedTable(str(tmp_path / "bi"))
     bloom_t = VersionedTable(str(tmp_path / "bloom"))
-    kw = dict(
-        bloom_filter=bloom_t, bloom_bits=1 << 12, bloom_k=3,
-        bloom_broadcast_max_bits=1 << 8,  # ceiling << filter size
-    )
+    kw = dict(bloom_filter=bloom_t, bloom_bits=1 << 12, bloom_k=3)
+    # ceiling << filter size
+    monkeypatch.setattr(ingest_mod, "BLOOM_BROADCAST_MAX_BITS", 1 << 8)
     batches = [
         [(1, "alpha"), (2, "beta")],
         [(3, "alpha"), (4, "gamma"), (5, "gamma")],
@@ -582,12 +582,12 @@ def test_sharded_bloom_beyond_broadcast_ceiling(spark, tmp_path):
     assert engaged == [False, True, True]
     # the loader really took the sharded path (no driver word array)
     loaded = _load_fresh_bloom(
-        spark, bloom_t, big_i.latest_version(), 1 << 12, 3,
-        broadcast_max_bits=1 << 8,
+        spark, bloom_t, big_i.latest_version(), 1 << 12, 3
     )
     assert loaded is not None and loaded["mode"] == "shards"
     assert loaded["words"] is None
     # same filter under the default ceiling: broadcast path, same bits
+    monkeypatch.undo()
     small = _load_fresh_bloom(
         spark, bloom_t, big_i.latest_version(), 1 << 12, 3
     )

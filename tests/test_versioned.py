@@ -1560,36 +1560,197 @@ def test_commit_record_size_is_o_changed_not_o_table(spark, tmp_path):
 def test_state_reconstruction_cold_equals_warm(spark, tmp_path):
     """A fresh instance (no cache, reconstructing from checkpoint +
     delta tail) must see exactly the state the writing instance
-    published, across every commit kind."""
+    published, across every commit kind: data writes, DML, DDL and
+    metadata commits, multi-app txn stamps, a restore, a shallow
+    clone, and a hive-partitioned table across a checkpoint."""
     from jde_to_datalake_spark.sources.versioned import VersionedTable
+
+    def assert_cold_equals_warm(t):
+        cold = VersionedTable(t.root)
+        for v in cold.versions():
+            warm_m = t._manifest(v)
+            cold_m = cold._manifest(v)
+            assert warm_m == cold_m, f"{t.root}: state mismatch at version {v}"
+        return cold
 
     t = VersionedTable(str(tmp_path / "t"))
     t.commit(
-        spark.range(0, 40).selectExpr("id AS k", "id AS v"),
+        spark.range(0, 40).selectExpr("id AS k", "id AS v", "id % 3 AS w"),
         mode="overwrite",
     )
     t.commit(
-        spark.range(40, 60).selectExpr("id AS k", "id AS v"), mode="append"
+        spark.range(40, 60).selectExpr("id AS k", "id AS v", "id % 3 AS w"),
+        mode="append",
     )
     t.delete_where(spark, F.col("k") == 7)
     t.merge(
         spark, spark.createDataFrame([(41, -1)], "k bigint, v bigint"), "k",
         txn=("appA", 3),
     )
+    t.add_constraint(spark, "v_floor", "v >= -1")
+    t.add_generated_column(spark, "k2", "k * 2")
+    t.update_where(spark, {"v": "v + 100"}, "k >= 50")
+    t.merge_into(
+        spark,
+        spark.createDataFrame([(1, -1), (100, 5)], "k bigint, v bigint"),
+        "k",
+        matched=[("update", None, None)],
+    )
+    t.drop_constraint("v_floor")
+    t.commit(
+        spark.createDataFrame([(200, 1, 0)], "k bigint, v bigint, w bigint"),
+        mode="append",
+        txn=[("appB", 1), ("appC", 2)],
+    )
+    t.drop_column("w")
     t.rename_column("v", "val")
     v_mid = t.latest_version()
+    assert v_mid > t.CHECKPOINT_INTERVAL
     t.compact(spark, target_partitions=2, cluster_by="k")
     t.restore(v_mid)
-    cold = VersionedTable(t.root)
-    for v in cold.versions():
-        warm_m = t._manifest(v)
-        cold_m = cold._manifest(v)
-        assert warm_m == cold_m, f"state mismatch at version {v}"
+    cold = assert_cold_equals_warm(t)
     assert cold.last_txn_version("appA") == 3
+    assert cold.last_txn_version("appB") == 1
+    assert cold.last_txn_version("appC") == 2
     assert cold.column_renames() == {"val": "v"}
+    assert cold.dropped_columns() == ["w"]
+    assert cold.constraints() == {}
+    assert cold.generated_columns() == {"k2": "k * 2"}
     assert cold._manifest(cold.latest_version())["restored_from"] == v_mid
     got = {(r["k"], r["val"]) for r in cold.read(spark).collect()}
-    assert (41, -1) in got and all(k != 7 for k, _ in got)
+    assert (41, -1) in got and (1, -1) in got and (100, 5) in got
+    assert (55, 155) in got and all(k != 7 for k, _ in got)
+
+    clone = t.clone_to(str(tmp_path / "clone"))
+    clone.merge(
+        spark, spark.createDataFrame([(3, 33)], "k bigint, val bigint"), "k"
+    )
+    cold_clone = assert_cold_equals_warm(clone)
+    assert cold_clone.column_renames() == {"val": "v"}
+    got = {r["k"]: r["val"] for r in cold_clone.read(spark).collect()}
+    assert got[3] == 33
+
+    p = VersionedTable(str(tmp_path / "p"))
+    p.commit(
+        spark.range(0, 30).selectExpr(
+            "id AS k", "id AS v", "CAST(id % 3 + 1 AS INT) AS month"
+        ),
+        mode="overwrite",
+        partitioned_by=["month"],
+    )
+    for i in range(p.CHECKPOINT_INTERVAL):
+        p.commit(
+            spark.createDataFrame(
+                [(100 + i, i, i % 3 + 1)], "k bigint, v bigint, month int"
+            ),
+            mode="append",
+        )
+    p.delete_where(spark, "month = 3", prune_ranges={"month": (3, 3)})
+    p.update_where(spark, {"v": "v + 1"}, "month = 1")
+    assert p.latest_version() > p.CHECKPOINT_INTERVAL
+    cold_p = assert_cold_equals_warm(p)
+    assert cold_p.partition_types() == {"month": "int"}
+    assert cold_p.read(spark).filter("month = 3").count() == 0
+
+
+def test_legacy_full_state_records(tmp_path):
+    """Pre-delta logs hold a FULL state per commit. They still read as
+    self-checkpoints, their change summary is the two-state diff, the
+    conflict check reads that summary, and a delta commit on top folds
+    onto them."""
+    from jde_to_datalake_spark.sources.versioned import VersionedTable
+
+    t = VersionedTable(str(tmp_path / "t"))
+    at = time.time() - 3.0
+    txns = {"app": {"version": 4, "at": at + 1}}
+    legacy = [
+        {
+            "version": 0, "mode": "overwrite", "committed_at": at + 0,
+            "files": ["a.parquet", "b.parquet"],
+            "stats": {
+                "a.parquet": {"k": [0, 9]}, "b.parquet": {"k": [10, 19]},
+            },
+        },
+        {
+            "version": 1, "mode": "overwrite", "committed_at": at + 1,
+            "operation": "MERGE",
+            "files": ["a.parquet", "c.parquet"],
+            "stats": {
+                "a.parquet": {"k": [0, 9]}, "c.parquet": {"k": [50, 59]},
+            },
+            "dv_files": ["dv1.parquet"],
+            "dv_refs": {"dv1.parquet": ["a.parquet"]},
+            "txns": txns,
+        },
+        {
+            "version": 2, "mode": "overwrite", "committed_at": at + 2,
+            "files": ["a.parquet", "c.parquet"],
+            "stats": {
+                "a.parquet": {"k": [0, 9]}, "c.parquet": {"k": [50, 59]},
+            },
+            "dv_files": ["dv1.parquet"],
+            "dv_refs": {"dv1.parquet": ["a.parquet"]},
+            "txns": txns,
+            "constraints": {"pos": "k >= 0"},
+        },
+    ]
+    for rec in legacy:
+        t.log.put_if_absent(rec["version"], rec)
+    cold = VersionedTable(t.root)
+    assert cold._manifest(1)["files"] == ["a.parquet", "c.parquet"]
+    assert cold._manifest(2)["constraints"] == {"pos": "k >= 0"}
+    assert cold.last_txn_version("app") == 4
+
+    assert cold.commit_delta(1) == {
+        "mode": "overwrite",
+        "add": ["c.parquet"],
+        "remove": ["b.parquet"],
+        "dv_add": ["dv1.parquet"],
+        "dv_remove": [],
+        "add_stats": {"c.parquet": {"k": [50, 59]}},
+        "dv_refs": {"dv1.parquet": ["a.parquet"]},
+        "txn_apps": {"app"},
+        "metadata_changed": False,
+    }
+    d2 = cold.commit_delta(2)
+    assert (d2["add"], d2["remove"], d2["txn_apps"]) == ([], [], set())
+    assert d2["metadata_changed"] is True
+    assert cold.commit_delta(0)["add"] == ["a.parquet", "b.parquet"]
+    hist = {h["version"]: h for h in cold.history()}
+    h1 = hist[1]
+    assert (h1["operation"], h1["n_added"], h1["n_removed"]) == ("MERGE", 1, 1)
+    assert hist[0]["n_files"] == 2 and hist[2]["n_added"] == 0
+
+    def commutes(lo, hi, **kw):
+        args = dict(
+            blind_append=False, protected=set(), read_ranges={}, txn_apps=set()
+        )
+        args.update(kw)
+        try:
+            cold._check_commutes(lo, hi, **args)
+            return True
+        except ConcurrentCommitError:
+            return False
+
+    assert commutes(0, 1)
+    assert commutes(0, 1, read_ranges={"k": (0, 40)})  # c.parquet disjoint
+    assert not commutes(0, 1, read_ranges={"k": (40, 55)})  # overlaps c
+    assert not commutes(0, 1, protected={"b.parquet"})  # removed
+    assert not commutes(0, 1, protected={"a.parquet"})  # tombstoned
+    assert not commutes(0, 1, txn_apps={"app"})
+    assert commutes(0, 1, blind_append=True, protected={"b.parquet"})
+    assert not commutes(1, 2, blind_append=True)  # metadata change
+
+    # a delta commit folds onto the legacy base
+    v3 = cold.publish(
+        [], mode="overwrite", expected_base=2, carry=["c.parquet"],
+        annotations={"operation": "DELETE"},
+    )
+    assert cold.commit_delta(v3)["remove"] == ["a.parquet"]
+    m3 = VersionedTable(t.root)._manifest(v3)
+    assert m3 == cold._manifest(v3)
+    assert m3["files"] == ["c.parquet"] and "dv_files" not in m3
+    assert m3["constraints"] == {"pos": "k >= 0"} and m3["txns"] == txns
 
 
 def test_vacuum_checkpoints_the_oldest_retained_version(spark, tmp_path):
