@@ -34,11 +34,13 @@ class IdempotencyLedger:
     at ``<path>/_versioned``.
 
     ``store`` injects the record plane (default POSIX under
-    ``<path>/_log``) and ``payload_store`` the payload plane; the
-    table's commit log is derived from the first
-    (``LogStore.for_child``) and its data files from the second
-    (``PayloadStore.data_file_store``), so the whole ledger lives in
-    one storage domain — on a bucket end-to-end when both are S3.
+    ``<path>/_log``) and ``payload_store`` the file plane (a
+    :class:`~jde_to_datalake_spark.sources.log_store.DataFileStore`
+    rooted at ``path``, default POSIX); the table's commit log is
+    derived from the first (``LogStore.for_child``) and its data files
+    from the second (``DataFileStore.child``), so the whole ledger
+    lives in one storage domain — on a bucket end-to-end when both are
+    S3.
 
     Concurrency rides the table's optimistic concurrency: key-disjoint
     concurrent merges may both commit; a merge that overlaps an
@@ -85,9 +87,7 @@ class IdempotencyLedger:
         self._vt = VersionedTable(
             self._ptr.path_of(self.VERSIONED_DIR),
             log_store=self._ptr.store.for_child(self.VERSIONED_DIR),
-            data_store=self._ptr.payloads.data_file_store(
-                self.VERSIONED_DIR
-            ),
+            data_store=self._ptr.payloads.child(self.VERSIONED_DIR),
         )
         self._layout_checked = False
         #: (version, session, done-key frame) of the last pending_only;

@@ -47,10 +47,10 @@ class Watermark:
     type — timestamps, dates and integers all survive without a parse
     step. The publish is a POINTER FLIP through the LogStore seam
     (``store`` injects an object-store impl; default POSIX under
-    ``<path>/_log``; ``payload_store`` injects the payload plane the
-    same way — listing/retention/reaping of the data dirs — so the
-    watermark runs END-TO-END on a bucket): each advance writes the
-    new single-row parquet
+    ``<path>/_log``; ``payload_store`` injects the file plane the
+    same way — a ``DataFileStore`` rooted at ``path`` that lists,
+    ages and reaps the data dirs — so the watermark runs END-TO-END
+    on a bucket): each advance writes the new single-row parquet
     under a fresh unique dir — write-direct-to-final-name, no rename
     anywhere — then atomically publishes a pointer record at it,
     COMPARE-AND-SWAPPED on the pointer version this advance READ its

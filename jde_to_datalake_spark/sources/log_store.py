@@ -74,26 +74,23 @@ conflict matrix runs once under this injection to prove the
 writer-token recovery composes with reconciliation, not just with a
 clean append.
 
-:class:`PayloadStore` (round 12) is the PAYLOAD-plane sibling of
-this record-plane seam: the pointer's directory-shaped payloads —
-listing with mtimes for retention, prefix reaping, legacy detection
-— behind the same two implementations
-(:class:`PosixPayloadStore`, :class:`S3PayloadStore`). With both
-planes injected, the watermark and the idempotency ledger run
-end-to-end against an object store with no ``os.*`` in the control
-path; Spark moves the payload BYTES through whatever filesystem its
-connector mounts at the store's ``uri()`` (s3a on a cluster).
-
-:class:`DataFileStore` (round 12) completes the triad for the table
-itself: every driver-side DATA-file operation of ``VersionedTable``
-— staged-part adoption, footer reads, restore's existence probe,
-compaction's size gate, vacuum's listing/retention/reaping — behind
-:class:`PosixDataFileStore` (today's layout, byte-for-byte) and
-:class:`S3DataFileStore` (ListObjectsV2 + LastModified/Size,
-server-side CopyObject, DeleteObject, GetObject footers). With all
-three seams injected a versioned table — and the idempotency
-ledger's table via :meth:`PayloadStore.data_file_store` — runs its
-full lifecycle on a bucket (tests/test_versioned_object_store.py).
+:class:`DataFileStore` is the second seam, beside this record one:
+every driver-side operation on FILES. For a ``VersionedTable`` that
+is staged-part adoption, footer reads, restore's existence probe,
+compaction's size gate and vacuum's listing/retention/reaping; for
+the pointer artifacts (watermark, idempotency ledger, training
+shards, schema registry) it is the same store rooted at the artifact:
+``uri`` for Spark, ``top_dirs`` for the retention sweeps,
+``root_files`` for legacy-layout detection, ``delete_tree`` for the
+reap. Two implementations: :class:`PosixDataFileStore` (today's
+layout, byte-for-byte) and :class:`S3DataFileStore` (ListObjectsV2
+by prefix + LastModified/Size, server-side CopyObject, DeleteObject,
+GetObject footers). Spark moves the data BYTES through whatever
+filesystem its connector mounts at ``uri()`` (s3a on a cluster).
+With both seams injected a versioned table — and the idempotency
+ledger's table via :meth:`DataFileStore.child` — runs its full
+lifecycle on a bucket with no ``os.*`` in the control path
+(tests/test_versioned_object_store.py).
 """
 
 from __future__ import annotations
@@ -400,22 +397,20 @@ class S3ObjectLogStore(LogStore):
 
     def list_versions(self) -> "list[int]":
         out = []
-        token: "str | None" = None
-        while True:
-            kw = {"Bucket": self.bucket, "Prefix": f"{self.prefix}/_log/"}
-            if token:
-                kw["ContinuationToken"] = token
-            resp = self._call("list_objects_v2", **kw)
-            for obj in resp.get("Contents", []):
-                name = obj["Key"].rsplit("/", 1)[-1]
-                if name.endswith(".json"):
-                    try:
-                        out.append(int(name[:-5]))
-                    except ValueError:
-                        continue
-            if not resp.get("IsTruncated"):
-                return sorted(out)
-            token = resp.get("NextContinuationToken")
+        for obj in _s3_list_objects(
+            self.client,
+            self.bucket,
+            f"{self.prefix}/_log/",
+            self.MAX_RETRIES,
+            self.RETRY_SLEEP,
+        ):
+            name = obj["Key"].rsplit("/", 1)[-1]
+            if name.endswith(".json"):
+                try:
+                    out.append(int(name[:-5]))
+                except ValueError:
+                    continue
+        return sorted(out)
 
     def read(self, version: int) -> dict:
         try:
@@ -496,8 +491,8 @@ _THROTTLE_CODES = (
 def _s3_retry_call(client, op: str, max_retries: int, sleep: float, **kw):
     """One duck-typed S3 client call with bounded exponential-backoff
     retries on the documented transient codes — shared by the record
-    adapter (:class:`S3ObjectLogStore`) and the payload adapter
-    (:class:`S3PayloadStore`) so both planes absorb throttling
+    adapter (:class:`S3ObjectLogStore`) and the file adapter
+    (:class:`S3DataFileStore`) so both seams absorb throttling
     identically."""
     import time
 
@@ -514,210 +509,25 @@ def _s3_retry_call(client, op: str, max_retries: int, sleep: float, **kw):
                 time.sleep(sleep * (2**attempt))
 
 
-class PayloadStore:
-    """The payload-plane contract beside :class:`LogStore`'s record
-    plane: what :class:`DataDirPointer` needs from wherever its
-    directory-shaped payloads (the watermark's single-row parquet, an
-    unconverted idempotency ledger's parquet) actually live. Exactly
-    the surface SCALE.md's "Object-store data plane" mapping describes —
-
-    - ``uri(name)`` — the location handed to Spark for reading or
-      writing one payload dir (a POSIX path, an ``s3a://`` URI, …).
-    - ``payload_dirs(prefixes)`` — ``{dir_name: newest_mtime_epoch}``
-      of the top-level payload dirs under the root whose names start
-      with one of ``prefixes`` (``ListObjectsV2`` per name prefix,
-      grouped by first key segment, newest ``LastModified`` per
-      group), the input to ``clean_stale``'s retention gate. Other
-      dirs (a ledger's ``_versioned`` table) are never walked.
-    - ``root_files()`` — loose file names directly under the root
-      (the pre-pointer legacy-layout detection).
-    - ``delete_dir(name)`` — recursive reap of one payload dir.
-
-    With both planes behind seams, the ledger and the watermark run
-    end-to-end on an object store: records via :class:`LogStore`,
-    payload listing/retention/reaping via this contract, and
-    the payload BYTES via whatever filesystem Spark's own connector
-    mounts at ``uri()`` (s3a on a real cluster)."""
-
-    def uri(self, name: str = "") -> str:
-        raise NotImplementedError
-
-    def payload_dirs(self, prefixes: tuple) -> "dict[str, float]":
-        raise NotImplementedError
-
-    def root_files(self) -> "list[str]":
-        raise NotImplementedError
-
-    def delete_dir(self, name: str) -> None:
-        raise NotImplementedError
-
-    def data_file_store(self, name: str) -> "DataFileStore":
-        """A :class:`DataFileStore` rooted at one payload dir — what a
-        :class:`VersionedTable` living INSIDE the payload plane (the
-        idempotency ledger's table) injects so its
-        data-file operations stay in the same storage domain as the
-        pointer that references it."""
-        raise NotImplementedError
-
-
-class PosixPayloadStore(PayloadStore):
-    """Local-filesystem payload plane — the layout every existing
-    pointer artifact already has (payload dirs directly under the
-    pointer root). Directory mtimes participate in ``payload_dirs``
-    so even an EMPTY crashed-writer dir ages out (object stores have
-    no empty dirs, so only POSIX needs this)."""
-
-    def __init__(self, root: str):
-        self.root = root
-
-    def uri(self, name: str = "") -> str:
-        return self.root if not name else os.path.join(self.root, name)
-
-    def payload_dirs(self, prefixes: tuple) -> "dict[str, float]":
-        out: "dict[str, float]" = {}
-        try:
-            names = os.listdir(self.root)
-        except OSError:
-            return out
-        for name in names:
-            p = os.path.join(self.root, name)
-            if not name.startswith(prefixes) or not os.path.isdir(p):
-                continue
-            try:
-                newest = os.path.getmtime(p)
-                for dirpath, _dirs, files in os.walk(p):
-                    newest = max(
-                        newest,
-                        os.path.getmtime(dirpath),
-                        *(
-                            os.path.getmtime(os.path.join(dirpath, f))
-                            for f in files
-                        ),
-                    )
-            except OSError:
-                # entries moved mid-walk: an active writer — report it
-                # as fresh so no sweep can ever reclaim it this pass
-                newest = float("inf")
-            out[name] = newest
-        return out
-
-    def root_files(self) -> "list[str]":
-        try:
-            return [
-                f
-                for f in os.listdir(self.root)
-                if os.path.isfile(os.path.join(self.root, f))
-            ]
-        except OSError:
-            return []
-
-    def delete_dir(self, name: str) -> None:
-        import shutil
-
-        shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
-
-    def data_file_store(self, name: str) -> "PosixDataFileStore":
-        return PosixDataFileStore(os.path.join(self.root, name))
-
-
-class S3PayloadStore(PayloadStore):
-    """Object-store payload plane over the same duck-typed boto3
-    surface as :class:`S3ObjectLogStore` (``list_objects_v2`` with
-    ``LastModified``, ``delete_object``), sharing its
-    bounded throttle-retry discipline. ``uri_base`` defaults to the
-    ``s3a://`` mount a Spark cluster reads/writes the same keys
-    through; tests pass the fake bucket's local backing path so Spark
-    writes land exactly where the (fault-injectable) client lists
-    them.
-
-    ``payload_dirs`` mtimes come from per-object ``LastModified``
-    (an object missing it is reported as fresh — never reclaimable);
-    there are no empty dirs on an object store, so a crashed writer
-    that created no objects left nothing to reclaim. ``delete_dir``
-    deletes every object under the prefix — partial failure leaves a
-    re-listable remainder the next sweep retries (the reap is
-    advisory by contract)."""
-
-    MAX_RETRIES: int = 5
-    RETRY_SLEEP: float = 0.05
-
-    def __init__(
-        self,
-        bucket: str,
-        prefix: str,
-        client,
-        uri_base: "str | None" = None,
-    ):
-        self.bucket = bucket
-        self.prefix = prefix.strip("/")
-        self.client = client
-        self.uri_base = (
-            uri_base or f"s3a://{bucket}/{self.prefix}"
-        ).rstrip("/")
-
-    def uri(self, name: str = "") -> str:
-        return self.uri_base if not name else f"{self.uri_base}/{name}"
-
-    def _list(self, prefix: str):
-        """Yield ``(key, mtime_epoch)`` for every object under
-        ``prefix`` (paginated)."""
-        token: "str | None" = None
-        while True:
-            kw = {"Bucket": self.bucket, "Prefix": prefix}
-            if token:
-                kw["ContinuationToken"] = token
-            resp = _s3_retry_call(
-                self.client,
-                "list_objects_v2",
-                self.MAX_RETRIES,
-                self.RETRY_SLEEP,
-                **kw,
-            )
-            for obj in resp.get("Contents", []):
-                yield obj["Key"], _epoch(obj.get("LastModified"))
-            if not resp.get("IsTruncated"):
-                return
-            token = resp.get("NextContinuationToken")
-
-    def payload_dirs(self, prefixes: tuple) -> "dict[str, float]":
-        out: "dict[str, float]" = {}
-        base = f"{self.prefix}/"
-        for p in prefixes:
-            for key, mtime in self._list(base + p):
-                rel = key[len(base):]
-                if "/" not in rel:
-                    continue
-                name = rel.split("/", 1)[0]
-                out[name] = max(out.get(name, 0.0), mtime)
-        return out
-
-    def root_files(self) -> "list[str]":
-        base = f"{self.prefix}/"
-        return [
-            key[len(base):]
-            for key, _ in self._list(base)
-            if "/" not in key[len(base):]
-        ]
-
-    def delete_dir(self, name: str) -> None:
-        keys = [key for key, _ in self._list(f"{self.prefix}/{name}/")]
-        for key in keys:
-            _s3_retry_call(
-                self.client,
-                "delete_object",
-                self.MAX_RETRIES,
-                self.RETRY_SLEEP,
-                Bucket=self.bucket,
-                Key=key,
-            )
-
-    def data_file_store(self, name: str) -> "S3DataFileStore":
-        return S3DataFileStore(
-            self.bucket,
-            f"{self.prefix}/{name}",
-            self.client,
-            uri_base=self.uri(name),
+def _s3_list_objects(
+    client, bucket: str, prefix: str, max_retries: int, sleep: float
+):
+    """Yield every ``ListObjectsV2`` entry under ``prefix``, following
+    ``ContinuationToken`` pages; each page request absorbs throttles
+    through :func:`_s3_retry_call`. The one listing loop of both S3
+    adapters."""
+    token: "str | None" = None
+    while True:
+        kw = {"Bucket": bucket, "Prefix": prefix}
+        if token:
+            kw["ContinuationToken"] = token
+        resp = _s3_retry_call(
+            client, "list_objects_v2", max_retries, sleep, **kw
         )
+        yield from resp.get("Contents", [])
+        if not resp.get("IsTruncated"):
+            return
+        token = resp.get("NextContinuationToken")
 
 
 def _epoch(last_modified) -> float:
@@ -731,12 +541,13 @@ def _epoch(last_modified) -> float:
 
 
 class DataFileStore:
-    """The DATA-file plane contract of a :class:`VersionedTable` —
-    the third and last seam beside :class:`LogStore` (commit records)
-    and :class:`PayloadStore` (pointer payload dirs). Everything the
-    table does to data files OUTSIDE a Spark job goes through this
-    interface, so a table deploys onto an object store by injecting
-    one implementation: Spark moves the bytes through whatever
+    """The file-plane contract beside :class:`LogStore` (commit
+    records). Everything a :class:`VersionedTable` does to data files
+    OUTSIDE a Spark job goes through this interface, and so does every
+    pointer artifact's payload-dir handling (:class:`DataDirPointer`,
+    the training shards, the schema registry's legacy check), so an
+    artifact deploys onto an object store by injecting one
+    implementation: Spark moves the bytes through whatever
     filesystem its connector mounts at ``uri()`` (s3a on a cluster),
     and the driver-side metadata operations — staged-file adoption,
     footer reads, vacuum's listing/retention/reaping — map exactly as
@@ -772,13 +583,30 @@ class DataFileStore:
         retention mtimes (legacy adoption, staged-output discovery)."""
         return sorted(self.parquet_mtimes(rel))
 
-    def staging_dirs(self) -> "dict[str, float]":
-        """``{name: newest_mtime_epoch}`` of top-level ``_staging-*``
-        dirs — vacuum's crashed-writer reclamation input. The NEWEST
-        internal mtime (object store: max ``LastModified`` under the
-        prefix) is what ages, so an in-flight writer still producing
-        files is never reclaimed; a dir that cannot be walked reports
-        ``inf`` (alive — never reclaimable this sweep)."""
+    def top_dirs(self, prefixes: tuple) -> "dict[str, float]":
+        """``{name: newest_mtime_epoch}`` of the top-level dirs whose
+        names start with one of ``prefixes`` — the input of every
+        retention sweep (vacuum's ``_staging-*``, a pointer's
+        ``data-*``, the training shards' ``shards-*``). Other dirs (a
+        ledger's ``_versioned`` table) are never walked; an object
+        store lists one ``ListObjectsV2`` prefix per name prefix. The
+        NEWEST internal mtime (object store: max ``LastModified``
+        under the prefix) is what ages, so an in-flight writer still
+        producing files is never reclaimed; a dir that cannot be
+        walked reports ``inf`` (alive — never reclaimable this
+        sweep)."""
+        raise NotImplementedError
+
+    def root_files(self) -> "list[str]":
+        """Loose file names directly under the root (the pre-pointer
+        legacy-layout detection)."""
+        raise NotImplementedError
+
+    def child(self, name: str) -> "DataFileStore":
+        """A store of the same kind rooted at ``<root>/<name>`` — what
+        a :class:`VersionedTable` living inside a pointer artifact
+        (the idempotency ledger's table) injects, so its data files
+        stay in the same storage domain as the pointer."""
         raise NotImplementedError
 
     def move(self, src_rel: str, dst_rel: str) -> None:
@@ -870,15 +698,17 @@ class PosixDataFileStore(DataFileStore):
                     continue  # deleted mid-walk: already gone
         return out
 
-    def staging_dirs(self) -> "dict[str, float]":
+    def top_dirs(self, prefixes: tuple) -> "dict[str, float]":
+        # directory mtimes take part, so even an EMPTY crashed-writer
+        # dir ages out (object stores have no empty dirs)
         out: "dict[str, float]" = {}
         try:
-            names = sorted(os.listdir(self.root))
+            names = os.listdir(self.root)
         except OSError:
             return out
         for name in names:
             p = os.path.join(self.root, name)
-            if not name.startswith("_staging-") or not os.path.isdir(p):
+            if not name.startswith(prefixes) or not os.path.isdir(p):
                 continue
             try:
                 newest = os.path.getmtime(p)
@@ -896,6 +726,19 @@ class PosixDataFileStore(DataFileStore):
                 newest = float("inf")
             out[name] = newest
         return out
+
+    def root_files(self) -> "list[str]":
+        try:
+            return [
+                f
+                for f in os.listdir(self.root)
+                if os.path.isfile(os.path.join(self.root, f))
+            ]
+        except OSError:
+            return []
+
+    def child(self, name: str) -> "PosixDataFileStore":
+        return PosixDataFileStore(os.path.join(self.root, name))
 
     def move(self, src_rel: str, dst_rel: str) -> None:
         src, dst = self._path(src_rel), self._path(dst_rel)
@@ -948,8 +791,8 @@ class PosixDataFileStore(DataFileStore):
 
 
 class S3DataFileStore(DataFileStore):
-    """Object-store data plane over the same duck-typed boto3 surface
-    as the record and payload adapters (``list_objects_v2`` with
+    """Object-store file plane over the same duck-typed boto3 surface
+    as the record adapter (``list_objects_v2`` with
     ``LastModified``/``Size``, ``get_object``, ``delete_object``,
     ``copy_object``), sharing their bounded throttle-retry
     discipline. ``uri_base`` defaults to the ``s3a://`` mount a Spark
@@ -992,25 +835,26 @@ class S3DataFileStore(DataFileStore):
             return rel  # absolute cross-table reference
         return self.uri_base if not rel else f"{self.uri_base}/{rel}"
 
-    def _list(self, rel: str = ""):
+    def _objects(self, prefix: str):
+        return _s3_list_objects(
+            self.client,
+            self.bucket,
+            prefix,
+            self.MAX_RETRIES,
+            self.RETRY_SLEEP,
+        )
+
+    def _list(self, rel: str = "", name_prefix: str = ""):
         """Yield ``(relpath, mtime_epoch, size)`` for every object
-        under ``rel`` (paginated; relpaths relative to ``rel``)."""
+        under ``rel`` whose relpath starts with ``name_prefix``
+        (relpaths relative to ``rel``)."""
         base = f"{self._key(rel)}/"
-        token: "str | None" = None
-        while True:
-            kw = {"Bucket": self.bucket, "Prefix": base}
-            if token:
-                kw["ContinuationToken"] = token
-            resp = self._call("list_objects_v2", **kw)
-            for obj in resp.get("Contents", []):
-                yield (
-                    obj["Key"][len(base):],
-                    _epoch(obj.get("LastModified")),
-                    int(obj.get("Size", 0)),
-                )
-            if not resp.get("IsTruncated"):
-                return
-            token = resp.get("NextContinuationToken")
+        for obj in self._objects(base + name_prefix):
+            yield (
+                obj["Key"][len(base):],
+                _epoch(obj.get("LastModified")),
+                int(obj.get("Size", 0)),
+            )
 
     def parquet_mtimes(self, rel: str = "") -> "dict[str, float]":
         out: "dict[str, float]" = {}
@@ -1022,15 +866,26 @@ class S3DataFileStore(DataFileStore):
                 out[relpath] = mtime
         return out
 
-    def staging_dirs(self) -> "dict[str, float]":
+    def top_dirs(self, prefixes: tuple) -> "dict[str, float]":
         out: "dict[str, float]" = {}
-        for relpath, mtime, _size in self._list():
-            if "/" not in relpath:
-                continue
-            top = relpath.split("/", 1)[0]
-            if top.startswith("_staging-"):
+        for p in prefixes:
+            for relpath, mtime, _size in self._list(name_prefix=p):
+                if "/" not in relpath:
+                    continue  # a loose file, not a dir
+                top = relpath.split("/", 1)[0]
                 out[top] = max(out.get(top, 0.0), mtime)
         return out
+
+    def root_files(self) -> "list[str]":
+        return [r for r, _m, _s in self._list() if "/" not in r]
+
+    def child(self, name: str) -> "S3DataFileStore":
+        return S3DataFileStore(
+            self.bucket,
+            self._key(name),
+            self.client,
+            uri_base=self.uri(name),
+        )
 
     def move(self, src_rel: str, dst_rel: str) -> None:
         self.adopt_copy(src_rel, dst_rel)
@@ -1062,21 +917,10 @@ class S3DataFileStore(DataFileStore):
         real S3 both answer exact prefixes cheaply; no head_object in
         the duck-typed surface."""
         key = self._key(rel)
-        token: "str | None" = None
-        while True:
-            kw = {"Bucket": self.bucket, "Prefix": key}
-            if token:
-                kw["ContinuationToken"] = token
-            resp = self._call("list_objects_v2", **kw)
-            for obj in resp.get("Contents", []):
-                if obj["Key"] == key:
-                    return (
-                        _epoch(obj.get("LastModified")),
-                        int(obj.get("Size", 0)),
-                    )
-            if not resp.get("IsTruncated"):
-                return None
-            token = resp.get("NextContinuationToken")
+        for obj in self._objects(key):
+            if obj["Key"] == key:
+                return _epoch(obj.get("LastModified")), int(obj.get("Size", 0))
+        return None
 
     def exists(self, rel: str) -> bool:
         return self._stat(rel) is not None
@@ -1197,11 +1041,11 @@ class DataDirPointer:
         root: str,
         store: LogStore,
         auto_reclaim_seconds: "float | None" = 3600.0,
-        payloads: "PayloadStore | None" = None,
+        payloads: "DataFileStore | None" = None,
     ):
         self.root = root
         self.store = store
-        self.payloads = payloads or PosixPayloadStore(root)
+        self.payloads = payloads or PosixDataFileStore(root)
         self.auto_reclaim_seconds = auto_reclaim_seconds
 
     def latest(self) -> "tuple[int, dict] | tuple[None, None]":
@@ -1376,12 +1220,12 @@ class DataDirPointer:
         RECORDS leaked by a crash between a winning put and its trim
         are also dropped. Returns removed payload locations.
 
-        The payload walk goes through the :class:`PayloadStore` seam
-        (``payload_dirs(("data-",))`` = a listing of the ``data-*``
-        dirs only, with per-object mtimes, so a converted ledger's
-        ``_versioned`` table is never walked; ``delete_dir`` = prefix
+        The payload walk goes through the :class:`DataFileStore` seam
+        (``top_dirs(("data-",))`` = a listing of the ``data-*`` dirs
+        only, with per-object mtimes, so a converted ledger's
+        ``_versioned`` table is never walked; ``delete_tree`` = prefix
         reap), so the same sweep runs against a bucket exactly as
-        against POSIX. Every payload-plane step
+        against POSIX. Every file-plane step
         is ADVISORY: a throttled listing or a failed delete never
         fails the sweep's caller (the next flip or sweep retries) —
         a reclaim can only ever be deferred, never forced."""
@@ -1405,7 +1249,7 @@ class DataDirPointer:
                         continue
         cutoff = time.time() - retention_seconds
         try:
-            dirs = self.payloads.payload_dirs(("data-",))
+            dirs = self.payloads.top_dirs(("data-",))
         except Exception:  # noqa: BLE001 — the sweep is advisory
             return removed  # throttled listing: reclaim next sweep
         for name in sorted(dirs):
@@ -1414,7 +1258,7 @@ class DataDirPointer:
             if self.current() == name:  # re-read: authoritative
                 continue
             try:
-                self.payloads.delete_dir(name)
+                self.payloads.delete_tree(name)
             except Exception:  # noqa: BLE001 — the reap is advisory
                 continue  # partial deletes re-list and retry next sweep
             removed.append(self.payloads.uri(name))

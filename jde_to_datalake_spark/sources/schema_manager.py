@@ -122,16 +122,16 @@ class SchemaRegistry:
 
     def __init__(self, path: str, store=None, payloads=None):
         from jde_to_datalake_spark.sources.log_store import (
+            PosixDataFileStore,
             PosixLogStore,
-            PosixPayloadStore,
         )
 
         self.path = path
         self.store = store or PosixLogStore(path)
-        # payload plane only for legacy-layout detection (loose
-        # parquet files at the root) — inject beside ``store`` on an
-        # object-store deployment
-        self.payloads = payloads or PosixPayloadStore(path)
+        # file plane (a DataFileStore at ``path``) only for legacy-
+        # layout detection (loose parquet files at the root) — inject
+        # beside ``store`` on an object-store deployment
+        self.payloads = payloads or PosixDataFileStore(path)
 
     def _records(self) -> list[dict]:
         versions = self.store.list_versions()

@@ -50,12 +50,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jde_to_datalake_spark.sources.log_store import (
+    DataFileStore,
     LogConflict,
     LogStore,
-    PayloadStore,
     PointerSlot,
+    PosixDataFileStore,
     PosixLogStore,
-    PosixPayloadStore,
 )
 
 
@@ -64,14 +64,15 @@ def _slot(root: str, store: "LogStore | None") -> PointerSlot:
 
 
 def _payloads(
-    root: str, payload_store: "PayloadStore | None"
-) -> PayloadStore:
-    """The data-dir plane (where `shards-*` actually live): listing
-    with mtimes for the staging sweep, prefix reaping, and the URI
-    Spark reads/writes — injectable like the manifest's ``store``, so
-    the whole artifact deploys on an object store (default POSIX
-    under ``root``)."""
-    return payload_store or PosixPayloadStore(root)
+    root: str, payload_store: "DataFileStore | None"
+) -> DataFileStore:
+    """The file plane (where `shards-*` actually live): a
+    :class:`DataFileStore` rooted at ``root`` — listing with mtimes
+    for the staging sweep, prefix reaping, and the URI Spark
+    reads/writes — injectable like the manifest's ``store``, so the
+    whole artifact deploys on an object store (default POSIX under
+    ``root``)."""
+    return payload_store or PosixDataFileStore(root)
 
 
 def _row_hash(id_col: str, tokens_col: str) -> F.Column:
@@ -99,7 +100,7 @@ def write_training_shards(
     id_col: str = "pack_id",
     tokens_col: str = "tokens",
     store: "LogStore | None" = None,
-    payload_store: "PayloadStore | None" = None,
+    payload_store: "DataFileStore | None" = None,
 ) -> dict:
     """Export pack rows as size-bounded shards + manifest; returns the
     manifest dict. Raises ``FileExistsError`` if ``root`` already holds
@@ -107,7 +108,7 @@ def write_training_shards(
     or version roots the way the versioned table versions manifests).
     ``store`` injects the manifest's publish primitive (default POSIX
     under ``<root>/_log``); ``payload_store`` injects the data-dir
-    plane the same way.
+    plane (a :class:`DataFileStore` rooted at ``root``) the same way.
 
     Cost: ONE shuffle (the repartition on the derived shard key); the
     stats aggregation reads back the written files (so the manifest
@@ -197,7 +198,7 @@ def write_training_shards(
         if existing is not None and existing.get("data_dir") == data_name:
             return manifest  # our own put landed; ACK was lost
         try:
-            payloads.delete_dir(data_name)
+            payloads.delete_tree(data_name)
         except Exception:  # noqa: BLE001 — cleanup is advisory
             pass  # clean_stale_stagings reclaims the orphan later
         raise FileExistsError(
@@ -219,7 +220,7 @@ def read_training_shards(
     shards: list[int] | None = None,
     verify: bool = False,
     store: "LogStore | None" = None,
-    payload_store: "PayloadStore | None" = None,
+    payload_store: "DataFileStore | None" = None,
 ) -> DataFrame:
     """Read exported packs through the manifest. ``shards`` selects a
     subset (the filter on the partition column prunes to those
@@ -270,7 +271,7 @@ def clean_stale_stagings(
     root: str,
     store: "LogStore | None" = None,
     retention_seconds: float = 3600.0,
-    payload_store: "PayloadStore | None" = None,
+    payload_store: "DataFileStore | None" = None,
 ) -> list[str]:
     """Remove ``shards-*`` data directories that no manifest
     references — the debris of a crashed export (died between the
@@ -283,8 +284,9 @@ def clean_stale_stagings(
     data but not yet its manifest is mid-publish, not debris — pass 0
     only when no exporter can be active), and the manifest is
     re-read immediately before each delete so a publish that lands
-    mid-sweep keeps its data. The walk/reap go through the payload
-    store (listing with mtimes, prefix delete), and every step is
+    mid-sweep keeps its data. The walk/reap go through the file store
+    (``top_dirs`` listing with mtimes, ``delete_tree``), and every
+    step is
     ADVISORY under faults — a throttled listing or failed delete
     defers to the next sweep, never raises past it."""
     import time
@@ -294,7 +296,7 @@ def clean_stale_stagings(
     payloads = _payloads(root, payload_store)
     cutoff = time.time() - retention_seconds
     try:
-        dirs = payloads.payload_dirs(("shards-", "_shards-"))
+        dirs = payloads.top_dirs(("shards-", "_shards-"))
     except Exception:  # noqa: BLE001 — the sweep is advisory
         return removed  # throttled listing: reclaim next sweep
     for name in sorted(dirs):
@@ -306,7 +308,7 @@ def clean_stale_stagings(
         if manifest is not None and manifest.get("data_dir") == name:
             continue
         try:
-            payloads.delete_dir(name)
+            payloads.delete_tree(name)
         except Exception:  # noqa: BLE001 — the reap is advisory
             continue  # partial deletes re-list and retry next sweep
         removed.append(payloads.uri(name))
@@ -338,7 +340,7 @@ def read_shard_shuffled(
     shard: int,
     seed: int,
     store: "LogStore | None" = None,
-    payload_store: "PayloadStore | None" = None,
+    payload_store: "DataFileStore | None" = None,
 ) -> DataFrame:
     """One shard's rows in a seeded deterministic order: sorted by
     xxhash64(seed, pack_id). The sort is a GLOBAL orderBy — a shard

@@ -2685,7 +2685,8 @@ class VersionedTable:
         untouched = [
             f for f in manifest["files"] if os.path.basename(f) not in touched_set
         ]
-        rows = self._live_scan(spark, touched, prev)
+        scan = self._live_scan(spark, touched, prev)
+        rows = scan
         # assignments naming a column the TOUCHED files don't carry are
         # schema evolution, exactly like commit/merge (there is no
         # table-wide schema to validate against — schema is per-file):
@@ -2723,6 +2724,11 @@ class VersionedTable:
                 )
             else:
                 updated = updated.withColumn(name, F.expr(expr_sql))
+        # a SET expression wider than its column (bigint into int)
+        # must not rewrite the touched files in the wider type while
+        # carried files keep theirs — the same alignment as
+        # _publish_rewrite; a value the column cannot hold raises
+        updated = self._cast_like(updated, scan)
         self._enforce_constraints(
             updated.filter(F.col("__upd")).drop("__upd")
         )
@@ -4322,7 +4328,9 @@ class VersionedTable:
         ago; entries moving mid-walk mark the owner as alive."""
         return [
             name
-            for name, newest in sorted(self.data.staging_dirs().items())
+            for name, newest in sorted(
+                self.data.top_dirs(("_staging-",)).items()
+            )
             if newest <= cutoff
         ]
 

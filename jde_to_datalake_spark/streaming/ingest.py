@@ -327,220 +327,206 @@ def ingest_batch(
     ).persist()
     extra_persists: list = []
     try:
-        return _ingest_batch_inner(
-            spark, verdicts, pre_bloom, corpus, index, text_col, id_col,
-            bands, num_hashes, band_size, shingle_n,
-            bloom_filter, bloom_bits, bloom_k, txn, metrics,
-            extra_persists,
-        )
+        counts = verdicts.agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            *[
+                F.sum(F.col(c).cast("bigint")).alias(c)
+                for c in _VERDICT_COLS
+            ],
+        ).collect()[0]
+        novel = verdicts.filter(F.col("is_novel")).drop(*_VERDICT_COLS)
+        n_near_flagged = 0
+
+        def _append_metrics_row() -> None:
+            """The funnel-trail append, INSIDE the crash matrix (see
+            ingest_batch's docstring): txn-stamped on the metrics table
+            itself so a replayed batch never appends a second (all-known,
+            n_novel=0) row, and positioned before the index append so the
+            row recorded for any pre-index replay carries true counts."""
+            if metrics is None:
+                return
+            batch_id = int(txn[1]) if txn is not None else -1
+            if txn is not None:
+                rec = metrics.last_txn_version(txn[0])
+                if rec is not None and rec >= batch_id:
+                    return  # replayed batch: its row already landed
+            row = spark.createDataFrame(
+                [(
+                    batch_id,
+                    counts["n_rows"],
+                    counts["is_known"] or 0,
+                    counts["is_batch_first"] or 0,
+                    counts["is_novel"] or 0,
+                    n_near_flagged,
+                )],
+                "batch_id bigint, n_rows bigint, n_known bigint, "
+                "n_batch_first bigint, n_novel bigint, n_near_flagged bigint",
+            )
+            if txn is not None:
+                metrics.commit(row, mode="append", txn=txn)
+            else:
+                metrics.commit(row, mode="append")
+
+        if counts["is_novel"]:
+            new_bands = None
+            if bands is not None:
+                # the batch's own band keys, computed ONCE (row-local
+                # projection of the persisted verdict frame) and reused
+                # for the probe-value collect, the candidate join, the
+                # batch-ids collect, the seen anti-join, and the guarded
+                # append below — persisted so the MinHash banding CPU
+                # runs once per batch, not once per consumer
+                new_bands = band_index(
+                    novel, num_hashes, band_size, shingle_n, text_col, id_col
+                ).persist()
+                extra_persists.append(new_bands)
+                # the probe side always includes the batch's OWN keys:
+                # two near-identical docs arriving in one micro-batch
+                # must flag each other (intra-batch near-dups were
+                # invisible when the probe ran only against the
+                # pre-batch index — and made n_near_flagged depend on
+                # where the batch boundary happened to fall)
+                intra_side = new_bands.select(id_col, "band", "band_hash")
+                if bands.latest_version() is not None:
+                    # O(probe) scan of the band artifact: collect the
+                    # batch's distinct band hashes (bounded by |batch| x
+                    # n_bands) and plan the index read over ONLY the files
+                    # whose footer band_hash range can contain one — on a
+                    # band_hash-clustered table (the compaction below) a
+                    # micro-batch reads a key-proportional sliver, never
+                    # the whole corpus artifact. The reference's ledger
+                    # probe (dag_bakery_system_to_jde.py:310-320) is the
+                    # same O(probe) posture against its processed-keys
+                    # table.
+                    probe_vals = [
+                        r[0]
+                        for r in new_bands.select("band_hash")
+                        .distinct()
+                        .collect()
+                    ]
+                    probe_side = (
+                        bands.read_where_in(spark, "band_hash", probe_vals)
+                        .select(id_col, "band", "band_hash")
+                        .unionByName(intra_side)
+                    )
+                else:
+                    # first batch / no persisted artifact yet: intra-batch
+                    # pairs are still real near-dups
+                    probe_side = intra_side
+                cand_counts = (
+                    incremental_lsh_candidates(
+                        novel, probe_side,
+                        num_hashes=num_hashes, band_size=band_size,
+                        n=shingle_n, text_col=text_col, id_col=id_col,
+                        new_bands=new_bands,
+                    )
+                    .groupBy("new_id")
+                    .agg(
+                        F.count(F.lit(1))
+                        .cast("bigint")
+                        .alias("n_near_candidates")
+                    )
+                )
+                novel = (
+                    novel.join(
+                        cand_counts,
+                        novel[id_col] == cand_counts["new_id"],
+                        "left",
+                    )
+                    .drop("new_id")
+                    .withColumn(
+                        "n_near_candidates",
+                        F.coalesce(
+                            F.col("n_near_candidates"),
+                            F.lit(0).cast("bigint"),
+                        ),
+                    )
+                )
+                # the annotated novel frame feeds the flag count, the
+                # corpus write, the index append, and the bloom refresh —
+                # persist so the candidate join runs once per batch
+                novel = novel.persist()
+                extra_persists.append(novel)
+                n_near_flagged = novel.filter(
+                    F.col("n_near_candidates") > 0
+                ).count()
+            # corpus first, then bands (guarded), the exact index LAST —
+            # see the docstrings' crash matrix. Streamed batches carry a
+            # txn stamp: O(batch) append, re-delivery after a post-corpus
+            # crash skips the write. Backfills (txn=None) keep the
+            # content-keyed MERGE.
+            if txn is not None:
+                app_id, txn_version = txn
+                recorded = corpus.last_txn_version(app_id)
+                if recorded is None or recorded < int(txn_version):
+                    corpus.commit(novel, mode="append", txn=txn)
+            else:
+                corpus.merge(spark, novel, key="fingerprint")
+            _append_metrics_row()  # after corpus, BEFORE the index append
+            if bands is not None:
+                if bands.latest_version() is not None:
+                    # crash-replay guard (has this doc's bands already been
+                    # appended?) — also an O(probe) stats-pruned read: only
+                    # files whose id range can contain a batch id are
+                    # scanned (a redelivered batch hits exactly its own
+                    # earlier commit's files; unrelated commits prune away
+                    # whenever batch id ranges are disjoint)
+                    batch_ids = [
+                        r[0]
+                        for r in new_bands.select(id_col).distinct().collect()
+                    ]
+                    seen = (
+                        bands.read_where_in(spark, id_col, batch_ids)
+                        .select(F.col(id_col).alias("__seen_id"))
+                        .distinct()
+                    )
+                    new_bands = new_bands.join(
+                        seen,
+                        new_bands[id_col] == seen["__seen_id"],
+                        "left_anti",
+                    )
+                if not new_bands.isEmpty():
+                    # range-cluster the append on band_hash so every data
+                    # file carries a narrow disjoint band_hash footer range
+                    # — what makes the probe pruning above bite from the
+                    # very first commit (compaction re-tightens the table
+                    # as commits accumulate)
+                    bands.commit(
+                        new_bands.repartitionByRange(
+                            BAND_COMMIT_FILES, F.col("band_hash")
+                        ).sortWithinPartitions("band_hash"),
+                        mode="append",
+                    )
+            index.commit(novel.select("fingerprint"), mode="append")
+            if bloom_filter is not None:
+                _refresh_bloom(
+                    spark, bloom_filter, index, pre_bloom,
+                    novel.select("fingerprint"), bloom_bits, bloom_k,
+                )
+        else:
+            _append_metrics_row()  # all-known/empty batches trail too
+            if bloom_filter is not None and pre_bloom is None:
+                # nothing appended but the filter is stale/absent (e.g.
+                # after a crash between index append and filter commit) —
+                # rebuild now so the NEXT batch gets the prefilter back
+                _refresh_bloom(
+                    spark, bloom_filter, index, None, None, bloom_bits, bloom_k
+                )
+        stats = {
+            "n_rows": counts["n_rows"],
+            "n_known": counts["is_known"] or 0,
+            "n_batch_first": counts["is_batch_first"] or 0,
+            "n_novel": counts["is_novel"] or 0,
+            "n_near_flagged": n_near_flagged,
+        }
+        if bloom_filter is not None:
+            stats["bloom_prefiltered"] = pre_bloom is not None
+        return stats
     finally:
         for df in extra_persists:
             df.unpersist()
         verdicts.unpersist()
         batch_df.unpersist()
-
-
-def _ingest_batch_inner(
-    spark,
-    verdicts: DataFrame,
-    pre_bloom: "dict | None",
-    corpus: VersionedTable,
-    index: VersionedTable,
-    text_col: str,
-    id_col: str,
-    bands: VersionedTable | None,
-    num_hashes: int,
-    band_size: int,
-    shingle_n: int,
-    bloom_filter: VersionedTable | None = None,
-    bloom_bits: int = 1 << 20,
-    bloom_k: int = 5,
-    txn: "tuple[str, int] | None" = None,
-    metrics: VersionedTable | None = None,
-    to_unpersist: "list | None" = None,
-) -> dict:
-    counts = verdicts.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        *[
-            F.sum(F.col(c).cast("bigint")).alias(c)
-            for c in _VERDICT_COLS
-        ],
-    ).collect()[0]
-    novel = verdicts.filter(F.col("is_novel")).drop(*_VERDICT_COLS)
-    n_near_flagged = 0
-    if to_unpersist is None:
-        to_unpersist = []  # caller-owned when passed (exception-safe)
-
-    def _append_metrics_row() -> None:
-        """The funnel-trail append, INSIDE the crash matrix (see
-        ingest_batch's docstring): txn-stamped on the metrics table
-        itself so a replayed batch never appends a second (all-known,
-        n_novel=0) row, and positioned before the index append so the
-        row recorded for any pre-index replay carries true counts."""
-        if metrics is None:
-            return
-        batch_id = int(txn[1]) if txn is not None else -1
-        if txn is not None:
-            rec = metrics.last_txn_version(txn[0])
-            if rec is not None and rec >= batch_id:
-                return  # replayed batch: its row already landed
-        row = spark.createDataFrame(
-            [(
-                batch_id,
-                counts["n_rows"],
-                counts["is_known"] or 0,
-                counts["is_batch_first"] or 0,
-                counts["is_novel"] or 0,
-                n_near_flagged,
-            )],
-            "batch_id bigint, n_rows bigint, n_known bigint, "
-            "n_batch_first bigint, n_novel bigint, n_near_flagged bigint",
-        )
-        if txn is not None:
-            metrics.commit(row, mode="append", txn=txn)
-        else:
-            metrics.commit(row, mode="append")
-
-    if counts["is_novel"]:
-        new_bands = None
-        if bands is not None:
-            # the batch's own band keys, computed ONCE (row-local
-            # projection of the persisted verdict frame) and reused
-            # for the probe-value collect, the candidate join, the
-            # batch-ids collect, the seen anti-join, and the guarded
-            # append below — persisted so the MinHash banding CPU
-            # runs once per batch, not once per consumer
-            new_bands = band_index(
-                novel, num_hashes, band_size, shingle_n, text_col, id_col
-            ).persist()
-            to_unpersist.append(new_bands)
-            # the probe side always includes the batch's OWN keys:
-            # two near-identical docs arriving in one micro-batch
-            # must flag each other (intra-batch near-dups were
-            # invisible when the probe ran only against the
-            # pre-batch index — and made n_near_flagged depend on
-            # where the batch boundary happened to fall)
-            intra_side = new_bands.select(id_col, "band", "band_hash")
-            if bands.latest_version() is not None:
-                # O(probe) scan of the band artifact: collect the
-                # batch's distinct band hashes (bounded by |batch| x
-                # n_bands) and plan the index read over ONLY the files
-                # whose footer band_hash range can contain one — on a
-                # band_hash-clustered table (the compaction below) a
-                # micro-batch reads a key-proportional sliver, never
-                # the whole corpus artifact. The reference's ledger
-                # probe (dag_bakery_system_to_jde.py:310-320) is the
-                # same O(probe) posture against its processed-keys
-                # table.
-                probe_vals = [
-                    r[0]
-                    for r in new_bands.select("band_hash")
-                    .distinct()
-                    .collect()
-                ]
-                probe_side = bands.read_where_in(
-                    spark, "band_hash", probe_vals
-                ).select(id_col, "band", "band_hash").unionByName(intra_side)
-            else:
-                # first batch / no persisted artifact yet: intra-batch
-                # pairs are still real near-dups
-                probe_side = intra_side
-            cand_counts = (
-                incremental_lsh_candidates(
-                    novel, probe_side,
-                    num_hashes=num_hashes, band_size=band_size,
-                    n=shingle_n, text_col=text_col, id_col=id_col,
-                    new_bands=new_bands,
-                )
-                .groupBy("new_id")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("n_near_candidates"))
-            )
-            novel = (
-                novel.join(
-                    cand_counts, novel[id_col] == cand_counts["new_id"], "left"
-                )
-                .drop("new_id")
-                .withColumn(
-                    "n_near_candidates",
-                    F.coalesce(F.col("n_near_candidates"), F.lit(0).cast("bigint")),
-                )
-            )
-            # the annotated novel frame feeds the flag count, the
-            # corpus write, the index append, and the bloom refresh —
-            # persist so the candidate join runs once per batch
-            novel = novel.persist()
-            to_unpersist.append(novel)
-            n_near_flagged = novel.filter(
-                F.col("n_near_candidates") > 0
-            ).count()
-        # corpus first, then bands (guarded), the exact index LAST —
-        # see the docstrings' crash matrix. Streamed batches carry a
-        # txn stamp: O(batch) append, re-delivery after a post-corpus
-        # crash skips the write. Backfills (txn=None) keep the
-        # content-keyed MERGE.
-        if txn is not None:
-            app_id, txn_version = txn
-            recorded = corpus.last_txn_version(app_id)
-            if recorded is None or recorded < int(txn_version):
-                corpus.commit(novel, mode="append", txn=txn)
-        else:
-            corpus.merge(spark, novel, key="fingerprint")
-        _append_metrics_row()  # after corpus, BEFORE the index append
-        if bands is not None:
-            if bands.latest_version() is not None:
-                # crash-replay guard (has this doc's bands already been
-                # appended?) — also an O(probe) stats-pruned read: only
-                # files whose id range can contain a batch id are
-                # scanned (a redelivered batch hits exactly its own
-                # earlier commit's files; unrelated commits prune away
-                # whenever batch id ranges are disjoint)
-                batch_ids = [
-                    r[0]
-                    for r in new_bands.select(id_col).distinct().collect()
-                ]
-                seen = bands.read_where_in(spark, id_col, batch_ids).select(
-                    F.col(id_col).alias("__seen_id")
-                ).distinct()
-                new_bands = new_bands.join(
-                    seen, new_bands[id_col] == seen["__seen_id"], "left_anti"
-                )
-            if not new_bands.isEmpty():
-                # range-cluster the append on band_hash so every data
-                # file carries a narrow disjoint band_hash footer range
-                # — what makes the probe pruning above bite from the
-                # very first commit (compaction re-tightens the table
-                # as commits accumulate)
-                bands.commit(
-                    new_bands.repartitionByRange(
-                        BAND_COMMIT_FILES, F.col("band_hash")
-                    ).sortWithinPartitions("band_hash"),
-                    mode="append",
-                )
-        index.commit(novel.select("fingerprint"), mode="append")
-        if bloom_filter is not None:
-            _refresh_bloom(
-                spark, bloom_filter, index, pre_bloom,
-                novel.select("fingerprint"), bloom_bits, bloom_k,
-            )
-    else:
-        _append_metrics_row()  # all-known/empty batches trail too
-        if bloom_filter is not None and pre_bloom is None:
-            # nothing appended but the filter is stale/absent (e.g.
-            # after a crash between index append and filter commit) —
-            # rebuild now so the NEXT batch gets the prefilter back
-            _refresh_bloom(
-                spark, bloom_filter, index, None, None, bloom_bits, bloom_k
-            )
-    stats = {
-        "n_rows": counts["n_rows"],
-        "n_known": counts["is_known"] or 0,
-        "n_batch_first": counts["is_batch_first"] or 0,
-        "n_novel": counts["is_novel"] or 0,
-        "n_near_flagged": n_near_flagged,
-    }
-    if bloom_filter is not None:
-        stats["bloom_prefiltered"] = pre_bloom is not None
-    return stats
 
 
 def maintain_index_tables(

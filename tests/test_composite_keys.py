@@ -407,23 +407,31 @@ def test_keyed_write_finds_non_numeric_keys_in_their_file(
     assert got == {keys[0]: 0, keys[1]: 10, keys[2]: 20, keys[3]: 3}
 
 
-@pytest.mark.parametrize("writer", ["merge", "merge_into", "apply_scd2"])
+@pytest.mark.parametrize(
+    "writer", ["merge", "merge_into", "apply_scd2", "update_where"]
+)
 def test_keyed_rewrite_keeps_the_table_column_types(
     spark, tmp_path, writer
 ):
     """A batch whose ``v`` (and ``ts``) is bigint, rewriting files of
     an int table, must write int files: a touched file rewritten as
     bigint next to a carried int file makes a plain read fail. A value
-    the table type cannot hold raises and commits nothing."""
+    the table type cannot hold raises and commits nothing. The
+    ``update_where`` leg seeds through ``merge`` and assigns a bigint
+    SET expression to ``v`` instead of writing a bigint batch."""
     import pyarrow.parquet as pq
 
     t = VersionedTable(str(tmp_path / "t"))
     narrow = "k bigint, v int, ts int"
     wide = "k bigint, v bigint, ts bigint"
-    _keyed_write(spark, t, writer, [(1, 1, 1), (2, 2, 1)], narrow)
-    _keyed_write(spark, t, writer, [(10, 10, 1), (11, 11, 1)], narrow)
+    seed = "merge" if writer == "update_where" else writer
+    _keyed_write(spark, t, seed, [(1, 1, 1), (2, 2, 1)], narrow)
+    _keyed_write(spark, t, seed, [(10, 10, 1), (11, 11, 1)], narrow)
     # key 1 touches the first file only; key 5 is a new key
-    _keyed_write(spark, t, writer, [(1, 100, 2), (5, 5, 2)], wide)
+    if writer == "update_where":
+        t.update_where(spark, {"v": "CAST(v AS BIGINT) + 99"}, "k = 1")
+    else:
+        _keyed_write(spark, t, writer, [(1, 100, 2), (5, 5, 2)], wide)
     files = t._manifest(t.latest_version())["files"]
     types = {
         str(pq.read_schema(os.path.join(t.root, f)).field(c).type)
@@ -432,9 +440,16 @@ def test_keyed_rewrite_keeps_the_table_column_types(
     }
     assert types == {"int32"}, types
     got = {r["k"]: r["v"] for r in _live_rows(spark, t, writer)}
-    assert got == {1: 100, 2: 2, 5: 5, 10: 10, 11: 11}
+    assert got == {1: 100, 2: 2, 10: 10, 11: 11} | (
+        {} if writer == "update_where" else {5: 5}
+    )
     before = t.latest_version()
     with pytest.raises(Exception, match="CAST_OVERFLOW|overflow"):
-        _keyed_write(spark, t, writer, [(2, 1 << 40, 3)], wide)
+        if writer == "update_where":
+            t.update_where(
+                spark, {"v": f"CAST(v AS BIGINT) + {1 << 40}"}, "k = 2"
+            )
+        else:
+            _keyed_write(spark, t, writer, [(2, 1 << 40, 3)], wide)
     assert t.latest_version() == before
     assert {r["k"]: r["v"] for r in _live_rows(spark, t, writer)} == got

@@ -28,7 +28,7 @@ class _FakeClientError(Exception):
 
 class FakeS3Client:
     """In-repo stand-in for the boto3 S3 client surface
-    S3ObjectLogStore/S3PayloadStore use, with REAL conditional-write
+    S3ObjectLogStore/S3DataFileStore use, with REAL conditional-write
     semantics: put_object(IfNoneMatch="*") is atomic under the lock
     and answers 412 PreconditionFailed when the key exists — the
     exact behavior of S3 conditional writes (GA Nov 2024). Listing
@@ -790,7 +790,7 @@ def test_pointer_reader_rereads_through_record_trim(store, tmp_path):
     assert racing.current() == second
 
 
-# -- PayloadStore: the payload-plane contract beside the record plane ------
+# -- DataFileStore as the pointer payload plane, beside the record plane --
 
 
 def _write_parquet(path, n_rows):
@@ -808,24 +808,24 @@ def payloads(request, tmp_path):
     writing through uri() with plain file APIs — what Spark's writer
     does — is visible to both."""
     from jde_to_datalake_spark.sources.log_store import (
-        PosixPayloadStore,
-        S3PayloadStore,
+        PosixDataFileStore,
+        S3DataFileStore,
     )
 
     root = str(tmp_path / "ptr")
     os.makedirs(root, exist_ok=True)
     if request.param == "s3":
         client = FakeS3Client(backing="/")
-        s = S3PayloadStore("bkt", root, client, uri_base=root)
+        s = S3DataFileStore("bkt", root, client, uri_base=root)
         s.RETRY_SLEEP = 0
         yield s
     else:
-        yield PosixPayloadStore(root)
+        yield PosixDataFileStore(root)
 
 
 def test_payload_uri_roundtrip_and_dirs(payloads):
     root = payloads.uri()
-    assert payloads.payload_dirs(("data-",)) == {}
+    assert payloads.top_dirs(("data-",)) == {}
     assert payloads.root_files() == []
     _write_parquet(os.path.join(payloads.uri("data-a"), "p0.parquet"), 3)
     _write_parquet(os.path.join(payloads.uri("data-a"), "p1.parquet"), 4)
@@ -833,12 +833,12 @@ def test_payload_uri_roundtrip_and_dirs(payloads):
     with open(os.path.join(root, "loose.parquet"), "w") as fh:
         fh.write("x")
     _write_parquet(os.path.join(payloads.uri("_versioned"), "t0.parquet"), 1)
-    dirs = payloads.payload_dirs(("data-",))
+    dirs = payloads.top_dirs(("data-",))
     assert set(dirs) == {"data-a", "data-b"}
-    assert set(payloads.payload_dirs(("",))) == {  # every dir, no loose file
+    assert set(payloads.top_dirs(("",))) == {  # every dir, no loose file
         "data-a", "data-b", "_versioned"
     }
-    assert set(payloads.payload_dirs(("data-b", "_v"))) == {
+    assert set(payloads.top_dirs(("data-b", "_v"))) == {
         "data-b", "_versioned"
     }
     # mtimes are fresh (just written)
@@ -846,11 +846,11 @@ def test_payload_uri_roundtrip_and_dirs(payloads):
 
     assert all(abs(time.time() - m) < 300 for m in dirs.values())
     assert payloads.root_files() == ["loose.parquet"]
-    payloads.delete_dir("data-a")
-    assert set(payloads.payload_dirs(("data-",))) == {"data-b"}
+    payloads.delete_tree("data-a")
+    assert set(payloads.top_dirs(("data-",))) == {"data-b"}
     assert not os.path.exists(payloads.uri("data-a"))
-    payloads.delete_dir("data-missing")  # reaping an absent dir is a no-op
-    assert set(payloads.payload_dirs(("data-",))) == {"data-b"}
+    payloads.delete_tree("data-missing")  # reaping an absent dir is a no-op
+    assert set(payloads.top_dirs(("data-",))) == {"data-b"}
 
 
 def test_payload_listing_paginates(payloads):
@@ -863,11 +863,11 @@ def test_payload_listing_paginates(payloads):
         _write_parquet(
             os.path.join(payloads.uri(f"data-{i}"), "p0.parquet"), 1
         )
-    assert set(payloads.payload_dirs(("data-",))) == {
+    assert set(payloads.top_dirs(("data-",))) == {
         "data-big", *(f"data-{i}" for i in range(5))
     }
-    payloads.delete_dir("data-big")
-    assert "data-big" not in payloads.payload_dirs(("data-",))
+    payloads.delete_tree("data-big")
+    assert "data-big" not in payloads.top_dirs(("data-",))
     assert not os.path.exists(payloads.uri("data-big"))
 
 
@@ -885,24 +885,24 @@ def test_payload_mtime_missing_is_never_reclaimable():
 
 
 def test_payload_s3_throttle_absorbed(tmp_path):
-    from jde_to_datalake_spark.sources.log_store import S3PayloadStore
+    from jde_to_datalake_spark.sources.log_store import S3DataFileStore
 
     root = str(tmp_path / "ptr")
     client = FakeS3Client(backing="/")
-    s = S3PayloadStore("bkt", root, client, uri_base=root)
+    s = S3DataFileStore("bkt", root, client, uri_base=root)
     s.RETRY_SLEEP = 0
     _write_parquet(os.path.join(root, "data-a", "p0.parquet"), 3)
     for op in ("list_objects_v2", "delete_object"):
         client.inject(op, "SlowDown")
-    assert set(s.payload_dirs(("data-",))) == {"data-a"}
-    s.delete_dir("data-a")
-    assert s.payload_dirs(("data-",)) == {}
+    assert set(s.top_dirs(("data-",))) == {"data-a"}
+    s.delete_tree("data-a")
+    assert s.top_dirs(("data-",)) == {}
     assert not client._faults  # every throttle retried, none escaped
 
 
 def test_payload_s3_default_uri_is_s3a():
-    from jde_to_datalake_spark.sources.log_store import S3PayloadStore
+    from jde_to_datalake_spark.sources.log_store import S3DataFileStore
 
-    s = S3PayloadStore("bkt", "/tables/t1/", FakeS3Client())
+    s = S3DataFileStore("bkt", "/tables/t1/", FakeS3Client())
     assert s.uri() == "s3a://bkt/tables/t1"
     assert s.uri("data-x") == "s3a://bkt/tables/t1/data-x"

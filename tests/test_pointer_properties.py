@@ -79,10 +79,10 @@ def _make_payloads(leg, root):
     as the records — listing/retention/reaping/footers through the
     client API, bytes through the local backing path Spark writes."""
     if leg != "s3-full":
-        return None  # artifact default: PosixPayloadStore
-    from jde_to_datalake_spark.sources.log_store import S3PayloadStore
+        return None  # artifact default: PosixDataFileStore
+    from jde_to_datalake_spark.sources.log_store import S3DataFileStore
 
-    s = S3PayloadStore("bkt", root, _client_for(leg, root), uri_base=root)
+    s = S3DataFileStore("bkt", root, _client_for(leg, root), uri_base=root)
     s.RETRY_SLEEP = 0
     return s
 

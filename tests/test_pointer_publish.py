@@ -24,8 +24,8 @@ from jde_to_datalake_spark.sources.log_store import (
     LogStore,
     LostAckStore,
     PosixLogStore,
+    S3DataFileStore,
     S3ObjectLogStore,
-    S3PayloadStore,
 )
 from tests.test_log_store import FakeS3Client
 
@@ -38,7 +38,7 @@ def make_store(request, tmp_path):
     the SAME underlying log (the separate-writer deployment shape).
     ``make_store.payloads(root)`` is the matching payload-plane
     factory (None = the artifact's default POSIX payload store); on
-    the ``s3-full`` leg it returns an :class:`S3PayloadStore` over
+    the ``s3-full`` leg it returns an :class:`S3DataFileStore` over
     the SAME backing-dir fake client as the record store, with
     ``uri_base`` mapped to the local backing path so Spark's writer
     lands bytes exactly where the client lists them.
@@ -62,12 +62,12 @@ def make_store(request, tmp_path):
 
     def payloads(root: str):
         if request.param == "s3-full":
-            s = S3PayloadStore(
+            s = S3DataFileStore(
                 "bkt", root, client_for(root, "/"), uri_base=root
             )
             s.RETRY_SLEEP = 0
             return s
-        return None  # artifact default: PosixPayloadStore(root)
+        return None  # artifact default: PosixDataFileStore(root)
 
     make.payloads = payloads
     make.leg = request.param
@@ -893,7 +893,7 @@ def _dual_plane(root):
     pay_client = FakeS3Client(backing="/")
     log = S3ObjectLogStore("bkt", root, log_client)
     log.RETRY_SLEEP = 0
-    pay = S3PayloadStore("bkt", root, pay_client, uri_base=root)
+    pay = S3DataFileStore("bkt", root, pay_client, uri_base=root)
     pay.RETRY_SLEEP = 0
     return log, pay, pay_client
 

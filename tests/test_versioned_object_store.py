@@ -203,12 +203,55 @@ def test_crashed_staging_dir_reclaimed(spark, tmp_path, make_table):
     assert "_staging-deadbeef" not in t.vacuum(
         keep_last=1, retention_seconds=3600.0
     )
-    assert data.staging_dirs().get("_staging-deadbeef") is not None
+    assert data.top_dirs(("_staging-",)).get("_staging-deadbeef") is not None
     # past retention: reaped, and reported
     time.sleep(0.05)
     removed = t.vacuum(keep_last=1, retention_seconds=0.01)
     assert "_staging-deadbeef" in removed
-    assert data.staging_dirs() == {}
+    assert data.top_dirs(("_staging-",)) == {}
+
+
+def test_s3_staging_sweep_lists_only_the_staging_prefix(spark, tmp_path):
+    """Vacuum's crashed-writer sweep lists ``<table>/_staging-`` on a
+    bucket, not every object of the table, and still reclaims the
+    stale dir."""
+    root = str(tmp_path / "stgp")
+    os.makedirs(root)
+    log = S3ObjectLogStore("bkt", root, FakeS3Client(backing="/"))
+    log.RETRY_SLEEP = 0
+    client = FakeS3Client(backing="/")
+    data = S3DataFileStore("bkt", root, client, uri_base=root)
+    data.RETRY_SLEEP = 0
+    t = VersionedTable(root, log_store=log, data_store=data)
+    t.commit(_rows(spark, 4), mode="overwrite")
+    t.commit(_rows(spark, 3, start=4), mode="append")
+    _rows(spark, 3).write.parquet(data.uri("_staging-deadbeef"))
+
+    in_sweep: list = []
+    sweep_prefixes: list = []
+    sweep, list_v2 = t._stale_staging_dirs, client.list_objects_v2
+
+    def recording_sweep(cutoff):
+        in_sweep.append(True)
+        try:
+            return sweep(cutoff)
+        finally:
+            in_sweep.pop()
+
+    def recording_list(**kw):
+        if in_sweep:
+            sweep_prefixes.append(kw["Prefix"])
+        return list_v2(**kw)
+
+    t._stale_staging_dirs = recording_sweep
+    client.list_objects_v2 = recording_list
+    time.sleep(0.05)
+    removed = t.vacuum(keep_last=1, retention_seconds=0.01)
+    assert "_staging-deadbeef" in removed
+    assert sweep_prefixes
+    assert set(sweep_prefixes) == {f"{data.prefix}/_staging-"}
+    assert data.top_dirs(("_staging-",)) == {}
+    assert t.read(spark).count() == 7
 
 
 def test_throttle_faults_never_fail_a_publish(spark, tmp_path, make_table):
@@ -359,7 +402,7 @@ def test_datafilestore_contract(dstore):
     assert set(mt) == {"a.parquet", "y=1/b.parquet"}
     assert all(m > 0 for m in mt.values())
     # staging listing with newest-internal-mtime
-    sd = dstore.staging_dirs()
+    sd = dstore.top_dirs(("_staging-",))
     assert set(sd) == {"_staging-x"} and sd["_staging-x"] > 0
 
     assert dstore.exists("a.parquet") and not dstore.exists("zz.parquet")
