@@ -1003,11 +1003,7 @@ class LakeSQL:
             scope = t.files_for_ranges(ranges)
             if len(scope) <= 1:
                 return self._version_df(t.latest_version())
-            import os as _os
-
-            scope_bytes = sum(
-                _os.path.getsize(_os.path.join(t.root, f)) for f in scope
-            )
+            scope_bytes = sum(t.data.file_size(f) for f in scope)
             # explicit TARGET SIZE sizes the scoped output by bytes;
             # otherwise halve the file count (bin-pack the debris)
             scoped_parts = (

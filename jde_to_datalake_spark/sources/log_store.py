@@ -510,15 +510,24 @@ def _s3_retry_call(client, op: str, max_retries: int, sleep: float, **kw):
 
 
 def _s3_list_objects(
-    client, bucket: str, prefix: str, max_retries: int, sleep: float
+    client,
+    bucket: str,
+    prefix: str,
+    max_retries: int,
+    sleep: float,
+    delimiter: "str | None" = None,
 ):
     """Yield every ``ListObjectsV2`` entry under ``prefix``, following
     ``ContinuationToken`` pages; each page request absorbs throttles
     through :func:`_s3_retry_call`. The one listing loop of both S3
-    adapters."""
+    adapters. With a ``delimiter`` only the keys directly under
+    ``prefix`` are yielded: S3 rolls every deeper key up into one
+    ``CommonPrefixes`` entry per subtree, so nothing below is listed."""
     token: "str | None" = None
     while True:
         kw = {"Bucket": bucket, "Prefix": prefix}
+        if delimiter:
+            kw["Delimiter"] = delimiter
         if token:
             kw["ContinuationToken"] = token
         resp = _s3_retry_call(
@@ -835,21 +844,28 @@ class S3DataFileStore(DataFileStore):
             return rel  # absolute cross-table reference
         return self.uri_base if not rel else f"{self.uri_base}/{rel}"
 
-    def _objects(self, prefix: str):
+    def _objects(self, prefix: str, delimiter: "str | None" = None):
         return _s3_list_objects(
             self.client,
             self.bucket,
             prefix,
             self.MAX_RETRIES,
             self.RETRY_SLEEP,
+            delimiter,
         )
 
-    def _list(self, rel: str = "", name_prefix: str = ""):
+    def _list(
+        self,
+        rel: str = "",
+        name_prefix: str = "",
+        delimiter: "str | None" = None,
+    ):
         """Yield ``(relpath, mtime_epoch, size)`` for every object
         under ``rel`` whose relpath starts with ``name_prefix``
-        (relpaths relative to ``rel``)."""
+        (relpaths relative to ``rel``; only the top level with a
+        ``delimiter``)."""
         base = f"{self._key(rel)}/"
-        for obj in self._objects(base + name_prefix):
+        for obj in self._objects(base + name_prefix, delimiter):
             yield (
                 obj["Key"][len(base):],
                 _epoch(obj.get("LastModified")),
@@ -877,7 +893,9 @@ class S3DataFileStore(DataFileStore):
         return out
 
     def root_files(self) -> "list[str]":
-        return [r for r, _m, _s in self._list() if "/" not in r]
+        # Delimiter="/": the ledger's _versioned table and _log
+        # records roll up into CommonPrefixes instead of being listed
+        return [r for r, _m, _s in self._list(delimiter="/")]
 
     def child(self, name: str) -> "S3DataFileStore":
         return S3DataFileStore(

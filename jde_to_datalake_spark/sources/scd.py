@@ -29,7 +29,7 @@ key by ``ts_col``):
   never resurrect a deleted/closed entity with old data.
 
 Scale: SCD2 shares the keyed partial rewrite of ``merge`` and
-``merge_into`` (``VersionedTable._probe_batch``, ``_publish_inserts``,
+``merge_into`` (``VersionedTable._probe_batch`` and
 ``_publish_rewrite``) — the batch's keys are probed against footer
 stats in one job, only files that can hold a batch key are read and
 rewritten, everything else is carried by reference, and a batch no
@@ -194,9 +194,13 @@ def _apply_scd2_once(
     if not touched:
         # no file can hold a batch key: every batch row is a new key
         # (delete events for unknown keys are ignored)
-        return table._publish_inserts(
-            spark, p, _as_dim(latest.filter(_not_deleted(latest))), txn,
-            "SCD2",
+        return table._publish_rewrite(
+            prev,
+            table._physical_batch(
+                _as_dim(latest.filter(_not_deleted(latest))), prev
+            ),
+            None, p.untouched, touched, p.read_ranges, "SCD2", txn,
+            physical=True,
         )
 
     live = table._live_scan(spark, touched, prev)
@@ -271,7 +275,13 @@ def _apply_scd2_once(
         elif c == current_col:
             val = F.when(closes, F.lit(False)).otherwise(val)
         out_cols.append(val.alias(c))
-    kept = j.select(*out_cols)
+    # generated columns recompute over the closed rows; ones declared
+    # after the touched files were written are materialized
+    kept = table._recompute_generated(
+        j.select(*out_cols, closes.alias("__closed")),
+        F.col("__closed"),
+        prev,
+    ).drop("__closed")
 
     # new current rows: changed keys + keys lacking a current row.
     # (A stale batch row never opens a version: the close predicate
@@ -299,14 +309,13 @@ def _apply_scd2_once(
     brand_new = _openable_new(latest)
     opens = _as_dim(matched_new.unionByName(brand_new))
 
-    gen = table.generated_columns(prev)
     opens = table._apply_generated(opens)
-    new_rel = kept.unionByName(opens, allowMissingColumns=True)
-    for name, expr_sql in gen.items():
-        if name not in new_rel.columns:
-            new_rel = new_rel.withColumn(name, F.expr(expr_sql))
     table._enforce_constraints(opens)
-    return table._publish_rewrite(p, new_rel, live, txn, "SCD2")
+    return table._publish_rewrite(
+        prev,
+        kept.unionByName(opens, allowMissingColumns=True),
+        live, p.untouched, touched, p.read_ranges, "SCD2", txn,
+    )
 
 
 def scd2_batch_writer(

@@ -28,6 +28,13 @@ naming immutable parquet data files — with single-table scope:
   footer stats decide which files can hold a batch key; untouched
   files are carried by reference, touched ones are anti-joined and
   rewritten. MERGE semantics with full history retained.
+- Every writer that replaces rows — ``merge``, ``merge_into``, SCD2,
+  ``update_where``, ``compact``, ``compact_files`` — publishes through
+  ONE step, ``_publish_rewrite`` (Delta's commit shape for MERGE,
+  UPDATE and OPTIMIZE): replacement rows cast to the types of the scan
+  they came from, staged, and published over the carried file set
+  with the writer's declared read set; an insert is the case that
+  retires no file.
 - ``history()`` / ``vacuum(keep_last)``  audit log; physical removal
   of files unreferenced by retained versions.
 - ``delete_where(predicate)``  row-level DELETE as a deletion-vector
@@ -1322,6 +1329,36 @@ class VersionedTable:
                 df = df.withColumn(name, F.expr(expr_sql))
         return df
 
+    def _recompute_generated(
+        self, df: DataFrame, changed, version: int
+    ) -> DataFrame:
+        """Recompute the generated columns of a LOGICAL rewrite over
+        the post-write row wherever the ``changed`` Column holds. A
+        column declared after the scanned files were written is absent
+        from the scan: the rewrite materializes it for every row
+        (files written after the declaration always carry it)."""
+        for name, expr_sql in self.generated_columns(version).items():
+            df = df.withColumn(
+                name,
+                F.when(changed, F.expr(expr_sql)).otherwise(F.col(name))
+                if name in df.columns
+                else F.expr(expr_sql),
+            )
+        return df
+
+    def _reject_generated_assignment(self, op: str, columns) -> None:
+        """Delta's GENERATED ALWAYS AS rule for UPDATE and MERGE: a
+        generated column may not be assigned; its expression
+        recomputes it from the assigned source columns."""
+        gen = self.generated_columns()
+        bad = sorted(set(columns) & set(gen))
+        if bad:
+            raise ValueError(
+                f"{op}: column(s) {bad} are GENERATED ALWAYS AS "
+                f"({', '.join(gen[c] for c in bad)}) — assign their "
+                "source columns and the expressions recompute them"
+            )
+
     # -- CHECK constraints (table-level, enforced on write) ----------------
     def constraints(self, version: int | None = None) -> dict:
         """The table's CHECK constraints ({name: sql predicate}, empty
@@ -1414,6 +1451,16 @@ class VersionedTable:
                 f"{self.root}: batch violates table constraint(s) "
                 f"[{names}]; first offending row: {bad[0].asDict()}"
             )
+
+    def _physical_batch(
+        self, df: DataFrame, version: int | None = None
+    ) -> DataFrame:
+        """The logical staging step of every write that adds a batch:
+        generated columns filled and validated, CHECK constraints
+        enforced, names mapped to physical — the frame to stage."""
+        df = self._apply_generated(df)
+        self._enforce_constraints(df)
+        return self._to_physical_df(df, version)
 
     def _reject_dependent_column(self, version, name: str, op: str):
         """Delta's dependent-column rule: a column referenced by a
@@ -1674,7 +1721,6 @@ class VersionedTable:
         mode: str = "append",
         expected_base=_UNSET,
         txn: "tuple[str, int] | list[tuple[str, int]] | None" = None,
-        _physical: bool = False,
         annotations: dict | None = None,
         partitioned_by: "list[str] | None" = None,
     ) -> int:
@@ -1686,8 +1732,7 @@ class VersionedTable:
 
         ``df`` speaks LOGICAL column names; under an active column
         mapping it is translated to physical storage names before the
-        write (``_physical=True`` skips that — internal callers whose
-        frames are already physical, e.g. ``merge``).
+        write.
 
         ``partitioned_by`` on the FIRST commit creates the table as a
         hive-partitioned one (Delta's CREATE TABLE ... PARTITIONED
@@ -1706,10 +1751,7 @@ class VersionedTable:
                     f"not match the table's layout {existing} — the "
                     "partition layout is immutable once created"
                 )
-        if not _physical:
-            df = self._apply_generated(df)
-            self._enforce_constraints(df)
-            df = self._to_physical_df(df)
+        df = self._physical_batch(df)
         # the written frame's own schema is the EXACT partition-type
         # declaration (int stays int, date stays date) — publish pins
         # it at layout establishment; inherited afterwards
@@ -2353,9 +2395,7 @@ class VersionedTable:
             expectations_report,
         )
 
-        df = self._apply_generated(df)
-        self._enforce_constraints(df)
-        staged = self.stage(self._to_physical_df(df))
+        staged = self.stage(self._physical_batch(df))
         # the audit surface speaks LOGICAL names like every reader
         report = expectations_report(
             self._to_logical_df(
@@ -2529,12 +2569,7 @@ class VersionedTable:
             raise FileNotFoundError(f"{self.root}: no commits yet")
         if isinstance(predicate, str):
             predicate = F.expr(predicate)
-        manifest = self._manifest(prev)
-        files = (
-            self.files_for_ranges(prune_ranges, prev)
-            if prune_ranges
-            else manifest["files"]
-        )
+        files, read_ranges = self._prune_scope(prune_ranges, prev)
         if not files:
             return prev
         scan = self._scan_files(spark, files, True, prev)
@@ -2576,23 +2611,29 @@ class VersionedTable:
             [],
             mode="overwrite",
             expected_base=prev,
-            carry=manifest["files"],
+            carry=self._manifest(prev)["files"],
             dv_files_add=live,
             annotations={"operation": "DELETE"},
-            # reconciliation read declaration: the matching scan read
-            # every candidate file; with prune_ranges the predicate is
-            # bounded (physical names — the stats key space), so a
-            # key-disjoint concurrent writer commutes with this delete
             read_files=files,
-            read_ranges=(
-                {
-                    self._to_physical_name(c, prev): b
-                    for c, b in prune_ranges.items()
-                }
-                if prune_ranges
-                else None
-            ),
+            read_ranges=read_ranges,
         )
+
+    def _prune_scope(
+        self, prune_ranges: "dict | None", prev: int
+    ) -> "tuple[list[str], dict | None]":
+        """The reconciliation read declaration of ``delete_where`` and
+        ``update_where``: the candidate files their matching scan reads
+        (every file, or the files whose footer stats overlap
+        ``prune_ranges``), and the ``read_ranges`` bounding their
+        predicate — ``prune_ranges`` under PHYSICAL names (the stats
+        key space), so a key-disjoint concurrent writer commutes; None
+        without ranges (any concurrent add may match)."""
+        if not prune_ranges:
+            return self._manifest(prev)["files"], None
+        return self.files_for_ranges(prune_ranges, prev), {
+            self._to_physical_name(c, prev): b
+            for c, b in prune_ranges.items()
+        }
 
     # -- row-level UPDATE ---------------------------------------------------
     def update_where(
@@ -2652,20 +2693,8 @@ class VersionedTable:
             raise ValueError("update_where: assignments must be non-empty")
         if isinstance(predicate, str):
             predicate = F.expr(predicate)
-        gen = self.generated_columns(prev)
-        for c in assignments:
-            if c in gen:
-                raise ValueError(
-                    f"update_where: column {c!r} is GENERATED ALWAYS AS "
-                    f"({gen[c]}) — assign its source columns and the "
-                    "expression recomputes it"
-                )
-        manifest = self._manifest(prev)
-        candidates = (
-            self.files_for_ranges(prune_ranges, prev)
-            if prune_ranges
-            else manifest["files"]
-        )
+        self._reject_generated_assignment("update_where", assignments)
+        candidates, read_ranges = self._prune_scope(prune_ranges, prev)
         if not candidates:
             return prev
 
@@ -2680,10 +2709,10 @@ class VersionedTable:
         }
         if not touched_set:
             return prev
-        by_base = {os.path.basename(f): f for f in manifest["files"]}
-        touched = [by_base[b] for b in by_base if b in touched_set]
+        files = self._manifest(prev)["files"]
+        touched = [f for f in files if os.path.basename(f) in touched_set]
         untouched = [
-            f for f in manifest["files"] if os.path.basename(f) not in touched_set
+            f for f in files if os.path.basename(f) not in touched_set
         ]
         scan = self._live_scan(spark, touched, prev)
         rows = scan
@@ -2709,50 +2738,17 @@ class VersionedTable:
             ).otherwise(F.col(c))
             for c, e in assignments.items()
         }
-        updated = flagged.withColumns(new_vals)
-        # generated columns recompute over the POST-update row; a
-        # column declared after these files were written is absent
-        # from the scan — the rewrite materializes it (files written
-        # after the declaration always carry generated values)
-        for name, expr_sql in gen.items():
-            if name in updated.columns:
-                updated = updated.withColumn(
-                    name,
-                    F.when(F.col("__upd"), F.expr(expr_sql)).otherwise(
-                        F.col(name)
-                    ),
-                )
-            else:
-                updated = updated.withColumn(name, F.expr(expr_sql))
-        # a SET expression wider than its column (bigint into int)
-        # must not rewrite the touched files in the wider type while
-        # carried files keep theirs — the same alignment as
-        # _publish_rewrite; a value the column cannot hold raises
-        updated = self._cast_like(updated, scan)
+        updated = self._recompute_generated(
+            flagged.withColumns(new_vals), F.col("__upd"), prev
+        )
         self._enforce_constraints(
             updated.filter(F.col("__upd")).drop("__upd")
         )
-        out = self._to_physical_df(updated.drop("__upd"), prev)
-        return self.publish(
-            self.stage(out),
-            mode="overwrite",
-            expected_base=prev,
-            carry=untouched,
-            txn=txn,
-            annotations={"operation": "UPDATE"},
-            # reconciliation read declaration: the probe scanned every
-            # candidate file; with prune_ranges the predicate is
-            # bounded by those footer ranges (physical names — the
-            # stats key space), otherwise any concurrent add may match
-            read_files=candidates,
-            read_ranges=(
-                {
-                    self._to_physical_name(c, prev): b
-                    for c, b in prune_ranges.items()
-                }
-                if prune_ranges
-                else None
-            ),
+        # the read declaration is every CANDIDATE file: the probe
+        # scanned them all, not only the touched ones
+        return self._publish_rewrite(
+            prev, updated.drop("__upd"), scan, untouched, candidates,
+            read_ranges, "UPDATE", txn,
         )
 
     # -- change data feed -------------------------------------------------
@@ -3187,39 +3183,6 @@ class VersionedTable:
         )
 
     # -- upsert ---------------------------------------------------------
-    @staticmethod
-    def _cast_like(df: DataFrame, like: DataFrame) -> DataFrame:
-        """Cast ``df``'s columns that ``like`` also has to ``like``'s
-        types; other columns (evolved ones) pass through. The cast is
-        Spark's ANSI cast, so a value the narrower type cannot hold
-        raises instead of wrapping."""
-        target = {f.name: f.dataType for f in like.schema.fields}
-        casts = {
-            f.name: F.col(f.name).cast(target[f.name])
-            for f in df.schema.fields
-            if f.name in target and f.dataType != target[f.name]
-        }
-        return df.withColumns(casts) if casts else df
-
-    def _align_types(
-        self, spark: SparkSession, df: DataFrame, version: int
-    ) -> DataFrame:
-        """Cast ``df``'s columns that already exist in the table to
-        the table's merged column types (PHYSICAL names on both
-        sides) — the insert-only path's alignment: ``_publish_inserts``
-        stages the source frame directly, and WITHOUT alignment a
-        source type that differs from the table's (an int batch into
-        a bigint table, or the reverse) writes mixed-type files whose
-        plain-read success depends on which footer Spark samples for
-        the schema. The merged schema comes from a mergeSchema scan of
-        every file (one Spark job). ``_publish_rewrite`` aligns to its
-        touched-file scan instead, which it has already resolved."""
-        files = self._manifest(version)["files"]
-        if not files:
-            return df
-        scan = self._scan_files(spark, files, True, version)
-        return self._cast_like(df, scan)
-
     def _probe_batch(
         self,
         spark: SparkSession,
@@ -3366,78 +3329,70 @@ class VersionedTable:
             prev, manifest, guard, keys_phys, touched, untouched, read_ranges
         )
 
-    def _publish_inserts(
-        self,
-        spark: SparkSession,
-        p: _KeyedBatch,
-        rows: DataFrame,
-        txn,
-        op: str,
-        read_files: "list[str] | None" = None,
-        physical: bool = False,
-    ) -> int:
-        """The insert-only keyed write: nothing existing changes, so
-        ``rows`` are staged as new files and EVERY file of ``p.prev``
-        is carried by reference. Logical ``rows`` get their generated
-        columns filled, CHECK constraints enforced and names mapped
-        to physical first (``physical``: the caller already did all
-        three). ``read_files`` are the files scanned to find the
-        inserts (none when no file can hold a batch key). Zero staged
-        rows publish nothing and return ``p.prev``."""
-        if not physical:
-            rows = self._apply_generated(rows)
-            self._enforce_constraints(rows)
-            rows = self._to_physical_df(rows, p.prev)
-        staged = self.stage(self._align_types(spark, rows, p.prev))
-        if not staged or self.data.parquet_row_count(staged[0]) == 0:
-            self.discard(staged)
-            return p.prev
-        return self.publish(
-            staged,
-            mode="overwrite",
-            expected_base=p.prev,
-            carry=p.manifest["files"],
-            txn=txn,
-            annotations={"operation": op},
-            read_files=read_files or [],
-            read_ranges=p.read_ranges,
-        )
-
     def _publish_rewrite(
         self,
-        p: _KeyedBatch,
+        prev: int,
         rows: DataFrame,
-        scan: DataFrame,
-        txn,
+        like: "DataFrame | None",
+        carry: "list[str]",
+        read_files: "list[str]",
+        read_ranges: "dict | None",
         op: str,
+        txn=None,
         physical: bool = False,
     ) -> int:
-        """The partial-rewrite keyed write: ``rows`` (logical unless
-        ``physical``) replace the live rows of ``p.touched``, every
-        untouched file is carried by reference, and the publish
-        declares the probe's read set (the touched files and the key
-        envelope) for commit reconciliation. ``rows`` are cast to the
-        types of ``scan``, the touched-file scan they were built from
-        (same naming): a union with a wider batch type would otherwise
-        rewrite the touched files in that type while carried files
-        keep theirs. A rewrite that deletes every touched row
-        publishes the carried files alone, not an empty part."""
-        rows = self._cast_like(rows, scan)
+        """The one publish of every writer that replaces rows
+        (``merge``, ``merge_into``, SCD2, ``update_where``, ``compact``,
+        ``compact_files``) — Delta's commit shape: ``rows`` (logical
+        unless ``physical``) are staged as new files that replace every
+        file of ``prev`` not in ``carry``; carried files ride by
+        reference, and the publish declares the writer's read set
+        (``read_files``, ``read_ranges``) for commit reconciliation.
+
+        ``rows`` are cast to the types of ``like``, the scan they were
+        built from (same naming): a wider batch or SET type would
+        otherwise rewrite files in that type while carried files keep
+        theirs, and a plain read's success would depend on which
+        footer Spark samples. ``like`` None is the insert case (no file
+        retired; its rows arrive physical, from ``_physical_batch``): a
+        merge-schema scan of the carried files (one Spark job) supplies
+        the types.
+
+        Zero staged rows: nothing retired publishes nothing and returns
+        ``prev``; a rewrite that keeps no row publishes the carried
+        files alone, and when none is carried either, the one empty
+        part ``stage`` keeps, so the table stays readable with its
+        columns (the overwrite-to-empty contract)."""
+        if like is None and carry:
+            like = self._scan_files(rows.sparkSession, carry, True, prev)
+        if like is not None:
+            target = {f.name: f.dataType for f in like.schema.fields}
+            casts = {
+                f.name: F.col(f.name).cast(target[f.name])
+                for f in rows.schema.fields
+                if f.name in target and f.dataType != target[f.name]
+            }
+            if casts:
+                rows = rows.withColumns(casts)
         staged = self.stage(
-            rows if physical else self._to_physical_df(rows, p.prev)
+            rows if physical else self._to_physical_df(rows, prev)
         )
         if not staged or self.data.parquet_row_count(staged[0]) == 0:
-            self.discard(staged)
-            staged = []
+            if len(carry) == len(self._manifest(prev)["files"]):
+                self.discard(staged)
+                return prev
+            if carry:
+                self.discard(staged)
+                staged = []
         return self.publish(
             staged,
             mode="overwrite",
-            expected_base=p.prev,
-            carry=p.untouched,
+            expected_base=prev,
+            carry=carry,
             txn=txn,
             annotations={"operation": op},
-            read_files=p.touched,
-            read_ranges=p.read_ranges,
+            read_files=read_files,
+            read_ranges=read_ranges,
         )
 
     def merge(
@@ -3525,9 +3480,7 @@ class VersionedTable:
         # validated at their own writes (or by add_constraint's scan);
         # generated columns fill/validate first (constraints may
         # reference them).
-        updates = self._apply_generated(updates)
-        self._enforce_constraints(updates)
-        updates = self._to_physical_df(updates, prev)
+        updates = self._physical_batch(updates, prev)
         # three consumers read the batch (dup-guard/envelope agg, the
         # key probe, the final anti-join + stage): a lazy local
         # checkpoint computes it once and shares blocks instead of
@@ -3541,33 +3494,24 @@ class VersionedTable:
         if p.guard["n_groups"] == 0:
             return prev  # empty batch: nothing to merge (None if no table yet)
         if prev is None:
-            return self.commit(
-                updates,
+            return self.publish(
+                self.stage(updates),
                 mode="overwrite",
                 expected_base=None,
                 txn=txn,
-                _physical=True,
                 annotations={"operation": "MERGE"},
             )
-        if not p.touched:
-            return self._publish_inserts(
-                spark, p, updates, txn, "MERGE", physical=True
+        current, rows = None, updates  # no touched file: insert only
+        if p.touched:
+            current = self._apply_dvs(
+                self._scan_files(spark, p.touched, True, prev), spark, prev
             )
-        current = self._apply_dvs(
-            self._scan_files(spark, p.touched, True, prev),
-            spark,
-            prev,
-        )
-        kept = current.join(
-            updates.select(*p.keys).distinct(), p.keys, "left_anti"
-        )
+            rows = current.join(
+                updates.select(*p.keys).distinct(), p.keys, "left_anti"
+            ).unionByName(updates, allowMissingColumns=True)
         return self._publish_rewrite(
-            p,
-            kept.unionByName(updates, allowMissingColumns=True),
-            current,
-            txn,
-            "MERGE",
-            physical=True,
+            prev, rows, current, p.untouched, p.touched, p.read_ranges,
+            "MERGE", txn, physical=True,
         )
 
     # -- full-clause MERGE --------------------------------------------------
@@ -3649,16 +3593,10 @@ class VersionedTable:
                     "merge_into: a not_matched_by_source update needs an "
                     "explicit set dict (there is no source row to copy *)"
                 )
-        gen = self.generated_columns()
-        for verb, _cond, aset in matched + nbs:
-            if isinstance(aset, dict):
-                bad = sorted(set(aset) & set(gen))
-                if bad:
-                    raise ValueError(
-                        f"merge_into: column(s) {bad} are GENERATED ALWAYS "
-                        "AS (...) — assign their source columns and the "
-                        "expressions recompute them"
-                    )
+        self._reject_generated_assignment(
+            "merge_into",
+            [c for _v, _c, a in matched + nbs if isinstance(a, dict) for c in a],
+        )
         return _retry_on_conflict(
             retries,
             self._merge_into_once,
@@ -3769,8 +3707,10 @@ class VersionedTable:
             ins = _inserts_of(src, bare=True)
             if ins is None:
                 return prev
-            return self._publish_inserts(
-                spark, p, ins, txn, "MERGE", read_files=touched
+            return self._publish_rewrite(
+                prev, self._physical_batch(ins, prev), None,
+                p.manifest["files"], touched, p.read_ranges, "MERGE", txn,
+                physical=True,
             )
 
         live = self._live_scan(spark, touched, prev)
@@ -3875,20 +3815,11 @@ class VersionedTable:
                 if c in sd:
                     val = F.when(F.col("__act") == label, sd[c]).otherwise(val)
             out_cols.append(val.alias(c))
-        rewritten = tgt.select(*out_cols, F.col("__act"))
-        # generated columns recompute over the post-update row; ones
-        # declared after the touched files were written are absent
-        # from the scan — the rewrite materializes them
-        for name, expr_sql in gen.items():
-            if name in rewritten.columns:
-                rewritten = rewritten.withColumn(
-                    name,
-                    F.when(
-                        F.col("__act").isNotNull(), F.expr(expr_sql)
-                    ).otherwise(F.col(name)),
-                )
-            else:
-                rewritten = rewritten.withColumn(name, F.expr(expr_sql))
+        rewritten = self._recompute_generated(
+            tgt.select(*out_cols, F.col("__act")),
+            F.col("__act").isNotNull(),
+            prev,
+        )
         ins = _inserts_of(j.filter(F.col("__tgt").isNull()), bare=False)
         changed = rewritten.filter(F.col("__act").isNotNull()).drop("__act")
         final = rewritten.drop("__act")
@@ -3900,7 +3831,10 @@ class VersionedTable:
         # a clause CAN delete every touched row: the rewrite then
         # publishes the shrunken file set (the probe above already
         # ruled out the no-op case)
-        return self._publish_rewrite(p, final, live, txn, "MERGE")
+        return self._publish_rewrite(
+            prev, final, live, p.untouched, touched, p.read_ranges,
+            "MERGE", txn,
+        )
 
     # -- streaming sink ---------------------------------------------------
     def foreach_batch_writer(self, mode: str = "append", key: str | None = None):
@@ -4056,15 +3990,12 @@ class VersionedTable:
         cluster_by: "str | list[str] | None" = None,
         zorder_bits: int = 4,
     ) -> int:
-        """Rewrite the latest version's files into ``target_partitions``
-        parquet files (small-file compaction as a normal overwrite
-        commit — old versions stay readable until vacuumed). Pinned to
-        the snapshot it read; commit reconciliation lets a concurrent
-        blind append or key-disjoint merge land mid-compaction and
-        both commit (the appended/merged files re-base into the new
-        version by reference), while an overlapping rewrite still
-        fails the compaction (re-run it) rather than being thrown
-        away.
+        """Rewrite EVERY file of the latest version into
+        ``target_partitions`` parquet files — ``compact_files``' body
+        over the whole table (``_optimize``: tombstones, dropped and
+        generated columns materialized; a concurrent blind append or
+        key-disjoint merge re-bases in). Old versions stay readable
+        until vacuumed.
 
         ``cluster_by`` as ONE column range-partitions and sorts the
         rewrite on it — the OPTIMIZE-with-clustering move: each
@@ -4089,36 +4020,11 @@ class VersionedTable:
         is plenty for FILE-level pruning at realistic file counts.
         """
         base = self.latest_version()
-        latest = self.read(spark, base, merge_schema=True)
-        # materialize generated columns table-wide: rows written before
-        # the declaration lack the column; recomputing the whole column
-        # is safe because write-time validation pins supplied values to
-        # the expression anyway
-        for gname, gexpr in self.generated_columns(base).items():
-            latest = latest.withColumn(gname, F.expr(gexpr))
-        rewritten = self._clustered_rewrite(
-            latest, target_partitions, cluster_by, zorder_bits
-        )
-        # publish as a carry-[] partial rewrite (retiring every base
-        # file) rather than a bare overwrite: the read declaration —
-        # content of all base files, no dependence on absent rows —
-        # lets reconciliation re-base the compaction over a concurrent
-        # blind append instead of failing it. DV semantics are
-        # unchanged: the rewrite materialized the tombstones, and the
-        # publish prunes sidecars whose referenced files all retired.
-        rewritten = self._apply_generated(rewritten)
-        self._enforce_constraints(rewritten)
-        base_files = (
-            self._manifest(base)["files"] if base is not None else []
-        )
-        return self.publish(
-            self.stage(self._to_physical_df(rewritten, base)),
-            mode="overwrite",
-            expected_base=base,
-            carry=[],
-            annotations={"operation": "OPTIMIZE"},
-            read_files=base_files,
-            read_ranges={},
+        if base is None:
+            raise FileNotFoundError(f"{self.root}: no commits yet")
+        return self._optimize(
+            spark, base, self._manifest(base)["files"], target_partitions,
+            cluster_by, zorder_bits,
         )
 
     def _clustered_rewrite(
@@ -4166,20 +4072,18 @@ class VersionedTable:
         O(small files) while the settled bulk is untouched — exactly
         how Delta's OPTIMIZE [WHERE] amortizes small-file buildup.
 
-        Semantics match ``compact`` restricted to the selection:
-        tombstones of rewritten files are materialized (the rewrite
-        reads live rows only) and their now-dead sidecars are pruned
-        by the publish; tombstones of carried files survive untouched.
-        ``cluster_by`` lays the rewritten slice out with narrow footer
-        ranges — new files may overlap carried files' ranges (as in
-        Delta), which skipping handles per file. Selecting zero or one
-        file is a no-op returning the current version. Snapshot-
-        pinned like ``compact``: an intervening commit fails it."""
+        Semantics match ``compact`` restricted to the selection (one
+        body, ``_optimize``): tombstones of rewritten files are
+        materialized and their now-dead sidecars pruned; tombstones of
+        carried files survive untouched. ``cluster_by`` lays the
+        rewritten slice out with narrow footer ranges — new files may
+        overlap carried files' ranges (as in Delta), which skipping
+        handles per file. Selecting zero or one file is a no-op
+        returning the current version."""
         base = self.latest_version()
         if base is None:
             raise FileNotFoundError(f"{self.root}: no commits yet")
-        manifest = self._manifest(base)
-        all_files = manifest["files"]
+        all_files = self._manifest(base)["files"]
         if files is None:
             if max_file_bytes is None:
                 raise ValueError(
@@ -4198,41 +4102,46 @@ class VersionedTable:
             )
         if len(sel) <= 1:
             return base  # nothing to pack
-        carry = [f for f in all_files if f not in sel]
-        scan = self._scan_files(
-            spark, [f for f in all_files if f in sel], True, base
+        return self._optimize(
+            spark, base, [f for f in all_files if f in sel],
+            target_partitions, cluster_by, zorder_bits,
         )
-        live = self._apply_dvs(scan, spark, base)
-        # physical frame: translate cluster columns through the column
-        # mapping, and materialize drops out of the rewritten slice
-        # (same as compact — the new files shed the dead bytes)
-        dropped = set(self.dropped_columns(base)) & set(live.columns)
-        if dropped:
-            live = live.drop(*dropped)
-        if isinstance(cluster_by, str):
-            cluster_by = self._to_physical_name(cluster_by, base)
-        elif isinstance(cluster_by, (list, tuple)):
-            cluster_by = [
-                self._to_physical_name(c, base) for c in cluster_by
-            ]
-        rewritten = self._clustered_rewrite(
-            live, target_partitions, cluster_by, zorder_bits
+
+    def _optimize(
+        self, spark, base, files, target_partitions, cluster_by, zorder_bits
+    ) -> int:
+        """The OPTIMIZE body of ``compact`` (every file) and
+        ``compact_files`` (a selection): the live rows of ``files`` at
+        ``base`` are rewritten into ``target_partitions`` files laid
+        out by ``cluster_by``, and every other file is carried by
+        reference. The rewrite materializes what the files defer:
+        their tombstones (the publish prunes the dead sidecars),
+        dropped columns, and generated columns declared after the
+        files were written (the write-time check already pins every
+        supplied value to its expression, so recomputing is safe).
+        Rows are not re-checked against CHECK constraints: each was
+        checked at its write or by ``add_constraint``'s scan.
+
+        Reconciliation declaration: the result depends only on the
+        rewritten files' content (``read_files``) and on NO absent row
+        (``read_ranges={}``), so a concurrent blind append or
+        key-disjoint merge re-bases into the new version by reference
+        — maintenance never blocks ingest — while an overlapping
+        rewrite still fails the compaction (re-run it)."""
+        live = self._recompute_generated(
+            self._live_scan(spark, files, base), F.lit(True), base
         )
-        # frames here are PHYSICAL (straight from the files): stage
-        # directly, bypassing the logical->physical translation.
-        # Reconciliation declaration: the result depends only on the
-        # rewritten slice's content (read_files) and on NO absent row
-        # (read_ranges={}), so the sweep commutes with concurrent
-        # appends and key-disjoint merges — maintenance never blocks
-        # ingest.
-        return self.publish(
-            self.stage(rewritten),
-            mode="overwrite",
-            expected_base=base,
-            carry=carry,
-            annotations={"operation": "OPTIMIZE"},
-            read_files=sorted(sel),
-            read_ranges={},
+        sel = set(files)
+        return self._publish_rewrite(
+            base,
+            self._clustered_rewrite(
+                live, target_partitions, cluster_by, zorder_bits
+            ),
+            live,
+            [f for f in self._manifest(base)["files"] if f not in sel],
+            files,
+            {},
+            "OPTIMIZE",
         )
 
     def vacuum(
@@ -4361,9 +4270,7 @@ def commit_drift_checked(
 
     spark = df.sparkSession
     base_version = table.latest_version()
-    df = table._apply_generated(df)
-    table._enforce_constraints(df)
-    staged = table.stage(table._to_physical_df(df))
+    staged = table.stage(table._physical_batch(df))
     if base_version is None:
         return table.publish(staged, mode=mode, expected_base=None)
     report = histogram_drift(

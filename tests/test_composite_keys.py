@@ -338,6 +338,59 @@ def test_merge_guard_and_probe_share_one_job(spark, tmp_path):
     assert len(cur) == 101
 
 
+def test_folded_writers_keep_their_job_budgets(spark, tmp_path):
+    """update_where, compact and compact_files publish through the
+    keyed writers' one rewrite step (_publish_rewrite); folding them in
+    must not add Spark jobs. Bounds are the counts measured before the
+    fold on this suite's pinned session, identical in each of several
+    runs: update_where touching one file 5, compact_files of two files
+    2, compact() 2, compact(cluster_by=k) 4."""
+    sc = spark.sparkContext
+    t = VersionedTable(str(tmp_path / "t"))
+    t.commit(
+        spark.range(0, 100)
+        .select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+        .repartitionByRange(4, "k")
+        .sortWithinPartitions("k"),
+        mode="overwrite",
+    )
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, "")
+        try:
+            fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    n_files = len(t._manifest(0)["files"])
+    n_update = jobs(
+        "folded-update-where",
+        lambda: t.update_where(spark, {"v": "v + 1"}, "k = 10"),
+    )
+    assert len(set(t._manifest(0)["files"]) & set(t._manifest(1)["files"])) == (
+        n_files - 1
+    )
+    n_pack = jobs(
+        "folded-compact-files",
+        lambda: t.compact_files(spark, files=t._manifest(1)["files"][:2]),
+    )
+    assert len(t._manifest(2)["files"]) == n_files - 1
+    n_compact = jobs("folded-compact", lambda: t.compact(spark))
+    assert len(t._manifest(3)["files"]) == 1
+    n_cluster = jobs(
+        "folded-compact-cluster",
+        lambda: t.compact(spark, target_partitions=2, cluster_by="k"),
+    )
+    assert len(t._manifest(4)["files"]) == 2
+    assert n_update <= 5, n_update
+    assert n_pack <= 2, n_pack
+    assert n_compact <= 2, n_compact
+    assert n_cluster <= 4, n_cluster
+    got = {r["k"]: r["v"] for r in t.read(spark).collect()}
+    assert len(got) == 100 and got[10] == 21 and got[11] == 22
+
+
 # -- keyed writes on non-numeric keys and wider batch types ----------------
 
 _KEYS = {

@@ -210,11 +210,28 @@ class FakeS3Client:
             if b == Bucket and k.startswith(Prefix)
         )
 
-    def list_objects_v2(self, Bucket, Prefix, ContinuationToken=None):
+    def list_objects_v2(
+        self, Bucket, Prefix, ContinuationToken=None, Delimiter=None
+    ):
         with self._lock:
             entries = self._enter(
                 "list_objects_v2", lambda: self._listing(Bucket, Prefix)
             )
+        rolled: set = set()
+        if Delimiter:
+            # like S3: every key with a Delimiter past the prefix rolls
+            # up into one CommonPrefixes entry per subtree, and those
+            # entries count toward a page like keys do
+            keep: dict = {}
+            for k, m, s in entries:
+                cut = k.find(Delimiter, len(Prefix))
+                if cut < 0:
+                    keep[k] = (k, m, s)
+                else:
+                    p = k[: cut + len(Delimiter)]
+                    rolled.add(p)
+                    keep[p] = (p, None, None)
+            entries = [keep[k] for k in sorted(keep)]
         start = int(ContinuationToken) if ContinuationToken else 0
         page = entries[start : start + self.PAGE]
         truncated = start + self.PAGE < len(entries)
@@ -222,9 +239,14 @@ class FakeS3Client:
             "Contents": [
                 {"Key": k, "LastModified": m, "Size": s}
                 for k, m, s in page
+                if k not in rolled
             ],
             "IsTruncated": truncated,
         }
+        if rolled:
+            resp["CommonPrefixes"] = [
+                {"Prefix": k} for k, _m, _s in page if k in rolled
+            ]
         if truncated:
             resp["NextContinuationToken"] = str(start + self.PAGE)
         return resp
@@ -851,6 +873,30 @@ def test_payload_uri_roundtrip_and_dirs(payloads):
     assert not os.path.exists(payloads.uri("data-a"))
     payloads.delete_tree("data-missing")  # reaping an absent dir is a no-op
     assert set(payloads.top_dirs(("data-",))) == {"data-b"}
+
+
+def test_s3_root_files_lists_only_the_root_level():
+    """The legacy-layout check runs once per ledger instance: it must
+    not list the ledger's whole ``_versioned`` table and ``_log``
+    records to find loose root files (one delimited request, not 101
+    two-key pages)."""
+    from jde_to_datalake_spark.sources.log_store import S3DataFileStore
+
+    client = FakeS3Client()
+    for i in range(200):
+        client.put_object(
+            Bucket="bkt", Key=f"ledgers/l1/_versioned/part-{i:03d}.parquet",
+            Body=b"x",
+        )
+    client.put_object(
+        Bucket="bkt", Key="ledgers/l1/_log/00000000000.json", Body=b"{}"
+    )
+    s = S3DataFileStore("bkt", "ledgers/l1", client)
+    client.calls.clear()
+    assert s.root_files() == []
+    assert client.calls == {"list_objects_v2": 1}
+    client.put_object(Bucket="bkt", Key="ledgers/l1/loose.parquet", Body=b"x")
+    assert s.root_files() == ["loose.parquet"]
 
 
 def test_payload_listing_paginates(payloads):

@@ -313,7 +313,12 @@ def test_merge_into_empty_table_without_insert_clause_is_noop(spark, table):
     )
 
 
-def test_merge_into_delete_all_rows(spark, table):
+def test_merge_into_delete_all_rows(spark, table, tmp_path):
+    """A merge_into that deletes every row publishes the one empty
+    part stage keeps for a schema, so the table still reads (0 rows,
+    same columns) — both through a matched delete and through an
+    empty source under a by-source delete. An empty file list made
+    ``read`` raise 'empty commit'."""
     table.commit(spark.createDataFrame([(1, 1), (2, 2)], ["k", "n"]), mode="overwrite")
     v = table.merge_into(
         spark,
@@ -322,7 +327,22 @@ def test_merge_into_delete_all_rows(spark, table):
         matched=[("delete", None)],
         not_matched=[],
     )
-    assert table._manifest(v)["files"] == []
+    assert v == 1 and len(table._manifest(v)["files"]) == 1
+    out = table.read(spark)
+    assert out.count() == 0 and out.columns == ["k", "n"]
+    other = VersionedTable(str(tmp_path / "by_source"))
+    other.commit(
+        spark.createDataFrame([(1, 1), (2, 2)], ["k", "n"]), mode="overwrite"
+    )
+    v = other.merge_into(
+        spark,
+        spark.createDataFrame([], "k bigint, n bigint"),
+        "k",
+        not_matched_by_source=[("delete",)],
+    )
+    assert v == 1
+    out = other.read(spark)
+    assert out.count() == 0 and out.columns == ["k", "n"]
 
 
 def test_merge_into_partial_rewrite_carries_untouched(spark, table):

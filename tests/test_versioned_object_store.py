@@ -349,6 +349,39 @@ def test_lake_sql_statements_on_object_store(spark, tmp_path, make_table):
     assert data_client.calls.get("list_objects_v2", 0) >= 1
 
 
+def test_lake_sql_optimize_where_sizes_scope_through_the_data_store(
+    spark, tmp_path
+):
+    """``OPTIMIZE t WHERE ...`` sizes its scope with
+    ``DataFileStore.file_size``, so it works on a table whose root is
+    not a local path (the data plane is the only way to its bytes),
+    just like plain ``OPTIMIZE t``."""
+    from jde_to_datalake_spark.plans.lake_sql import LakeSQL
+
+    backing = str(tmp_path / "bucket")
+    prefix = "tables/opt"
+    os.makedirs(os.path.join(backing, prefix), exist_ok=True)
+    log = S3ObjectLogStore("bkt", prefix, FakeS3Client(backing=backing))
+    data = S3DataFileStore(
+        "bkt",
+        prefix,
+        FakeS3Client(backing=backing),
+        uri_base=os.path.join(backing, prefix),
+    )
+    log.RETRY_SLEEP = data.RETRY_SLEEP = 0
+    t = VersionedTable(f"s3a://bkt/{prefix}", log_store=log, data_store=data)
+    for i in range(4):
+        t.commit(_rows(spark, 3, start=10 * i), mode="append")
+    n_files = len(t._manifest(3)["files"])
+    lake = LakeSQL(spark)
+    lake.register("t", t)
+    v = lake.sql("OPTIMIZE t WHERE k >= 0").collect()[0]["version"]
+    assert v == 4 and len(t._manifest(v)["files"]) == max(1, n_files // 2)
+    assert sorted(r["k"] for r in t.read(spark).collect()) == sorted(
+        10 * i + j for i in range(4) for j in range(3)
+    )
+
+
 # -- DataFileStore contract ---------------------------------------------
 
 
